@@ -291,6 +291,9 @@ class ZeekScan(bind: ZeekBind, required: StructType, pushed: Array[Filter],
     with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
+  /** Columnar even when a scan has no partitions (every file pruned, an
+    * empty micro-batch), so the plan shape does not depend on the data. */
+  override def columnarSupportMode(): Scan.ColumnarSupportMode = Scan.ColumnarSupportMode.SUPPORTED
 
   /** RUNTIME file pruning (dynamic "partition" pruning for the rotation
     * model): when this scan joins on its `filename` virtual column and
@@ -409,6 +412,9 @@ object ZeekPlanning {
   }
 }
 
+/** Every data scan, batch or micro-batch, reads through the one
+  * [[ZeekColumnarPartitionReader]]; only a pushed COUNT(*) has its own
+  * reader ([[ZeekCountReaderFactory]]). */
 final case class ZeekPartitionReaderFactory(
     boundHeader: ZeekHeader,
     dataSchema: StructType,
@@ -418,23 +424,12 @@ final case class ZeekPartitionReaderFactory(
     conf: SerializableConf,
     limit: Int = -1) extends PartitionReaderFactory {
 
-  /** Columnar when every projected column is scalar and no pushed filter
-    * is reader-evaluable: batches amortize the per-row DSv2 virtual-call
-    * cost 4096×, while filtered scans keep the row reader's
-    * parse-filter-columns-first shortcut. The answer depends only on
-    * query-level state, so every partition agrees. */
-  private def columnarOk: Boolean =
-    !"false".equals(System.getProperty("graft.zeek.columnar")) && // A/B switch for benchmarks
-      required.fields.forall(f => !f.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType]) &&
-      !pushed.exists(f => ZeekFilterEval.referencedIfSupported(f).isDefined)
-
-  override def supportColumnarReads(partition: InputPartition): Boolean = columnarOk
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
 
   override def createReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.catalyst.InternalRow] =
-    new ZeekPartitionReader(partition.asInstanceOf[ZeekInputPartition].spec,
-      boundHeader, dataSchema, opts, required, pushed, conf.value, limit)
+    throw new UnsupportedOperationException("Zeek data scans are columnar")
 
   override def createColumnarReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     new ZeekColumnarPartitionReader(partition.asInstanceOf[ZeekInputPartition].spec,
-      boundHeader, dataSchema, opts, required, conf.value, limit)
+      boundHeader, dataSchema, opts, required, pushed, conf.value, limit)
 }

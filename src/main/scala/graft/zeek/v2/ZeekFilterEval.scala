@@ -74,7 +74,9 @@ object ZeekFilterEval {
     case StringType    => a.asInstanceOf[UTF8String].compareTo(b.asInstanceOf[UTF8String])
     case LongType      => java.lang.Long.compare(a.asInstanceOf[Long], b.asInstanceOf[Long])
     case IntegerType   => java.lang.Integer.compare(a.asInstanceOf[Int], b.asInstanceOf[Int])
-    case DoubleType    => java.lang.Double.compare(a.asInstanceOf[Double], b.asInstanceOf[Double])
+    case DoubleType    => // Spark's double order: -0.0 == 0.0, NaN == NaN and greatest
+      val (x, y) = (a.asInstanceOf[Double], b.asInstanceOf[Double])
+      if (x == y) 0 else java.lang.Double.compare(x, y)
     case BooleanType   => java.lang.Boolean.compare(a.asInstanceOf[Boolean], b.asInstanceOf[Boolean])
     case TimestampType => java.lang.Long.compare(a.asInstanceOf[Long], b.asInstanceOf[Long])
     case _: DayTimeIntervalType => java.lang.Long.compare(a.asInstanceOf[Long], b.asInstanceOf[Long])

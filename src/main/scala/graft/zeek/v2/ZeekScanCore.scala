@@ -9,11 +9,11 @@ import org.apache.spark.unsafe.types.UTF8String
 
 import graft.zeek._
 
-/** Line-level scan state shared by the row and columnar partition
-  * readers: open (+ decompression sniff), incremental header parse,
-  * ranged-split positioning (a line belongs to the split containing its
-  * first byte), blank/mid-file-directive skipping, and the
-  * ignore_file_errors semantics for read errors.
+/** Line-level scan state of the Zeek partition readers: open (+
+  * decompression sniff), incremental header parse, ranged-split
+  * positioning (a line belongs to the split containing its first byte),
+  * blank/mid-file-directive skipping, and the ignore_file_errors
+  * semantics for read errors.
   *
   * Callers drive it as: `if (!init()) no data` then `while (nextDataLine())
   * use (buf, lineStart, lineEnd)`.
@@ -140,10 +140,10 @@ final class ZeekLineScanner(spec: ZeekFileSpec, opts: ZeekOptions,
   }
 }
 
-/** Per-column projection plan shared by the row and columnar readers:
-  * maps each required output column to its file field (strict-mode
-  * validation or union-by-name), selects its boxed parser / primitive
-  * type code, and owns the reused token-offset arrays. */
+/** Per-column projection plan of the Zeek partition readers: maps each
+  * required output column to its file field (strict-mode validation or
+  * union-by-name), selects its boxed parser / primitive type code, and
+  * owns the reused token-offset arrays. */
 final class ZeekProjection(spec: ZeekFileSpec, boundHeader: ZeekHeader,
     dataSchema: StructType, opts: ZeekOptions, required: StructType,
     fileHeader: ZeekHeader) {
@@ -174,7 +174,7 @@ final class ZeekProjection(spec: ZeekFileSpec, boundHeader: ZeekHeader,
   val srcIdx = new Array[Int](nReq)
   val scalarParsers = new Array[ZeekTypes.SliceParser](nReq)
   val listParsers = new Array[ZeekTypes.ListParser](nReq)
-  /** ZeekTypes.Tc* per required column (scalar columns only) */
+  /** ZeekTypes.Tc* per required column; a list column's is its element's */
   val typeCodes = new Array[Int](nReq)
   val filenameValue: UTF8String = UTF8String.fromString(ZeekIO.displayPath(spec.path))
 
@@ -194,10 +194,11 @@ final class ZeekProjection(spec: ZeekFileSpec, boundHeader: ZeekHeader,
         }
         f.dataType match {
           case ArrayType(_, _) =>
-            listParsers(i) = new ZeekTypes.ListParser(
-              ZeekTypes.parserFor(ZeekTypes.innerType(zt)),
+            val elem = ZeekTypes.innerType(zt)
+            listParsers(i) = new ZeekTypes.ListParser(ZeekTypes.parserFor(elem),
               fileHeader.setSeparator.getBytes(StandardCharsets.UTF_8),
               unsetBytes, emptyBytes)
+            typeCodes(i) = ZeekTypes.typeCodeFor(elem)
           case _ =>
             scalarParsers(i) = ZeekTypes.parserFor(zt)
             typeCodes(i) = ZeekTypes.typeCodeFor(zt)
@@ -207,15 +208,14 @@ final class ZeekProjection(spec: ZeekFileSpec, boundHeader: ZeekHeader,
     }
   }
 
-  /** Tokens needed per line: no reader path touches a token past the
-    * largest projected file-field index (parseCol/writeDirect/the
-    * columnar reader all index through srcIdx, and pushed-filter columns
-    * resolve through `required` too), so tokenization stops there. On an
-    * ultra-wide log with a narrow early projection this skips the tail
-    * separator scan of every line — see tools/WideLogProbe for the
-    * measured profile. Lines SHORTER than the cap keep their semantics:
-    * nTok comes back smaller and absent fields stay NULL, exactly as
-    * with the full scan. */
+  /** Tokens needed per line: no reader touches a token past the largest
+    * projected file-field index (parseCol and the columnar reader both
+    * index through srcIdx, and pushed-filter columns resolve through
+    * `required` too), so tokenization stops there. On an ultra-wide log
+    * with a narrow early projection this skips the tail separator scan of
+    * every line — BASELINE.md records the measured gain. Lines SHORTER
+    * than the cap keep their semantics: nTok comes back smaller and
+    * absent fields stay NULL, exactly as with the full scan. */
   val nTokNeeded: Int = {
     var mx = 0
     var i = 0
@@ -244,7 +244,7 @@ final class ZeekProjection(spec: ZeekFileSpec, boundHeader: ZeekHeader,
     nTok
   }
 
-  /** Boxed single-column parse (filter eval + generic row path). */
+  /** Boxed single-column parse (pushed-filter evaluation). */
   def parseCol(c: Int, buf: Array[Byte], nTok: Int): Any = {
     val si = srcIdx(c)
     if (si == -2) return filenameValue

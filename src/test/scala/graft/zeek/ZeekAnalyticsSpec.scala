@@ -178,12 +178,16 @@ class ZeekAnalyticsSpec extends AnyFunSuite {
     assert(norm < 100000L)
   }
 
-  test("dhcp lease churn: per-device address stability from the reference's dhcp.log") {
+  test("dhcp lease churn: per-device address stability from a dhcp.log") {
     import org.apache.spark.sql.types._
     // device-tracking workflow: how many leases per MAC, does the
     // device keep its address, how many full DORA handshakes — list
-    // (set/vector) columns exercised in an analytics aggregate
-    val got = spark.read.format("zeek").load("/root/reference/data/dhcp.log.gz")
+    // (set/vector) columns exercised in an analytics aggregate, over a
+    // generated log with the reference dhcp.log schema (FIXTURES.md)
+    val dir = ZeekFixtures.tempDir()
+    val path = ZeekFixtures.write(dir, "dhcp.log.gz", ZeekFixtures.log("dhcp",
+      ZeekFixtures.dhcpFields, ZeekFixtures.dhcpTypes, ZeekFixtures.dhcpRows(60)), gzip = true)
+    val got = spark.read.format("zeek").load(path)
       .filter(col("mac").isNotNull)
       .groupBy(col("mac"))
       .agg(count(lit(1)).as("n_leases"),
@@ -196,7 +200,7 @@ class ZeekAnalyticsSpec extends AnyFunSuite {
 
     // independent oracle: gunzip + parse the TSV directly
     val src = scala.io.Source.fromInputStream(new java.util.zip.GZIPInputStream(
-      new java.io.FileInputStream("/root/reference/data/dhcp.log.gz")))
+      new java.io.FileInputStream(path)))
     val acc = scala.collection.mutable.Map.empty[String, (Long, Set[String], Long, Long)]
     try src.getLines().filterNot(_.startsWith("#")).foreach { line =>
       val c = line.split("\t", -1)
@@ -216,12 +220,17 @@ class ZeekAnalyticsSpec extends AnyFunSuite {
         s"mac $mac: got ${got(mac)} expected ${(n, addrs.size, acks, conns)}")
   }
 
-  test("asset inventory across the reference's 24-hour known_hosts rotation matches an independent parse") {
+  test("asset inventory across a 24-hour known_hosts rotation matches an independent parse") {
     import org.apache.spark.sql.types._
     // the analyst workflow a rotated-log deployment runs daily: glob the
     // whole day, first/last-seen + activity per host, provenance via the
-    // filename column — against the reference's OWN fixture files
-    val glob = "/root/reference/data/known_hosts_*.log.gz"
+    // filename column — over 24 generated hourly gzip files with the
+    // reference known_hosts schema (FIXTURES.md)
+    val dir = ZeekFixtures.tempDir()
+    for ((name, rows) <- ZeekFixtures.knownHostsDay())
+      ZeekFixtures.write(dir, name, ZeekFixtures.log("known_hosts",
+        ZeekFixtures.knownHostsFields, ZeekFixtures.knownHostsTypes, rows), gzip = true)
+    val glob = s"$dir/known_hosts_*.log.gz"
     val inv = spark.read.format("zeek").option("filename", "true").load(glob)
       .groupBy(col("host_ip"))
       .agg(count(lit(1)).as("n_records"),
@@ -234,7 +243,7 @@ class ZeekAnalyticsSpec extends AnyFunSuite {
       .toMap
 
     // independent oracle: gunzip + parse the TSVs directly
-    val files = new java.io.File("/root/reference/data").listFiles()
+    val files = dir.toFile.listFiles()
       .filter(_.getName.matches("known_hosts_.*\\.log\\.gz")).sortBy(_.getName)
     assert(files.length == 24, s"expected the 24 hourly files, got ${files.length}")
     def tsMicros(s: String): Long = {

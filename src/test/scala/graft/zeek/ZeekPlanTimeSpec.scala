@@ -67,22 +67,30 @@ class ZeekPlanTimeSpec extends AnyFunSuite {
       s"planning opened ${CountingLocalFs.openCalls.get} files")
   }
 
-  test("columnar and row readers produce identical results (kept-in-sync guard)") {
-    // the per-cell parse logic exists in writeDirect (row) and writeRow
-    // (columnar); this pins them bit-identical over every scalar type,
-    // NULL markers, and malformed cells so a change to one copy cannot
-    // silently diverge the other
+  test("array-column and pushed-filter reads plan a columnar scan") {
+    import org.apache.spark.sql.execution.ColumnarToRowExec
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
     val dir = ZeekFixtures.tempDir()
     ZeekFixtures.write(dir, "conn.log", ZeekFixtures.connContent)
-    def read(columnar: Boolean) = {
-      System.setProperty("graft.zeek.columnar", columnar.toString)
-      try {
-        // drop the list columns so BOTH paths are eligible
-        val df = spark.read.format("zeek").option("filename", "true").load(s"$dir/conn.log")
-        df.drop("tags", "rtts").collect().map(_.toString).sorted.toSeq
-      } finally System.clearProperty("graft.zeek.columnar")
+    val conn = spark.read.format("zeek").load(s"$dir/conn.log")
+    def assertColumnar(df: org.apache.spark.sql.DataFrame): Unit = {
+      val plan = df.queryExecution.executedPlan
+      val scans = plan.collect { case b: BatchScanExec => b }
+      val underC2R = plan.collect { case c: ColumnarToRowExec =>
+        c.collect { case b: BatchScanExec => b } }.flatten
+      assert(scans.nonEmpty && scans.forall(_.supportsColumnar) && underC2R.size == scans.size,
+        plan.toString)
     }
-    assert(read(columnar = true) == read(columnar = false))
+    val arrays = conn.select("uid", "tags", "rtts")
+    assertColumnar(arrays)
+    assert(arrays.orderBy("uid").collect().map(r => (r.getSeq[String](1),
+      r.getSeq[java.time.Duration](2).map(d => if (d == null) null else d.toMillis))).toSeq ==
+      Seq((Seq("alpha", "beta"), Seq(10L, 20L)), (Nil, Nil),
+        (Seq("g", null, "h"), Seq(1000L, null, 3500L))))
+    val filtered = conn.filter(col("id_orig_p") > 54321).select("uid", "tags")
+    assertColumnar(filtered)
+    assert(filtered.queryExecution.executedPlan.toString.contains("pushed=[IsNotNull(id_orig_p)"))
+    assert(filtered.collect().map(_.getString(0)).toSeq == Seq("CmFsdZ2rTGf6Ouv2R6"))
   }
 
   test("pushed COUNT(*) sums byte-range split partials exactly") {

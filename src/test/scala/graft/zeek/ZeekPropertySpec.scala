@@ -122,11 +122,31 @@ class ZeekPropertySpec extends AnyFunSuite {
     }
   }
 
+  private def isList(tpe: String) = tpe.startsWith("vector[") || tpe.startsWith("set[")
+
+  /** Driver-side order on oracle values of one scalar Zeek type. */
+  private def compareExpected(a: Any, b: Any): Int = (a, b) match {
+    case (x: String, y: String)                         => x.compareTo(y)
+    case (x: java.lang.Long, y: java.lang.Long)         => x.compareTo(y)
+    case (x: java.lang.Integer, y: java.lang.Integer)   => x.compareTo(y)
+    case (x: java.lang.Double, y: java.lang.Double)     => x.compareTo(y)
+    case (x: java.lang.Boolean, y: java.lang.Boolean)   => x.compareTo(y)
+    case (x: java.sql.Timestamp, y: java.sql.Timestamp) => x.compareTo(y)
+    case (x: java.time.Duration, y: java.time.Duration) => x.compareTo(y)
+  }
+
   test("generated logs round-trip: source values == independent oracle") {
+    // each seed also reads its log through one pushed predicate on a
+    // scalar column and compares with the oracle rows filtered here: the
+    // reader evaluates pushed filters on boxed parseCol values but writes
+    // the vectors with the primitive parsers, and a disagreement between
+    // the two would drop a row that no residual filter can restore
     val genSchema: Gen[List[String]] =
       Gen.choose(1, 6).flatMap(n => Gen.listOfN(n, genType))
     for (seed <- 0 until 40) {
-      val colTypes = genSchema.pureApply(Gen.Parameters.default, Seed(seed.toLong))
+      val generated = genSchema.pureApply(Gen.Parameters.default, Seed(seed.toLong))
+      // every seed needs a scalar column to push a predicate on
+      val colTypes = if (generated.forall(isList)) generated :+ "string" else generated
       val nRows = Gen.choose(0, 8).pureApply(Gen.Parameters.default, Seed(seed * 7L + 1))
       val gz = seed % 3 == 0
       val fields = colTypes.indices.map(i => s"c$i")
@@ -141,19 +161,42 @@ class ZeekPropertySpec extends AnyFunSuite {
       val dir = ZeekFixtures.tempDir()
       val path = ZeekFixtures.write(dir, if (gz) "p.log.gz" else "p.log", content, gzip = gz)
 
-      val got: Array[Row] = spark.read.format("zeek").load(path).collect()
-      assert(got.length == rows.length)
-      got.zip(rows).foreach { case (row, raw) =>
-        colTypes.zipWithIndex.foreach { case (tpe, i) =>
-          val exp = expected(tpe, raw(i))
-          val act = row.get(i) match {
-            case s: Seq[_] => s
-            case other     => other
+      def check(got: Array[Row], want: Seq[Seq[String]], what: String): Unit = {
+        assert(got.length == want.length, s"seed=$seed $what: ${got.length} rows, expected ${want.length}")
+        got.zip(want).foreach { case (row, raw) =>
+          colTypes.zipWithIndex.foreach { case (tpe, i) =>
+            val exp = expected(tpe, raw(i))
+            val act = row.get(i) match {
+              case s: Seq[_] => s
+              case other     => other
+            }
+            assert(act == exp,
+              s"seed=$seed $what col c$i type=$tpe cell='${raw(i)}' expected=$exp actual=$act")
           }
-          assert(act == exp,
-            s"seed=$seed col c$i type=$tpe cell='${raw(i)}' expected=$exp actual=$act")
         }
       }
+      val df = spark.read.format("zeek").load(path)
+      check(df.collect(), rows, "unfiltered")
+
+      // one pushed predicate: IS NOT NULL, or a comparison against a value
+      // decoded from a generated cell of the same column
+      val scalarCols = colTypes.indices.filterNot(i => isList(colTypes(i)))
+      val rnd = new scala.util.Random(seed)
+      val c = scalarCols(rnd.nextInt(scalarCols.length))
+      val tpe = colTypes(c)
+      val pivot = if (rows.isEmpty) null else expected(tpe, rows(rnd.nextInt(rows.length))(c))
+      val op = if (pivot == null) "isNotNull" else Seq("isNotNull", "==", ">", "<=")(rnd.nextInt(4))
+      val column = org.apache.spark.sql.functions.col(s"c$c")
+      val (cond, keep) = op match {
+        case "isNotNull" => (column.isNotNull, (v: Any) => v != null)
+        case "==" => (column === pivot, (v: Any) => v != null && compareExpected(v, pivot) == 0)
+        case ">"  => (column > pivot, (v: Any) => v != null && compareExpected(v, pivot) > 0)
+        case "<=" => (column <= pivot, (v: Any) => v != null && compareExpected(v, pivot) <= 0)
+      }
+      val filtered = df.filter(cond)
+      val plan = filtered.queryExecution.executedPlan.toString
+      assert(!plan.contains("pushed=[]"), s"seed=$seed: predicate not pushed\n$plan")
+      check(filtered.collect(), rows.filter(r => keep(expected(tpe, r(c)))), s"filter c$c $op $pivot")
     }
   }
 
