@@ -5,8 +5,8 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 /** Bucketed-table layout: the co-location lever that removes the
   * per-query fact-side shuffle from repeated equi-joins.
   *
-  * The round-10 q05 experiment (tools/Q05Prune, BASELINE.md "q05's
-  * remaining fact shuffle") measured the three candidate mechanisms and
+  * The round-10 q05 experiment (BASELINE.md "q05's remaining fact
+  * shuffle") measured the three candidate mechanisms and
   * concluded: runtime Bloom filters are structurally unavailable for
   * q05's selectivity shape, zone maps only help pushable predicates —
   * but bucketing BOTH facts on the order key removes BOTH order-key

@@ -15,8 +15,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * in the same JVM bind that memoized StructType instead of re-running
   * inference. A bare `spark.read.parquet(path)` plans a footer-reading
   * Spark JOB per call (~70-90 ms of pure scheduling floor at any SF —
-  * measured by `graft.tools.ConstructProbe`), which a 100-query session
-  * pays hundreds of times for byte-identical answers. This is catalog
+  * BASELINE.md, "Findings of the retired query probes"), which a
+  * 100-query session pays hundreds of times for byte-identical answers. This is catalog
   * metadata, not data: every query still scans, filters and aggregates
   * the parquet inputs from scratch on every invocation, and the schema
   * itself is still derived from those inputs (once). A real deployment

@@ -29,7 +29,7 @@ import org.apache.spark.sql.types._
   *
   * Typed casts mirror `ZeekTypes` parsing exactly: `time`/`interval`
   * are epoch-second doubles converted via the same `(d * 1e6).toLong`
-  * truncation ([[ZeekTypes.parseTime]]), `count` range-checks into
+  * truncation (`ZeekTypes.PrimParsers.long`), `count` range-checks into
   * LongType (values above Long.MaxValue → NULL, the documented TSV
   * deviation), `port` range-checks into IntegerType. Columns carry the
   * same `zeek.type`/`zeek.name` metadata as the TSV source, so a
@@ -175,7 +175,7 @@ object ZeekJson {
   private def typedCast(zeekType: String, c: Column, iso: Boolean): Column = zeekType match {
     case "time" =>
       if (iso) c.cast(TimestampType) // ISO8601 w/ T+Z: native string→timestamp cast
-      else timestamp_micros((c * lit(1e6)).cast(LongType)) // same double-multiply truncation as parseTime
+      else timestamp_micros((c * lit(1e6)).cast(LongType)) // same double-multiply truncation as the TSV parser
     case "interval" =>
       // micros → interval via timestamp subtraction (exact; Spark has no
       // long→DayTimeInterval constructor at micro precision)

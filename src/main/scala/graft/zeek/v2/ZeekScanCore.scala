@@ -4,6 +4,7 @@ import java.io.InputStream
 import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -140,10 +141,30 @@ final class ZeekLineScanner(spec: ZeekFileSpec, opts: ZeekOptions,
   }
 }
 
+/** A tokenized line's cells as the vector writes, the pushed-filter leaves
+  * and `parseCol` read them: the reused token offsets, the file's NULL
+  * markers, the display path that the `filename` column reads, and the
+  * one [[ZeekTypes.PrimParsers]] of the reader. */
+final class ZeekCells(val tokStart: Array[Int], val tokEnd: Array[Int],
+    unset: Array[Byte], empty: Array[Byte], val filename: Array[Byte]) {
+  val prim = new ZeekTypes.PrimParsers
+
+  /** The unset (`-`) or empty (`(empty)`) marker: a NULL cell. */
+  def isMarker(b: Array[Byte], s: Int, e: Int): Boolean =
+    ZeekTypes.sliceEquals(b, s, e, unset) || ZeekTypes.sliceEquals(b, s, e, empty)
+}
+
+object ZeekCells {
+  /** No tokens: only the `filename` column has a value. */
+  def ofPath(displayPath: String): ZeekCells =
+    new ZeekCells(Array.emptyIntArray, Array.emptyIntArray, Array.emptyByteArray,
+      Array.emptyByteArray, displayPath.getBytes(StandardCharsets.UTF_8))
+}
+
 /** Per-column projection plan of the Zeek partition readers: maps each
   * required output column to its file field (strict-mode validation or
-  * union-by-name), selects its boxed parser / primitive type code, and
-  * owns the reused token-offset arrays. */
+  * union-by-name), selects its type code (the [[ZeekTypes.PrimParsers]]
+  * parser) and list splitter, and owns the reused token-offset arrays. */
 final class ZeekProjection(spec: ZeekFileSpec, boundHeader: ZeekHeader,
     dataSchema: StructType, opts: ZeekOptions, required: StructType,
     fileHeader: ZeekHeader) {
@@ -172,11 +193,11 @@ final class ZeekProjection(spec: ZeekFileSpec, boundHeader: ZeekHeader,
   val tokEnd = new Array[Int](nFileFields + 1)
   /** file field index per required column; -1 = NULL, -2 = filename */
   val srcIdx = new Array[Int](nReq)
-  val scalarParsers = new Array[ZeekTypes.SliceParser](nReq)
   val listParsers = new Array[ZeekTypes.ListParser](nReq)
   /** ZeekTypes.Tc* per required column; a list column's is its element's */
   val typeCodes = new Array[Int](nReq)
   val filenameValue: UTF8String = UTF8String.fromString(ZeekIO.displayPath(spec.path))
+  val cells = new ZeekCells(tokStart, tokEnd, unsetBytes, emptyBytes, filenameValue.getBytes)
 
   {
     val dataIndex = dataSchema.fieldNames.zipWithIndex.toMap
@@ -195,12 +216,10 @@ final class ZeekProjection(spec: ZeekFileSpec, boundHeader: ZeekHeader,
         f.dataType match {
           case ArrayType(_, _) =>
             val elem = ZeekTypes.innerType(zt)
-            listParsers(i) = new ZeekTypes.ListParser(ZeekTypes.parserFor(elem),
-              fileHeader.setSeparator.getBytes(StandardCharsets.UTF_8),
-              unsetBytes, emptyBytes)
+            listParsers(i) = new ZeekTypes.ListParser(
+              fileHeader.setSeparator.getBytes(StandardCharsets.UTF_8), unsetBytes, emptyBytes)
             typeCodes(i) = ZeekTypes.typeCodeFor(elem)
           case _ =>
-            scalarParsers(i) = ZeekTypes.parserFor(zt)
             typeCodes(i) = ZeekTypes.typeCodeFor(zt)
         }
       }
@@ -209,9 +228,9 @@ final class ZeekProjection(spec: ZeekFileSpec, boundHeader: ZeekHeader,
   }
 
   /** Tokens needed per line: no reader touches a token past the largest
-    * projected file-field index (parseCol and the columnar reader both
-    * index through srcIdx, and pushed-filter columns resolve through
-    * `required` too), so tokenization stops there. On an ultra-wide log
+    * projected file-field index (the vector writes and the pushed-filter
+    * leaves both index through srcIdx, and pushed-filter columns are in
+    * `required`), so tokenization stops there. On an ultra-wide log
     * with a narrow early projection this skips the tail separator scan of
     * every line — BASELINE.md records the measured gain. Lines SHORTER
     * than the cap keep their semantics: nTok comes back smaller and
@@ -244,18 +263,33 @@ final class ZeekProjection(spec: ZeekFileSpec, boundHeader: ZeekHeader,
     nTok
   }
 
-  /** Boxed single-column parse (pushed-filter evaluation). */
+  /** Column `c` of the tokenized line as its boxed Catalyst value (NULL
+    * when absent from this file, a marker or malformed; a list as
+    * `ArrayData`). No reader calls it: the readers write vectors and test
+    * filters on the primitives; this is the one-value view of the same
+    * parsers. */
   def parseCol(c: Int, buf: Array[Byte], nTok: Int): Any = {
     val si = srcIdx(c)
     if (si == -2) return filenameValue
     if (si < 0 || si >= nTok) return null // absent in this file (union mode) → NULL
-    val s = tokStart(si)
-    val e = tokEnd(si)
     val lp = listParsers(c)
-    if (lp != null) return lp.parse(buf, s, e)
-    if (ZeekTypes.sliceEquals(buf, s, e, unsetBytes) ||
-        ZeekTypes.sliceEquals(buf, s, e, emptyBytes)) null
-    else scalarParsers(c)(buf, s, e)
+    if (lp == null) boxCell(typeCodes(c), buf, tokStart(si), tokEnd(si))
+    else new GenericArrayData(Array.tabulate[Any](lp.split(buf, tokStart(si), tokEnd(si))) { k =>
+      boxCell(typeCodes(c), buf, lp.elemStart(k), lp.elemEnd(k))
+    })
+  }
+
+  private def boxCell(tc: Int, b: Array[Byte], s: Int, e: Int): Any = {
+    val prim = cells.prim
+    if (cells.isMarker(b, s, e)) null
+    else tc match {
+      case ZeekTypes.TcString => UTF8String.fromBytes(b, s, e - s)
+      case ZeekTypes.TcBool   => prim.bool(b, s, e)
+      case ZeekTypes.TcDouble => val x = prim.dbl(b, s, e); if (prim.lastNull) null else x
+      case _ => // a port boxes as an Integer: the ascription stops its widening to Long
+        val x = prim.long(tc, b, s, e)
+        if (prim.lastNull) null else if (tc == ZeekTypes.TcPort) x.toInt: Any else x
+    }
   }
 
   /** Union-mode mapping for a file not seen at bind time: match fields by

@@ -268,12 +268,17 @@ class ZeekDataSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("empty glob errors") {
-    // at query planning — the point the reference's table function binds
-    // (load() alone can't error anymore: the writer resolves the table
-    // through the same path and must accept a not-yet-existing target)
     val dir = ZeekFixtures.tempDir()
     val e = intercept[Exception](read(s"$dir/*.log").count())
     assert(e.getMessage.contains("No files found"))
+  }
+
+  test("a path matching no files fails at load, naming the path") {
+    // the reference's bind error (src/zeek_scanner.cpp:446-453), raised by
+    // load() itself rather than surfacing later as an unresolved column
+    val pattern = s"${ZeekFixtures.tempDir()}/no-match-*.log"
+    val e = intercept[ZeekFormatException](read(pattern))
+    assert(e.getMessage == s"""No files found that match the pattern "$pattern"""")
   }
 
   test("filter pushdown: results identical to post-scan semantics") {
@@ -297,6 +302,11 @@ class ZeekDataSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(df.filter(col("uid").startsWith("CAcq")).count() == 1)
     assert(df.filter(col("uid").endsWith("R6")).count() == 1)
     assert(df.filter(col("uid").contains("sdZ")).count() == 1)
+    // string order is UTF8String's: unsigned bytes, so non-ASCII sorts above 'z'
+    val utf = read(ZeekFixtures.write(dir, "utf.log", ZeekFixtures.log("utf", Seq("s"), Seq("string"),
+      Seq("a", "z", "é", "日本").map(Seq(_)))))
+    assert(utf.filter(col("s") > "z").collect().map(_.getString(0)).toSet == Set("é", "日本"))
+    assert(utf.filter(col("s") < "é").count() == 2)
     // pushed filters visible in the scan description
     val desc = df.filter(col("proto") === "udp").queryExecution.executedPlan.toString
     assert(desc.contains("ZeekScan"))

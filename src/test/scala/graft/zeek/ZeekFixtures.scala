@@ -94,7 +94,7 @@ object ZeekFixtures {
     "count", "count", "count", "count", "vector[string]", "string", "interval")
 
   /** Micros as a Zeek `time`/`interval` cell (decimal seconds). The reader
-    * converts through the reference's double multiply (ZeekTypes.parseTime),
+    * converts through the reference's double multiply (ZeekTypes.PrimParsers),
     * so the value is nudged up to the next micro that conversion maps back
     * exactly: the cell then decodes to the same micros as an exact decimal
     * parse, and goldens can be computed either way. */

@@ -116,5 +116,26 @@ class ZeekGeneratedCorpusSpec extends AnyFunSuite {
     assert(df.filter(col("x") === 0.0).count() == 2)
     assert(df.filter(col("x") <= 0.0).count() == 2)
     assert(df.filter(col("x") > 0.0).count() == 1)
+
+    // and over the rest of the order: NaN equals NaN and is greatest,
+    // infinities, subnormals, negatives, a malformed cell (NULL)
+    val cells = Seq("0.0", "-0.0", "1.5", "-1.5", "NaN", "Infinity", "-Infinity",
+      "4.9E-324", "-4.9E-324", "x")
+    val wide = spark.read.format("zeek").load(ZeekFixtures.write(dir, "w.log",
+      ZeekFixtures.log("w", Seq("id", "x"), Seq("string", "double"),
+        cells.zipWithIndex.map { case (c, i) => Seq(s"r$i", c) })))
+    val values = cells.zipWithIndex.flatMap { case (c, i) =>
+      scala.util.Try(java.lang.Double.parseDouble(c)).toOption.map(s"r$i" -> _)
+    }
+    val cmp = org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles _
+    val ops: Seq[(String, (Column, Double) => Column, Int => Boolean)] = Seq(
+      ("=", _ === _, _ == 0), ("<", _ < _, _ < 0), ("<=", _ <= _, _ <= 0),
+      (">", _ > _, _ > 0), (">=", _ >= _, _ >= 0), ("!=", _ =!= _, _ != 0))
+    for (pivot <- Seq(0.0, -0.0, Double.NaN, Double.PositiveInfinity, -1.5, 4.9e-324);
+         (name, op, keep) <- ops) {
+      val got = wide.filter(op(col("x"), pivot)).collect().map(_.getString(0)).toSet
+      val want = values.collect { case (id, v) if keep(cmp(v, pivot)) => id }.toSet
+      assert(got == want, s"x $name $pivot")
+    }
   }
 }

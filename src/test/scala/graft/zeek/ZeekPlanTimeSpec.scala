@@ -123,6 +123,19 @@ class ZeekPlanTimeSpec extends AnyFunSuite {
     assert(spark.read.format("zeek").option("filename", "true").load(s"$dir/*.log").count() == 3)
   }
 
+  test("plan-time filename pruning: an endsWith filter over two files plans one partition") {
+    val dir = ZeekFixtures.tempDir()
+    for (n <- Seq("a", "b"))
+      ZeekFixtures.write(dir, s"$n.log", ZeekFixtures.base("t", Seq(("1.0", n, "100"))))
+    val df = spark.read.format("zeek").option("filename", "true").load(s"$dir/*.log")
+      .filter(col("filename").endsWith("b.log"))
+    val scans = df.queryExecution.sparkPlan.collect {
+      case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => s
+    }
+    assert(scans.map(_.inputPartitions.length) == Seq(1), df.queryExecution.sparkPlan.toString)
+    assert(df.collect().map(_.getString(1)).toSeq == Seq("b"))
+  }
+
   test("streaming listing cache: unchanged dir mtime skips the re-glob") {
     val dir = ZeekFixtures.tempDir()
     for (n <- Seq("a", "b", "c"))

@@ -4,6 +4,8 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.types.{MetadataBuilder, StructField, StructType}
 
 /** Property-based round-trip: generated header × rows (every scalar type,
   * NULL markers, malformed numerics, list shapes, compression) read back
@@ -93,32 +95,23 @@ class ZeekPropertySpec extends AnyFunSuite {
       catch { case _: Exception => null }
   }
 
-  test("primitive (boxing-free) parsers agree with boxed parsers on arbitrary cells") {
-    val prim = new ZeekTypes.PrimParsers
+  test("one parser per Zeek type agrees with the cell oracle") {
+    // each cell goes through a one-column projection's parseCol: the
+    // marker check, then the type's PrimParsers parser, boxed
     val primTypes = Seq("count", "int", "port", "time", "interval", "double", "bool")
-    for (tpe <- primTypes; seed <- 0 until 400) {
-      val cell = genCell(tpe).pureApply(Gen.Parameters.default, Seed(tpe.hashCode * 100000L + seed))
-      val b = cell.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-      val boxed = ZeekTypes.parserFor(tpe)(b, 0, b.length)
-      val direct: Any = ZeekTypes.typeCodeFor(tpe) match {
-        case ZeekTypes.TcCount =>
-          val v = prim.longIn(b, 0, b.length, 0L, Long.MaxValue)
-          if (prim.lastNull) null else java.lang.Long.valueOf(v)
-        case ZeekTypes.TcInt =>
-          val v = prim.longIn(b, 0, b.length, Long.MinValue, Long.MaxValue)
-          if (prim.lastNull) null else java.lang.Long.valueOf(v)
-        case ZeekTypes.TcPort =>
-          val v = prim.longIn(b, 0, b.length, 0L, 65535L)
-          if (prim.lastNull) null else java.lang.Integer.valueOf(v.toInt)
-        case ZeekTypes.TcTime =>
-          val v = prim.timeMicros(b, 0, b.length)
-          if (prim.lastNull) null else java.lang.Long.valueOf(v)
-        case ZeekTypes.TcBool => java.lang.Boolean.valueOf(prim.bool(b, 0, b.length))
-        case ZeekTypes.TcDouble =>
-          val v = prim.dbl(b, 0, b.length)
-          if (prim.lastNull) null else java.lang.Double.valueOf(v)
+    for (tpe <- primTypes) {
+      val header = ZeekHeader.Default.copy(fields = Vector("c"), types = Vector(tpe))
+      val schema = StructType(Seq(StructField("c", ZeekTypes.toSpark(tpe), nullable = true,
+        new MetadataBuilder().putString(ZeekTypes.ZeekTypeMeta, tpe).build())))
+      val proj = new graft.zeek.v2.ZeekProjection(ZeekFileSpec("p.log", None), header, schema,
+        ZeekOptions(), schema, header)
+      for (seed <- 0 until 400) {
+        val cell = genCell(tpe).pureApply(Gen.Parameters.default, Seed(tpe.hashCode * 100000L + seed))
+        val b = cell.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+        val got = proj.parseCol(0, b, proj.tokenize(b, 0, b.length))
+        val want = CatalystTypeConverters.convertToCatalyst(expected(tpe, cell))
+        assert(got == want, s"type=$tpe cell='$cell' expected=$want parsed=$got")
       }
-      assert(direct == boxed, s"type=$tpe cell='$cell' boxed=$boxed direct=$direct")
     }
   }
 
@@ -138,9 +131,10 @@ class ZeekPropertySpec extends AnyFunSuite {
   test("generated logs round-trip: source values == independent oracle") {
     // each seed also reads its log through one pushed predicate on a
     // scalar column and compares with the oracle rows filtered here: the
-    // reader evaluates pushed filters on boxed parseCol values but writes
-    // the vectors with the primitive parsers, and a disagreement between
-    // the two would drop a row that no residual filter can restore
+    // reader tests pushed filters on raw token slices before it writes
+    // the vectors, and a leaf that wrongly rejects a row (a marker, a
+    // malformed cell, a byte or double order) drops it where no residual
+    // filter can restore it
     val genSchema: Gen[List[String]] =
       Gen.choose(1, 6).flatMap(n => Gen.listOfN(n, genType))
     for (seed <- 0 until 40) {
@@ -178,19 +172,24 @@ class ZeekPropertySpec extends AnyFunSuite {
       val df = spark.read.format("zeek").load(path)
       check(df.collect(), rows, "unfiltered")
 
-      // one pushed predicate: IS NOT NULL, or a comparison against a value
-      // decoded from a generated cell of the same column
+      // one pushed predicate: IS [NOT] NULL, or a comparison against a
+      // value decoded from a generated cell of the same column
       val scalarCols = colTypes.indices.filterNot(i => isList(colTypes(i)))
       val rnd = new scala.util.Random(seed)
       val c = scalarCols(rnd.nextInt(scalarCols.length))
       val tpe = colTypes(c)
       val pivot = if (rows.isEmpty) null else expected(tpe, rows(rnd.nextInt(rows.length))(c))
-      val op = if (pivot == null) "isNotNull" else Seq("isNotNull", "==", ">", "<=")(rnd.nextInt(4))
+      val ops = Seq("isNotNull", "isNull", "==", "=!=", ">", ">=", "<", "<=")
+      val op = if (pivot == null) ops(rnd.nextInt(2)) else ops(rnd.nextInt(ops.length))
       val column = org.apache.spark.sql.functions.col(s"c$c")
       val (cond, keep) = op match {
         case "isNotNull" => (column.isNotNull, (v: Any) => v != null)
+        case "isNull"    => (column.isNull, (v: Any) => v == null)
         case "==" => (column === pivot, (v: Any) => v != null && compareExpected(v, pivot) == 0)
+        case "=!=" => (column =!= pivot, (v: Any) => v != null && compareExpected(v, pivot) != 0)
         case ">"  => (column > pivot, (v: Any) => v != null && compareExpected(v, pivot) > 0)
+        case ">=" => (column >= pivot, (v: Any) => v != null && compareExpected(v, pivot) >= 0)
+        case "<"  => (column < pivot, (v: Any) => v != null && compareExpected(v, pivot) < 0)
         case "<=" => (column <= pivot, (v: Any) => v != null && compareExpected(v, pivot) <= 0)
       }
       val filtered = df.filter(cond)
