@@ -18,7 +18,7 @@ import graft.functions.{CosineSim, DotProduct, L2Distance}
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
   private def info(name: String): ExpressionInfo =
-    new ExpressionInfo("graft", null, name, s"$name - graft expression", "")
+    new ExpressionInfo("graft", null, name, s"$name - graft expression", "", "", "", "", "", "", "")
 
   override def apply(ext: SparkSessionExtensions): Unit = {
     def inject(name: String, f: (Expression, Expression) => Expression): Unit =

@@ -70,7 +70,7 @@ object AsofJoin {
         col(leftTime).as("__asof_t"),
         lit(null).cast(r.schema("__asof_p").dataType).as("__asof_p"),
         lit(leftTag).as("__asof_tag"),
-        struct(left.columns.map(col): _*).as("__asof_l")): _*)
+        struct(left.columns.toIndexedSeq.map(col): _*).as("__asof_l")): _*)
 
     val base = Window.partitionBy(keys.map(col): _*)
       .orderBy(col("__asof_t"), col("__asof_tag"))
@@ -86,7 +86,7 @@ object AsofJoin {
 
     val leftOut = left.columns.map(c => col("__asof_l").getField(c).as(c))
     val rightOut = payloadCols.map(c => col("__asof_match").getField(c).as(rightPrefix + c))
-    joined.select(leftOut ++ rightOut: _*)
+    joined.select((leftOut ++ rightOut).toIndexedSeq: _*)
   }
 
   private def structTypeOf(df: DataFrame): org.apache.spark.sql.types.StructType =

@@ -41,13 +41,13 @@ object SkewJoin {
     // identical rows (hash collisions only reduce spreading, never break
     // correctness)
     val salted = left.withColumn("__salt",
-      pmod(hash(leftCols.map(col): _*), lit(saltBuckets)))
+      pmod(hash(leftCols.toIndexedSeq.map(col): _*), lit(saltBuckets)))
     val replicated = right
       .withColumn("__salt", explode(sequence(lit(0), lit(saltBuckets - 1))))
     val joined = salted.join(replicated,
       salted(key) === replicated(key) && salted("__salt") === replicated("__salt"),
       joinType)
     val rightOut = right.columns.filterNot(_ == key).map(replicated(_))
-    joined.select(leftCols.map(salted(_)) ++ rightOut: _*)
+    joined.select((leftCols.map(salted(_)) ++ rightOut).toIndexedSeq: _*)
   }
 }

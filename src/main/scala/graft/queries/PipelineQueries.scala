@@ -1832,7 +1832,7 @@ object PipelineQueries {
     // over the same BLOBs (decode internals stay rows-only in m01-m03).
     // Map-only: no shuffle before the final ORDER BY.
     "m04_media_sniff" -> ((s, d) => {
-      val media = Multimodal.fromDocuments(s, Tables.documents(s, d)).toDF
+      val media = Multimodal.fromDocuments(s, Tables.documents(s, d)).toDF()
       val magic = upper(hex(substring(col("content"), 1, 4)))
       media.select(col("media_id"), col("kind"),
         length(col("content")).cast(LongType).as("n_bytes"),
@@ -1857,7 +1857,7 @@ object PipelineQueries {
     // sf0.1 the corpus carries 8 genuine duplicate blobs, so the
     // dedupable-bytes column is exercised, not vacuous.
     "m06_media_dedup" -> ((s, d) => {
-      val media = Multimodal.fromDocuments(s, Tables.documents(s, d)).toDF
+      val media = Multimodal.fromDocuments(s, Tables.documents(s, d)).toDF()
       val g = media.select(col("media_id"), col("kind"),
         md5(col("content")).as("digest"),
         length(col("content")).cast(LongType).as("n_bytes"))
@@ -1887,7 +1887,7 @@ object PipelineQueries {
     // survivors exact-Hamming ≤ 6. Content bytes never shuffle — only
     // (id, band) rows and the 4-int hash arrays.
     "m07_phash_neardups" -> ((s, d) => {
-      val media = Multimodal.fromDocuments(s, Tables.documents(s, d)).toDF
+      val media = Multimodal.fromDocuments(s, Tables.documents(s, d)).toDF()
       val realBands = udf((b: Array[Byte]) =>
         graft.multimodal.Multimodal.dHashBands(b).map(_.toArray).orNull)
       bandedHammingNearDups(withNearDupMutants(media, idsBelow = 3), realBands)
@@ -1905,7 +1905,7 @@ object PipelineQueries {
     // occupancy cap, exact Hamming ≤ 6 on survivors; content bytes
     // never shuffle.
     "m08_video_phash_neardups" -> ((s, d) => {
-      val media = Multimodal.fromDocuments(s, Tables.documents(s, d)).toDF
+      val media = Multimodal.fromDocuments(s, Tables.documents(s, d)).toDF()
         .filter(col("kind") === "video")
       val realBands = udf((b: Array[Byte]) =>
         graft.multimodal.Multimodal.videoDHashBands(b).map(_.toArray).orNull)
@@ -1920,7 +1920,7 @@ object PipelineQueries {
     // rule); the byte stream is exploded from the hex rendering, ≤256
     // histogram rows per media row ride one shuffle.
     "m05_byte_entropy" -> ((s, d) => {
-      val media = Multimodal.fromDocuments(s, Tables.documents(s, d)).toDF
+      val media = Multimodal.fromDocuments(s, Tables.documents(s, d)).toDF()
       val h = media.select(col("media_id"), upper(hex(col("content"))).as("hx"),
           length(col("content")).cast(LongType).as("n_bytes"))
         .filter(col("n_bytes") > 0)

@@ -93,7 +93,7 @@ object FaultInject {
     try {
       val df = graft.SparkEntry.queries(query)(spark, sfDir)
       val strRow = concat_ws("\u0001",
-        df.columns.map(c => coalesce(col(c).cast("string"), lit("␀"))): _*)
+        df.columns.toIndexedSeq.map(c => coalesce(col(c).cast("string"), lit("␀"))): _*)
       val agg = df.select(xxhash64(strRow).as("h"))
         .agg(sum(col("h").cast("decimal(38,0)")).as("hash_sum"), count(lit(1)).as("rows"))
         .head()

@@ -47,7 +47,7 @@ object ScaleGen {
 
     def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
     def stride(df: DataFrame, key: String): Long =
-      df.agg(max(col(key))).head.getLong(0) + 1L
+      df.agg(max(col(key))).head().getLong(0) + 1L
     // one replica column cross-joined in, then per-column shift rules —
     // a single pass per table, no driver-side loops over replicas
     val reps = spark.range(factor).toDF("__rep")
@@ -103,7 +103,7 @@ object ScaleGen {
     // preserved exactly, replicas stay pairwise near-orthogonal (expected
     // cross-replica cosine 0, std ~1/sqrt(dims)) at ANY factor
     val emb = read("embeddings")
-    val dims = emb.select(size(col("embedding"))).head.getInt(0)
+    val dims = emb.select(size(col("embedding"))).head().getInt(0)
     write("embeddings", replicate(emb,
       Map("vec_id" -> stride(emb, "vec_id")),
       rewrite = Map("embedding" -> expr(

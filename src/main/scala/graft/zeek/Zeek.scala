@@ -15,7 +15,8 @@ object Zeek {
     * splitter (S16) only helps uncompressed files. The fix every log
     * pipeline ships: pay the single-threaded read ONCE, land the rows as
     * `max_rows_per_file`-rotated zstd parts through the zeek sink, and
-    * every later scan gets partition-per-file parallelism (plus
+    * every later scan reads the parts in parallel, parts of a realistic
+    * size a task each ([[graft.zeek.v2.ZeekPlanning]]) (plus
     * projection/filter pushdown, COUNT(*) fast path, etc. as usual).
     *
     * Fidelity: the sink renders the exact inverse of the scanner and the

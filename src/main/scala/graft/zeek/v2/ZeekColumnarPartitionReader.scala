@@ -9,12 +9,15 @@ import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
 
 import graft.zeek._
 
-/** Per-file reader behind every Zeek data scan: open (+ decompress), parse
-  * and validate the header ([[ZeekLineScanner]]), then a single-pass
-  * tokenize / filter / write loop (reference: ZeekScanExecute,
-  * src/zeek_scanner.cpp:670-900). Rows are parsed straight into reused
-  * `OnHeapColumnVector`s and handed to Spark as [[ColumnarBatch]]es of up
-  * to 4096 rows, as the reference fills vectorized DuckDB chunks.
+/** The reader behind every Zeek data scan. It reads its partition's files
+  * in order, moving to the next when one ends. Each file is opened (+
+  * decompressed), its header parsed and validated ([[ZeekLineScanner.open]]),
+  * then read in a single-pass tokenize / filter / write loop (reference:
+  * ZeekScanExecute, src/zeek_scanner.cpp:670-900). Rows are parsed
+  * straight into `OnHeapColumnVector`s, reused across batches and files,
+  * and handed to Spark as [[ColumnarBatch]]es of up to 4096 rows, as the
+  * reference fills vectorized DuckDB chunks; one batch may hold rows of
+  * several files.
   *
   * Why: Spark's row-based DSv2 path costs two virtual calls plus an
   * UnsafeRow copy per row; at Zeek-scan rates (millions of rows/s/core)
@@ -23,17 +26,20 @@ import graft.zeek._
   * A scan with no projected column degenerates to zero-column batches
   * that only carry a row count.
   *
-  * Pushed filters run before any vector is written: the compiled
-  * predicate ([[ZeekFilterEval]]) decodes only the filter columns' token
-  * slices, and only a passing row is parsed into the vectors
+  * Per file: the projection, the `filename` value, the compiled pushed
+  * filters and the ignore_file_errors policy — a bad file is skipped and
+  * the partition's other files are still read. Pushed filters run
+  * before any vector is written: the compiled predicate
+  * ([[ZeekFilterEval]]) decodes only the filter columns' token slices,
+  * and only a passing row is parsed into the vectors
   * (src/zeek_scanner.cpp:718-771). A rejected row leaves nothing behind
   * in a vector (a string written to an `OnHeapColumnVector` is not
-  * reclaimed until its `reset()`). A pushed LIMIT counts passing rows.
-  * List columns fill the array vector's child with one run of elements
-  * per row.
+  * reclaimed until its `reset()`). A pushed LIMIT counts the partition's
+  * passing rows, as a LocalLimit does. List columns fill the array
+  * vector's child with one run of elements per row.
   */
 final class ZeekColumnarPartitionReader(
-    spec: ZeekFileSpec,
+    specs: Seq[ZeekFileSpec],
     boundHeader: ZeekHeader,
     dataSchema: StructType,
     opts: ZeekOptions,
@@ -44,67 +50,59 @@ final class ZeekColumnarPartitionReader(
 
   private val BatchSize = 4096
 
-  private val scanner = new ZeekLineScanner(spec, opts, conf)
+  private val files = specs.iterator
+  /** the open file; null between files */
+  private var scanner: ZeekLineScanner = _
   private var proj: ZeekProjection = _
   private var cells: ZeekCells = _
-  private var initialized = false
-  private var finished = false
   private var emitted = 0L
 
   private val nReq = required.length
+  private val reqIndex = required.fieldNames.zipWithIndex.toMap
 
-  private var vectors: Array[OnHeapColumnVector] = _
-  private var batch: ColumnarBatch = _
+  private val vectors: Array[OnHeapColumnVector] =
+    required.fields.map(f => new OnHeapColumnVector(BatchSize, f.dataType))
+  private val batch = new ColumnarBatch(vectors.map(v => v: ColumnVector))
   /** elements written this batch into each list column's child vector */
   private val childUsed = new Array[Int](nReq)
 
-  /** the pushed filters compiled against this file; null when none */
+  /** the pushed filters compiled against the open file; null when none */
   private var predicate: ZeekFilterEval.Pred = _
 
-  private def init(): Unit = {
-    if (!scanner.init()) { finished = true; return }
-    proj = new ZeekProjection(spec, boundHeader, dataSchema, opts, required,
-      scanner.fileHeader)
-    cells = proj.cells
-    vectors = required.fields.map(f => new OnHeapColumnVector(BatchSize, f.dataType))
-    batch = new ColumnarBatch(vectors.map(v => v: ColumnVector))
-
-    if (pushed.nonEmpty) {
-      val reqIndex = required.fieldNames.zipWithIndex.toMap
-      predicate = ZeekFilterEval.compileAll(pushed.toSeq, name =>
-        reqIndex.get(name).filter(proj.listParsers(_) == null)
-          .map(c => ZeekFilterEval.Col(proj.srcIdx(c), proj.typeCodes(c))))
+  /** Open the next file that yields data; false when none is left. */
+  private def nextFile(): Boolean = {
+    while (files.hasNext) {
+      val spec = files.next()
+      ZeekLineScanner.open(spec, boundHeader, dataSchema, opts, required, conf) match {
+        case Some((s, p)) =>
+          scanner = s
+          proj = p
+          cells = p.cells
+          if (pushed.nonEmpty)
+            predicate = ZeekFilterEval.compileAll(pushed.toSeq, name =>
+              reqIndex.get(name).filter(p.listParsers(_) == null)
+                .map(c => ZeekFilterEval.Col(p.srcIdx(c), p.typeCodes(c))))
+          return true
+        case None =>
+      }
     }
+    false
   }
 
   override def next(): Boolean = {
-    if (finished) return false
-    if (!initialized) {
-      initialized = true
-      try init()
-      catch {
-        case e: Exception if opts.ignoreFileErrors =>
-          finished = true
-          close()
-          return false
-        case e: ZeekFormatException => throw e
-        case e: Exception =>
-          throw new ZeekFormatException(s"Failed to read Zeek log '${spec.path}': ${e.getMessage}")
-      }
-      if (finished) return false
-    }
-    if (limit >= 0 && emitted >= limit) { finished = true; close(); return false }
     var i = 0
     while (i < nReq) { vectors(i).reset(); childUsed(i) = 0; i += 1 }
     var n = 0
-    while (n < BatchSize && (limit < 0 || emitted < limit) && scanner.nextDataLine()) {
-      if (nReq == 0 || writeRow(n)) {
+    while (n < BatchSize && (limit < 0 || emitted < limit) &&
+        (scanner != null || nextFile())) {
+      if (!scanner.nextDataLine()) { scanner.close(); scanner = null }
+      else if (nReq == 0 || writeRow(n)) {
         n += 1
         emitted += 1
       }
     }
-    if (n == 0) { finished = true; close(); false }
-    else { batch.setNumRows(n); true }
+    batch.setNumRows(n)
+    n > 0
   }
 
   /** Tokenize the scanner's current line, test the pushed predicate on
@@ -174,7 +172,7 @@ final class ZeekColumnarPartitionReader(
   override def get(): ColumnarBatch = batch
 
   override def close(): Unit = {
-    scanner.close()
-    if (batch != null) { batch.close(); batch = null }
+    if (scanner != null) { scanner.close(); scanner = null }
+    batch.close()
   }
 }

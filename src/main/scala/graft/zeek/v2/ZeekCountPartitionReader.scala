@@ -8,14 +8,15 @@ import org.apache.spark.sql.types.StructType
 
 import graft.zeek._
 
-/** Reader for a pushed COUNT(*): counts the split's data lines (blank
-  * lines and directives skipped — identical line semantics to the data
-  * readers, via the same [[ZeekLineScanner]]) and emits ONE row with the
-  * count. Strict-mode schema validation and the ignore_file_errors
-  * policy behave exactly like a data scan: a mismatched file still
-  * errors a COUNT(*), and an ignored bad file contributes zero. */
+/** Reader for a pushed COUNT(*): counts the data lines of its
+  * partition's files (blank lines and directives skipped — identical line
+  * semantics to the data readers, via the same [[ZeekLineScanner]]) and
+  * emits ONE row with their sum. Strict-mode schema validation and the
+  * ignore_file_errors policy behave exactly like a data scan: a
+  * mismatched file still errors a COUNT(*), and an ignored bad file
+  * contributes zero. */
 final class ZeekCountPartitionReader(
-    spec: ZeekFileSpec,
+    specs: Seq[ZeekFileSpec],
     boundHeader: ZeekHeader,
     dataSchema: StructType,
     opts: ZeekOptions,
@@ -24,34 +25,24 @@ final class ZeekCountPartitionReader(
 
   private var done = false
   private var row: InternalRow = _
-  private val scanner = new ZeekLineScanner(spec, opts, conf)
 
   override def next(): Boolean = {
     if (done) return false
     done = true
     var n = 0L
-    val hasData =
-      try {
-        val ok = scanner.init()
-        if (ok) {
-          // validation only: per-file schema check / union mapping, with
-          // an empty projection (throws on mismatch exactly like a scan)
-          new ZeekProjection(spec, boundHeader, dataSchema, opts,
-            new StructType(), scanner.fileHeader)
+    specs.foreach { spec =>
+      // an empty projection: the per-file schema check only
+      ZeekLineScanner.open(spec, boundHeader, dataSchema, opts, new StructType(), conf)
+        .foreach { case (scanner, _) =>
+          try while (scanner.nextDataLine()) n += 1
+          finally scanner.close()
         }
-        ok
-      } catch {
-        case e: Exception if opts.ignoreFileErrors => false
-        case e: ZeekFormatException => throw e
-        case e: Exception =>
-          throw new ZeekFormatException(s"Failed to read Zeek log '${spec.path}': ${e.getMessage}")
-      }
-    if (hasData) while (scanner.nextDataLine()) n += 1
+    }
     row = new GenericInternalRow(Array.fill[Any](nCounts)(n))
     true
   }
 
   override def get(): InternalRow = row
 
-  override def close(): Unit = scanner.close()
+  override def close(): Unit = ()
 }

@@ -5,6 +5,8 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -12,22 +14,9 @@ import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.zeek._
-
-/** Hadoop Configuration is not Serializable; ship it to executors via
-  * Hadoop's own Writable serialization (standard connector pattern). */
-final class SerializableConf(@transient var value: Configuration) extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject()
-    value.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject()
-    value = new Configuration(false)
-    value.readFields(in)
-  }
-}
 
 /** Spark DataSource V2 for Zeek logs — `spark.read.format("zeek")`.
   *
@@ -37,10 +26,14 @@ final class SerializableConf(@transient var value: Configuration) extends Serial
   * filter pushdown, COUNT(*) fast path, `filename` virtual column,
   * gzip/zstd auto-detection, ignore_file_errors.
   *
-  * Scale model: one InputPartition per file (the reference's
-  * MaxThreads = #files, generalized to a multi-node cluster by Spark's
-  * scheduler — Zeek deployments rotate logs hourly, so a 100 TB corpus is
-  * tens of thousands of files scanned fully in parallel).
+  * Scale model: files are packed into input partitions by Spark's own
+  * file-scan rule ([[ZeekPlanning]]). The reference runs one thread per
+  * file (MaxThreads = #files); a large log still gets a task of its own
+  * (and a big plain one a task per byte range), while small files share
+  * one, so a directory of hourly rotations pays the fixed cost of a task
+  * once per partition instead of once per file. Executors read the Hadoop
+  * configuration from one broadcast ([[ZeekDataSource.broadcastConf]])
+  * rather than deserializing a copy in every task.
   */
 class ZeekDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "zeek"
@@ -94,6 +87,30 @@ object ZeekDataSource {
     val b = ZeekSchema.bind(paths, opts, conf)
     cache.synchronized(cache.put(key, (now, b)))
     b
+  }
+
+  private var confCache: (SparkContext, Map[String, String], Broadcast[SerializableConfiguration]) = _
+
+  /** A Hadoop configuration (by default the active session's) as one
+    * broadcast, shared by every Zeek reader and writer factory: an
+    * executor deserializes it once, not once per task (its ~1,100
+    * entries cost milliseconds per task to rebuild). The last broadcast
+    * is reused while the SparkContext is the same and the
+    * configuration's entries are equal; a replaced one is released by
+    * Spark's ContextCleaner once no plan holds it. */
+  def broadcastConf(conf: Configuration = SparkSession.active.sessionState.newHadoopConf())
+      : Broadcast[SerializableConfiguration] = {
+    val entries = conf.iterator().asScala.map(e => e.getKey -> e.getValue).toMap
+    val sc = SparkSession.active.sparkContext
+    synchronized {
+      val c = confCache
+      if (c != null && (c._1 eq sc) && c._2 == entries) c._3
+      else {
+        val b = sc.broadcast(new SerializableConfiguration(conf))
+        confCache = (sc, entries, b)
+        b
+      }
+    }
   }
 
   private def extractPaths(options: CaseInsensitiveStringMap): Seq[String] = {
@@ -204,32 +221,18 @@ class ZeekScanBuilder(bind: ZeekBind)
     * directory scan into a handful of file reads. The filter is still
     * residual, so Spark re-checks rows — pruning can never change
     * semantics. */
-  private def pruneFilesByFilename(b: ZeekBind): ZeekBind = {
-    if (!b.opts.filename || b.dataSchema.fieldNames.contains("filename")) return b
-    // a filter on any other column does not compile here
-    val filenameOnly = (name: String) =>
-      if (name == "filename") Some(ZeekFilterEval.Col(-2, ZeekTypes.TcString)) else None
-    val fnameFilters = pushed.flatMap(ZeekFilterEval.compile(_, filenameOnly))
-    if (fnameFilters.isEmpty) return b
-    val kept = b.files.filter { spec =>
-      val cells = ZeekCells.ofPath(ZeekIO.displayPath(spec.path))
-      fnameFilters.forall(_(cells, Array.emptyByteArray, 0))
-    }
-    b.copy(files = kept)
-  }
-
   override def build(): Scan = {
-    val pruned = pruneFilesByFilename(bind)
+    val pruned = bind.copy(files = ZeekPlanning.pruneByFilename(bind, pushed))
     if (countStars > 0) new ZeekCountScan(pruned, countStars)
     else new ZeekScan(pruned, required, pushed, limit)
   }
 }
 
-/** Scan for a pushed ungrouped COUNT(*): partitions are the same
-  * file/range splits as [[ZeekScan]], but each emits a single row with
-  * its count. Per-file schema validation and ignore_file_errors semantics
-  * are identical to a data scan (the reference errors on a mismatched
-  * file even for counts). */
+/** Scan for a pushed ungrouped COUNT(*): partitions are the same packed
+  * files and range splits as [[ZeekScan]], but each emits a single row
+  * with its count. Per-file schema validation and ignore_file_errors
+  * semantics are identical to a data scan (the reference errors on a
+  * mismatched file even for counts). */
 class ZeekCountScan(bind: ZeekBind, nCounts: Int) extends Scan with Batch {
   override def readSchema(): StructType =
     StructType((0 until nCounts).map(i =>
@@ -238,28 +241,28 @@ class ZeekCountScan(bind: ZeekBind, nCounts: Int) extends Scan with Batch {
   override def toBatch: Batch = this
   override def description(): String =
     s"ZeekCountScan files=${bind.files.size} pushed=[COUNT(*)]"
-  override def planInputPartitions(): Array[InputPartition] = ZeekPlanning.partitions(bind)
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = new SerializableConf(SparkSession.active.sessionState.newHadoopConf())
-    ZeekCountReaderFactory(bind.header, bind.dataSchema, bind.opts, conf, nCounts)
-  }
+  override def planInputPartitions(): Array[InputPartition] =
+    ZeekPlanning.partitions(bind.files, bind.opts.splitSize)
+  override def createReaderFactory(): PartitionReaderFactory =
+    ZeekCountReaderFactory(bind.header, bind.dataSchema, bind.opts,
+      ZeekDataSource.broadcastConf(), nCounts)
 }
 
 final case class ZeekCountReaderFactory(
     boundHeader: ZeekHeader,
     dataSchema: StructType,
     opts: ZeekOptions,
-    conf: SerializableConf,
+    conf: Broadcast[SerializableConfiguration],
     nCounts: Int) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.catalyst.InternalRow] =
-    new ZeekCountPartitionReader(partition.asInstanceOf[ZeekInputPartition].spec,
-      boundHeader, dataSchema, opts, conf.value, nCounts)
+    new ZeekCountPartitionReader(partition.asInstanceOf[ZeekInputPartition].specs,
+      boundHeader, dataSchema, opts, conf.value.value, nCounts)
 }
 
 class ZeekScan(bind: ZeekBind, required: StructType, pushed: Array[Filter],
     limit: Int = -1)
     extends Scan with Batch with SupportsReportStatistics
-    with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering {
+    with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
   /** Columnar even when a scan has no partitions (every file pruned, an
@@ -271,12 +274,12 @@ class ZeekScan(bind: ZeekBind, required: StructType, pushed: Array[Filter],
     * the other side is small, Spark's PartitionPruning rule plants a
     * DynamicPruning IN-filter and delivers the matching values here at
     * EXECUTION time — files outside the joined set never open. This is
-    * the v2 twin of the plan-time `pruneFilesByFilename`: that one needs
-    * the file set as literals in the query; this one gets it from DATA
-    * (an intel table, yesterday's manifest, a dimension of interesting
-    * hours). Only `filename` is offered, and only while it is the
-    * virtual column — a real data column named `filename` is row
-    * content, not the path identity. */
+    * the runtime twin of the plan-time filename pruning, through the
+    * same compiled predicate: that one needs the file set as literals in
+    * the query; this one gets it from DATA (an intel table, yesterday's
+    * manifest, a dimension of interesting hours). Only `filename` is
+    * offered, and only while it is the virtual column — a real data
+    * column named `filename` is row content, not the path identity. */
   override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
     if (bind.opts.filename && !bind.dataSchema.fieldNames.contains("filename"))
       Array(org.apache.spark.sql.connector.expressions.Expressions.column("filename"))
@@ -284,73 +287,37 @@ class ZeekScan(bind: ZeekBind, required: StructType, pushed: Array[Filter],
 
   @volatile private var runtimeBind: ZeekBind = bind
 
-  override def filter(predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit = {
-    // understand IN(filename, ...) and =(filename, lit); ignore anything
-    // else — runtime pruning is an optimization, the join re-checks rows
-    def stringValues(p: org.apache.spark.sql.connector.expressions.filter.Predicate): Option[Set[String]] = {
-      val children = p.children()
-      def isFilenameRef(e: org.apache.spark.sql.connector.expressions.Expression): Boolean = e match {
-        case r: org.apache.spark.sql.connector.expressions.NamedReference =>
-          r.fieldNames().sameElements(Array("filename"))
-        case _ => false
-      }
-      def lit(e: org.apache.spark.sql.connector.expressions.Expression): Option[String] = e match {
-        case l: org.apache.spark.sql.connector.expressions.Literal[_] if l.value != null =>
-          Some(l.value.toString)
-        case _ => None
-      }
-      p.name() match {
-        case "IN" if children.nonEmpty && isFilenameRef(children.head) =>
-          val vals = children.tail.map(lit)
-          if (vals.forall(_.isDefined)) Some(vals.flatten.toSet) else None
-        case "=" if children.length == 2 && isFilenameRef(children.head) =>
-          lit(children(1)).map(Set(_))
-        case "=" if children.length == 2 && isFilenameRef(children(1)) =>
-          lit(children.head).map(Set(_))
-        case _ => None
-      }
-    }
-    val allowedSets = predicates.flatMap(stringValues(_))
-    if (allowedSets.nonEmpty) {
-      val kept = runtimeBind.files.filter { spec =>
-        val display = ZeekIO.displayPath(spec.path)
-        allowedSets.forall(_.contains(display))
-      }
-      runtimeBind = runtimeBind.copy(files = kept)
-    }
-  }
+  /** A filter that does not compile over `filename` is ignored: runtime
+    * pruning is an optimization, the join re-checks rows. */
+  override def filter(filters: Array[Filter]): Unit =
+    runtimeBind = runtimeBind.copy(files = ZeekPlanning.pruneByFilename(runtimeBind, filters))
 
-  /** Size estimate = on-disk bytes × a decompression factor for
-    * compressed files — lets Catalyst/AQE make join-side decisions (e.g.
-    * broadcasting a small lookup log). Lengths come from the bind-time
-    * glob listing carried in each [[ZeekFileSpec]]: planning issues ZERO
-    * filesystem RPCs (asserted by ZeekPlanTimeFsSpec). */
+  /** Size estimate = the planner's per-file estimate
+    * ([[ZeekPlanning.estimatedSize]]) summed — lets Catalyst/AQE make
+    * join-side decisions (e.g. broadcasting a small lookup log). Lengths
+    * come from the bind-time glob listing carried in each
+    * [[ZeekFileSpec]]: planning issues ZERO filesystem RPCs (asserted by
+    * ZeekPlanTimeFsSpec). */
   override def estimateStatistics(): Statistics = new Statistics {
-    private val bytes: Long = bind.files.map { f =>
-      val len = math.max(f.length, 0L)
-      val name = f.path.toLowerCase
-      if (name.endsWith(".gz") || name.endsWith(".zst")) len * 6 else len
-    }.sum
+    private val bytes: Long = bind.files.map(ZeekPlanning.estimatedSize).sum
     override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.of(bytes)
     override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
   }
   override def description(): String =
     s"ZeekScan files=${bind.files.size} required=[${required.fieldNames.mkString(",")}] pushed=[${pushed.mkString(",")}]"
 
-  /** One partition per file — the reference's MaxThreads = #files model
-    * (src/include/zeek_reader.hpp:120-122) mapped onto Spark's scheduler —
-    * plus byte-range splits for large uncompressed files (beyond the
-    * reference: a single huge plain log no longer serializes the scan).
+  /** The (pruned) files packed by Spark's file-scan rule, plus byte-range
+    * splits of large uncompressed files (beyond the reference: a single
+    * huge plain log no longer serializes the scan) — see [[ZeekPlanning]].
     * Compression is judged by extension here; a mis-named compressed file
     * is caught by the reader's magic-byte sniff (start-0 split reads the
     * whole file, other splits yield 0 rows). */
   override def planInputPartitions(): Array[InputPartition] =
-    ZeekPlanning.partitions(runtimeBind)
+    ZeekPlanning.partitions(runtimeBind.files, bind.opts.splitSize)
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = new SerializableConf(SparkSession.active.sessionState.newHadoopConf())
-    ZeekPartitionReaderFactory(bind.header, bind.dataSchema, bind.opts, required, pushed, conf, limit)
-  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    ZeekPartitionReaderFactory(bind.header, bind.dataSchema, bind.opts, required, pushed,
+      ZeekDataSource.broadcastConf(), limit)
 
   /** Streaming read: each trigger re-globs the pattern; new files become
     * the micro-batch's partitions (Zeek's hourly-rotation model). */
@@ -359,40 +326,105 @@ class ZeekScan(bind: ZeekBind, required: StructType, pushed: Array[Filter],
       SparkSession.active.sessionState.newHadoopConf())
 }
 
-final case class ZeekInputPartition(spec: ZeekFileSpec) extends InputPartition
+/** The files one task reads, in path order: several whole files, or one
+  * byte range of a split file. */
+final case class ZeekInputPartition(specs: Seq[ZeekFileSpec]) extends InputPartition
 
-/** One partition per file — the reference's MaxThreads = #files model —
-  * plus byte-range splits of large uncompressed files, computed purely
-  * from bind-time lengths (no filesystem RPCs at plan time). */
+/** Input partitions of a Zeek scan, computed purely from bind-time
+  * lengths (no filesystem RPCs at plan time).
+  *
+  * Whole files are packed the way Spark packs a file scan
+  * (`FilePartition.maxSplitBytes` / `getFilePartitions`): each file costs
+  * its [[estimatedSize]] plus `spark.sql.files.openCostInBytes`, and a
+  * partition closes when the next file would take it past
+  * `min(maxPartitionBytes, max(openCost, total / minPartitionNum))`,
+  * `minPartitionNum` defaulting to the default parallelism. A log of
+  * tens of MB therefore still gets a task of its own — the reference's
+  * one thread per file — while 150 tiny rotations share a handful of
+  * tasks. Unlike Spark, files are walked in path order, not by size, so
+  * a scan's row order stays the files' order. A plain file larger than
+  * `split_size` is cut into byte ranges, each its own partition. */
 object ZeekPlanning {
-  def partitions(bind: ZeekBind): Array[InputPartition] = {
-    val split = bind.opts.splitSize
-    bind.files.flatMap { spec =>
-      val lower = spec.path.toLowerCase
-      val compressedExt = lower.endsWith(".gz") || lower.endsWith(".zst")
+  /** A file's bytes as the planner and `estimateStatistics` see them: the
+    * bind-time on-disk length, times 6 for a compressed extension (its
+    * decompressed size); 0 when the length is unknown. */
+  def estimatedSize(spec: ZeekFileSpec): Long = {
+    val len = math.max(spec.length, 0L)
+    if (compressedExt(spec.path)) len * 6 else len
+  }
+
+  private def compressedExt(path: String): Boolean = {
+    val lower = path.toLowerCase
+    lower.endsWith(".gz") || lower.endsWith(".zst")
+  }
+
+  /** `files` in order as packed partitions; `split` <= 0 cuts no file. */
+  def partitions(files: Seq[ZeekFileSpec], split: Long): Array[InputPartition] = {
+    val sqlConf = SparkSession.active.sessionState.conf
+    val openCost = sqlConf.filesOpenCostInBytes
+    val minPartitionNum = sqlConf.filesMinPartitionNum
+      .getOrElse(SparkSession.active.sparkContext.defaultParallelism)
+    val total = files.map(estimatedSize(_) + openCost).sum
+    val maxSplit = math.min(sqlConf.filesMaxPartitionBytes, math.max(openCost, total / minPartitionNum))
+
+    val out = Array.newBuilder[InputPartition]
+    val current = scala.collection.mutable.ArrayBuffer.empty[ZeekFileSpec]
+    var currentSize = 0L
+    def closePartition(): Unit = if (current.nonEmpty) {
+      out += ZeekInputPartition(current.toList)
+      current.clear()
+      currentSize = 0L
+    }
+    files.foreach { spec =>
       // bind-time length; -1 (unknown) disables splitting — no FS RPCs here
-      val size = if (compressedExt || split <= 0) -1L else spec.length
-      if (size > split) {
-        val n = ((size + split - 1) / split).toInt
-        (0 until n).map { i =>
-          ZeekInputPartition(spec.copy(start = i * split,
-            end = if (i == n - 1) -1L else (i + 1) * split)): InputPartition
+      val len = if (compressedExt(spec.path)) -1L else spec.length
+      if (split > 0 && len > split) {
+        closePartition()
+        val n = ((len + split - 1) / split).toInt
+        (0 until n).foreach { i =>
+          out += ZeekInputPartition(Seq(spec.copy(start = i * split,
+            end = if (i == n - 1) -1L else (i + 1) * split)))
         }
-      } else Seq(ZeekInputPartition(spec): InputPartition)
-    }.toArray
+      } else {
+        val size = estimatedSize(spec)
+        if (currentSize + size > maxSplit) closePartition()
+        current += spec
+        currentSize += size + openCost
+      }
+    }
+    closePartition()
+    out.result()
+  }
+
+  /** The files of `bind` whose display path passes every filter in
+    * `filters` that references only the `filename` virtual column,
+    * through the same compiled predicate ([[ZeekFilterEval]]) the reader
+    * tests rows with; other filters do not compile here and prune
+    * nothing. */
+  def pruneByFilename(bind: ZeekBind, filters: Array[Filter]): Seq[ZeekFileSpec] = {
+    if (!bind.opts.filename || bind.dataSchema.fieldNames.contains("filename")) return bind.files
+    val filenameOnly = (name: String) =>
+      if (name == "filename") Some(ZeekFilterEval.Col(-2, ZeekTypes.TcString)) else None
+    val fnameFilters = filters.flatMap(ZeekFilterEval.compile(_, filenameOnly))
+    if (fnameFilters.isEmpty) return bind.files
+    bind.files.filter { spec =>
+      val cells = ZeekCells.ofPath(ZeekIO.displayPath(spec.path))
+      fnameFilters.forall(_(cells, Array.emptyByteArray, 0))
+    }
   }
 }
 
 /** Every data scan, batch or micro-batch, reads through the one
   * [[ZeekColumnarPartitionReader]]; only a pushed COUNT(*) has its own
-  * reader ([[ZeekCountReaderFactory]]). */
+  * reader ([[ZeekCountReaderFactory]]). The Hadoop configuration travels
+  * as a broadcast, so the factory itself stays a few KB. */
 final case class ZeekPartitionReaderFactory(
     boundHeader: ZeekHeader,
     dataSchema: StructType,
     opts: ZeekOptions,
     required: StructType,
     pushed: Array[Filter],
-    conf: SerializableConf,
+    conf: Broadcast[SerializableConfiguration],
     limit: Int = -1) extends PartitionReaderFactory {
 
   override def supportColumnarReads(partition: InputPartition): Boolean = true
@@ -401,6 +433,6 @@ final case class ZeekPartitionReaderFactory(
     throw new UnsupportedOperationException("Zeek data scans are columnar")
 
   override def createColumnarReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    new ZeekColumnarPartitionReader(partition.asInstanceOf[ZeekInputPartition].spec,
-      boundHeader, dataSchema, opts, required, pushed, conf.value, limit)
+    new ZeekColumnarPartitionReader(partition.asInstanceOf[ZeekInputPartition].specs,
+      boundHeader, dataSchema, opts, required, pushed, conf.value.value, limit)
 }

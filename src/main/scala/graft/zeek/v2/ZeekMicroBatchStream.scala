@@ -96,7 +96,8 @@ object ZeekOffset {
 
 /** Micro-batch streaming over a Zeek log directory: each trigger lists
   * the pattern (through a dir-mtime-keyed cache — see `currentFiles`)
-  * and plans one partition per newly-appeared file. Schema is fixed at
+  * and packs the newly-appeared files into partitions as a batch scan
+  * does ([[ZeekPlanning]]). Schema is fixed at
   * stream start (the bind); new files are validated against it
   * per-partition exactly like the batch path (strict) or mapped by name
   * (union_by_name). */
@@ -370,15 +371,15 @@ class ZeekMicroBatchStream(
     // vanishes and reappears below the window merely re-warns)
     listedBefore.clear()
     listedBefore ++= listed.map(_.path)
-    listed
+    // packed like a batch scan's files; a streamed file is never cut
+    ZeekPlanning.partitions(listed
       .filter(f => e.processed(f.path, f.mtime) && !s.processed(f.path, f.mtime))
-      .map(f => ZeekInputPartition(ZeekFileSpec(f.path, None, length = f.length)): InputPartition)
-      .toArray
+      .map(f => ZeekFileSpec(f.path, None, length = f.length)), split = 0L)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
     ZeekPartitionReaderFactory(bind.header, bind.dataSchema, bind.opts, required, pushed,
-      new SerializableConf(conf))
+      ZeekDataSource.broadcastConf(conf))
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()

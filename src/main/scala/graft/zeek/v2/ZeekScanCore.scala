@@ -141,6 +141,35 @@ final class ZeekLineScanner(spec: ZeekFileSpec, opts: ZeekOptions,
   }
 }
 
+object ZeekLineScanner {
+  /** Open `spec` for a partition reader: its scanner, positioned before
+    * the first data line, and its projection of `required`, which
+    * validates the file's header against the bind. None when the file
+    * yields no data here — an empty range, or any error under
+    * ignore_file_errors, so the reader goes on with its next file.
+    * Without that option an error fails the scan naming the file (a
+    * partition reads several). */
+  def open(spec: ZeekFileSpec, boundHeader: ZeekHeader, dataSchema: StructType,
+      opts: ZeekOptions, required: StructType,
+      conf: Configuration): Option[(ZeekLineScanner, ZeekProjection)] = {
+    val scanner = new ZeekLineScanner(spec, opts, conf)
+    try {
+      if (!scanner.init()) None
+      else Some((scanner, new ZeekProjection(spec, boundHeader, dataSchema, opts, required,
+        scanner.fileHeader)))
+    } catch {
+      case e: Exception =>
+        scanner.close()
+        e match {
+          case _ if opts.ignoreFileErrors => None
+          case z: ZeekFormatException if z.getMessage.contains(spec.path) => throw z
+          case _ =>
+            throw new ZeekFormatException(s"Failed to read Zeek log '${spec.path}': ${e.getMessage}")
+        }
+    }
+  }
+}
+
 /** A tokenized line's cells as the vector writes, the pushed-filter leaves
   * and `parseCol` read them: the reused token offsets, the file's NULL
   * markers, the display path that the `filename` column reads, and the

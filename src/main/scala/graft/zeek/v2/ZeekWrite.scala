@@ -5,10 +5,12 @@ import java.nio.charset.StandardCharsets
 import java.util.zip.GZIPOutputStream
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
 import graft.zeek._
 
@@ -62,8 +64,7 @@ class ZeekWriteBuilder(info: LogicalWriteInfo, dir: String,
       case None    => Long.MaxValue
     }
 
-  private def conf = new SerializableConf(
-    org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf())
+  private def conf = ZeekDataSource.broadcastConf()
 
   override def build(): Write = new Write {
     override def toBatch: BatchWrite =
@@ -97,14 +98,14 @@ class ZeekWriteBuilder(info: LogicalWriteInfo, dir: String,
 }
 
 class ZeekStreamingWrite(schema: StructType, dir: String, pathName: String,
-    codec: String, maxRowsPerFile: Long, qid: String, conf: SerializableConf)
+    codec: String, maxRowsPerFile: Long, qid: String, conf: Broadcast[SerializableConfiguration])
     extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
 
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory = {
     ZeekWriteCore.columns(schema) // validate on the driver
     val dirPath = new Path(dir)
-    dirPath.getFileSystem(conf.value).mkdirs(dirPath)
+    dirPath.getFileSystem(conf.value.value).mkdirs(dirPath)
     ZeekStreamingWriterFactory(schema, dir, pathName, codec, maxRowsPerFile, qid, conf)
   }
 
@@ -124,7 +125,7 @@ class ZeekStreamingWrite(schema: StructType, dir: String, pathName: String,
         paths.split(',').iterator.map(p => new Path(p).getName)
     }.flatten.toSet
     val dirPath = new Path(dir)
-    val fs = dirPath.getFileSystem(conf.value)
+    val fs = dirPath.getFileSystem(conf.value.value)
     val epochPrefix = f"part-q$qid-e$epochId%05d-"
     val stale = fs.globStatus(new Path(dirPath, epochPrefix + "*"))
     if (stale != null)
@@ -137,7 +138,7 @@ class ZeekStreamingWrite(schema: StructType, dir: String, pathName: String,
     // clear only THIS query's + epoch's temps — a concurrent writer's
     // in-progress files (or a racing restart's) must not be clobbered
     val dirPath = new Path(dir)
-    val fs = dirPath.getFileSystem(conf.value)
+    val fs = dirPath.getFileSystem(conf.value.value)
     val epochPrefix = f".zeek-part-q$qid-e$epochId%05d-"
     val temps = fs.globStatus(new Path(dirPath, epochPrefix + "*"))
     if (temps != null) temps.foreach(s => fs.delete(s.getPath, false))
@@ -146,7 +147,7 @@ class ZeekStreamingWrite(schema: StructType, dir: String, pathName: String,
 
 final case class ZeekStreamingWriterFactory(schema: StructType, dir: String,
     pathName: String, codec: String, maxRowsPerFile: Long, qid: String,
-    conf: SerializableConf)
+    conf: Broadcast[SerializableConfiguration])
     extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
       : DataWriter[InternalRow] =
@@ -156,12 +157,12 @@ final case class ZeekStreamingWriterFactory(schema: StructType, dir: String,
 
 class ZeekBatchWrite(schema: StructType, dir: String, pathName: String,
     codec: String, truncateFirst: Boolean, maxRowsPerFile: Long,
-    conf: SerializableConf) extends BatchWrite {
+    conf: Broadcast[SerializableConfiguration]) extends BatchWrite {
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
     ZeekWriteCore.columns(schema) // validate renderability on the driver, not mid-task
     val dirPath = new Path(dir)
-    val fs = dirPath.getFileSystem(conf.value)
+    val fs = dirPath.getFileSystem(conf.value.value)
     if (truncateFirst && fs.exists(dirPath)) {
       // overwrite: drop previous log part-files (ours or not), keep the dir
       fs.listStatus(dirPath).filterNot(_.isDirectory)
@@ -193,7 +194,7 @@ class ZeekBatchWrite(schema: StructType, dir: String, pathName: String,
           n.endsWith(".log") || n.endsWith(".log.gz") || n.endsWith(".log.zst")
         }
     existing.headOption.foreach { s =>
-      val in = ZeekIO.open(s.getPath.toString, conf.value)
+      val in = ZeekIO.open(s.getPath.toString, conf.value.value)
       val header = try ZeekHeader.parseHeaderOnly(in) finally in.close()
       val cols = ZeekWriteCore.columns(schema)
       if (header.fields != cols.map(_.name).toSeq || header.types != cols.map(_.zeekType).toSeq)
@@ -212,7 +213,7 @@ class ZeekBatchWrite(schema: StructType, dir: String, pathName: String,
     // best effort: clear THIS job's in-progress temps (batch temp names
     // embed the job tag) — never a concurrent job's
     val dirPath = new Path(dir)
-    val fs = dirPath.getFileSystem(conf.value)
+    val fs = dirPath.getFileSystem(conf.value.value)
     if (fs.exists(dirPath))
       fs.listStatus(dirPath).filter { s =>
         val n = s.getPath.getName
@@ -225,7 +226,7 @@ final case class ZeekTaskCommit(path: String) extends WriterCommitMessage
 
 final case class ZeekWriterFactory(schema: StructType, dir: String,
     pathName: String, codec: String, jobTag: String, maxRowsPerFile: Long,
-    conf: SerializableConf) extends DataWriterFactory {
+    conf: Broadcast[SerializableConfiguration]) extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new ZeekDataWriter(schema, dir, pathName, codec, partitionId, taskId, conf,
       jobTag = jobTag, maxRowsPerFile = maxRowsPerFile)
@@ -233,7 +234,7 @@ final case class ZeekWriterFactory(schema: StructType, dir: String,
 
 class ZeekDataWriter(schema: StructType, dir: String, pathName: String,
     codec: String, partitionId: Int, taskId: Long,
-    conf: SerializableConf, epoch: Option[Long] = None,
+    conf: Broadcast[SerializableConfiguration], epoch: Option[Long] = None,
     jobTag: String = "", streamTag: String = "",
     maxRowsPerFile: Long = Long.MaxValue)
     extends DataWriter[InternalRow] {
@@ -261,7 +262,7 @@ class ZeekDataWriter(schema: StructType, dir: String, pathName: String,
     }
   }
 
-  private val fs = new Path(dir).getFileSystem(conf.value)
+  private val fs = new Path(dir).getFileSystem(conf.value.value)
 
   private var out: OutputStream = _
   private var roll = 0

@@ -127,15 +127,15 @@ class PqKernelSpec extends AnyFunSuite {
 
   private def lit(v: Array[Float]) =
     Literal.create(v, ArrayType(FloatType, containsNull = false))
-  private def ints(a: Any): Seq[Int] = a.asInstanceOf[ArrayData].toIntArray.toSeq
-  private def longs(a: Any): Seq[Long] = a.asInstanceOf[ArrayData].toLongArray.toSeq
+  private def ints(a: Any): Seq[Int] = a.asInstanceOf[ArrayData].toIntArray().toSeq
+  private def longs(a: Any): Seq[Long] = a.asInstanceOf[ArrayData].toLongArray().toSeq
   private def nestedL(a: Any): Seq[Seq[Long]] = {
     val arr = a.asInstanceOf[ArrayData]
-    (0 until arr.numElements()).map(i => arr.getArray(i).toLongArray.toSeq)
+    (0 until arr.numElements()).map(i => arr.getArray(i).toLongArray().toSeq)
   }
   private def nestedD(a: Any): Seq[Seq[Double]] = {
     val arr = a.asInstanceOf[ArrayData]
-    (0 until arr.numElements()).map(i => arr.getArray(i).toDoubleArray.toSeq)
+    (0 until arr.numElements()).map(i => arr.getArray(i).toDoubleArray().toSeq)
   }
 
   // ---- kernel equivalence (interpreted eval) ---------------------------

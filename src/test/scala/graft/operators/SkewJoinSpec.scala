@@ -22,7 +22,7 @@ class SkewJoinSpec extends AnyFunSuite {
     assert(plain.length == 10001)
 
     // the hot key's rows really spread over multiple salt buckets
-    val spread = left.withColumn("__salt", pmod(hash(left.columns.map(col): _*), lit(8)))
+    val spread = left.withColumn("__salt", pmod(hash(left.columns.toIndexedSeq.map(col): _*), lit(8)))
       .filter($"k" === 1L).select("__salt").distinct().count()
     assert(spread > 4, s"salt spread only $spread buckets")
   }

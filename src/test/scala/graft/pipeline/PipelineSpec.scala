@@ -866,7 +866,7 @@ class PipelineSpec extends AnyFunSuite {
   test("frame sampling: stride-4 sample sizes match the stub layout") {
     val media = Multimodal.fromDocuments(spark, docs)
     val sampled = Multimodal.frameSample(media, 4)
-    val perVideo = sampled.join(media.toDF.select(col("media_id"), col("kind"), length(col("content")).as("len")), "media_id")
+    val perVideo = sampled.join(media.toDF().select(col("media_id"), col("kind"), length(col("content")).as("len")), "media_id")
       .filter(col("kind") === "video")
       .groupBy("media_id", "len").agg(count(lit(1)).as("n")).collect()
     perVideo.foreach { r =>

@@ -140,8 +140,10 @@ class ZeekDataSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val zeekScans = scans(joined.queryExecution.executedPlan)
       .map(_.scan).collect { case z: graft.zeek.v2.ZeekScan => z }
     assert(zeekScans.nonEmpty, joined.queryExecution.executedPlan.toString.take(3000))
-    assert(zeekScans.head.planInputPartitions().length == 1,
-      s"expected runtime pruning to 1 file, got ${zeekScans.head.planInputPartitions().length}:\n" +
+    val planned = zeekScans.head.planInputPartitions().toSeq
+      .map(_.asInstanceOf[graft.zeek.v2.ZeekInputPartition].specs.map(_.path.split('/').last))
+    assert(planned == Seq(Seq("b.log")),
+      s"expected runtime pruning to b.log, got $planned:\n" +
         joined.queryExecution.executedPlan.toString.take(3000))
   }
 

@@ -49,6 +49,14 @@ object ZeekFixtures {
 
   def row(vals: String*): String = vals.mkString("\t") + "\n"
 
+  /** The files each input partition of `df`'s Zeek scans reads, by base
+    * name, in planned order. */
+  def plannedFiles(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] =
+    df.queryExecution.sparkPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }.flatMap(_.inputPartitions).map(
+      _.asInstanceOf[graft.zeek.v2.ZeekInputPartition].specs.map(_.path.split('/').last))
+
   /** conn-like fixture exercising every scalar type + lists. */
   val connFields = Seq("ts", "uid", "id.orig_h", "id.orig_p", "id.resp_h", "id.resp_p",
     "proto", "duration", "orig_bytes", "pkts", "local_orig", "score", "tags", "rtts")

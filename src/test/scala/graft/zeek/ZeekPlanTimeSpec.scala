@@ -133,6 +133,7 @@ class ZeekPlanTimeSpec extends AnyFunSuite {
       case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => s
     }
     assert(scans.map(_.inputPartitions.length) == Seq(1), df.queryExecution.sparkPlan.toString)
+    assert(ZeekFixtures.plannedFiles(df) == Seq(Seq("b.log")), df.queryExecution.sparkPlan.toString)
     assert(df.collect().map(_.getString(1)).toSeq == Seq("b"))
   }
 

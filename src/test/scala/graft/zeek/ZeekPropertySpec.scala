@@ -32,7 +32,7 @@ class ZeekPropertySpec extends AnyFunSuite {
       case "double" => Gen.choose(-1e6, 1e6).map(d => f"$d%.4f")
       case "bool"  => Gen.oneOf("T", "F", "true", "false", "x")
       case "time" | "interval" => Gen.choose(0L, 2000000000L).flatMap(s =>
-        Gen.choose(0, 999999).map(us => s + "." + f"$us%06d"))
+        Gen.choose(0, 999999).map(us => f"$s%d.$us%06d"))
       case "port"  => Gen.choose(0, 70000).map(_.toString) // some out of range
       case t if t.startsWith("vector[") || t.startsWith("set[") =>
         val inner = ZeekTypes.innerType(t)

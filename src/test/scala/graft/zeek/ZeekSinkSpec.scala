@@ -350,12 +350,12 @@ class ZeekSinkSpec extends AnyFunSuite {
     val otherEpoch = mk("part-qaabbccdd-e00004-p00001.log") // other epochs untouched
     val otherQuery = mk("part-q11223344-e00005-p00007.log") // another run's namespace
 
-    import graft.zeek.v2.{SerializableConf, ZeekStreamingWrite, ZeekTaskCommit}
+    import graft.zeek.v2.{ZeekDataSource, ZeekStreamingWrite, ZeekTaskCommit}
     val w = new ZeekStreamingWrite(
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("s", org.apache.spark.sql.types.StringType))),
       out.toString, "t", "none", Long.MaxValue, "aabbccdd",
-      new SerializableConf(spark.sessionState.newHadoopConf()))
+      ZeekDataSource.broadcastConf(spark.sessionState.newHadoopConf()))
     w.commit(5L, Array(ZeekTaskCommit(kept.getPath), ZeekTaskCommit("")))
 
     assert(kept.exists, "re-committed file must survive")

@@ -119,8 +119,11 @@ class ZeekSplitSpec extends AnyFunSuite {
     assert(parts.size >= 7, s"expected >= 7 rotated parts, got $parts")
 
     val multi = spark.read.format("zeek").load(s"$out/*.log.zst")
-    // partition-per-file parallelism restored
-    assert(multi.rdd.getNumPartitions == parts.size)
+    // parallelism restored: every part planned exactly once, over more
+    // than the single gzip's one partition
+    val planned = ZeekFixtures.plannedFiles(multi)
+    assert(planned.flatten.sorted == parts.sorted, planned.toString)
+    assert(planned.length > 1, planned.toString)
     // identical content: same rows, same values, schema preserved
     assert(multi.schema == single.schema)
     assert(multi.count() == 20000)

@@ -204,8 +204,8 @@ class ZeekStreamingSpec extends AnyFunSuite {
       val e = stream.latestOffset(s, limit)
       if (e == s) done = true
       else {
-        batches += stream.planInputPartitions(s, e)
-          .map(_.asInstanceOf[ZeekInputPartition].spec.path.split('/').last).toSeq
+        batches += stream.planInputPartitions(s, e).toSeq
+          .flatMap(_.asInstanceOf[ZeekInputPartition].specs.map(_.path.split('/').last))
         s = e
       }
     }
@@ -283,8 +283,8 @@ class ZeekStreamingSpec extends AnyFunSuite {
       val e = stream.latestOffset(s, limit)
       if (e == s) done = true
       else {
-        batches += stream.planInputPartitions(s, e)
-          .map(_.asInstanceOf[ZeekInputPartition].spec.path.split('/').last).toSeq
+        batches += stream.planInputPartitions(s, e).toSeq
+          .flatMap(_.asInstanceOf[ZeekInputPartition].specs.map(_.path.split('/').last))
         s = e
       }
     }
