@@ -30,8 +30,16 @@ final class ByteLineReader(in: InputStream, initialSize: Int = 64 * 1024,
     * byte-range splits of uncompressed files). */
   def lineOffset: Long = bufBase + lineStart
 
+  /** True while positioned on a line: after a [[next]] that returned true. */
+  var onLine: Boolean = false
+
   /** Advance to the next line. Returns false at end of stream. */
   def next(): Boolean = {
+    onLine = advance()
+    onLine
+  }
+
+  private def advance(): Boolean = {
     while (true) {
       var i = dataStart + scanned
       while (i < dataEnd && buffer(i) != '\n') i += 1

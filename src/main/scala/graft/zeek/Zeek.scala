@@ -40,19 +40,13 @@ object Zeek {
   def recompress(spark: SparkSession, inPath: String, outDir: String,
       rowsPerFile: Long = 4000000L, codec: String = "zstd"): String = {
     val conf = spark.sessionState.newHadoopConf()
-    val pathName = {
-      val first = ZeekIO.expandGlob(inPath, conf).headOption
-      val fromHeader = first.flatMap { f =>
-        val in = ZeekIO.open(f, conf)
-        try ZeekHeader.parseHeaderOnly(in).path
-        finally in.close()
-      }
-      fromHeader.getOrElse {
+    val pathName = ZeekIO.expandGlob(inPath, conf).headOption
+      .flatMap(f => ZeekIO.header(f.path, conf).path)
+      .getOrElse {
         val base = new org.apache.hadoop.fs.Path(inPath).getName
         val dot = base.indexOf('.')
         if (dot > 0) base.substring(0, dot) else base
       }
-    }
     spark.read.format("zeek")
       .option("replace_periods", "false")
       .load(inPath)

@@ -1,8 +1,5 @@
 package graft.zeek
 
-import java.io.{BufferedReader, InputStream, InputStreamReader}
-import java.nio.charset.StandardCharsets
-
 /** Error raised for malformed Zeek logs / schema mismatches. Message
   * fragments intentionally mirror the reference extension's errors
   * (reference: test/sql/zeek.test:226-242 greps on substrings). */
@@ -70,84 +67,48 @@ object ZeekHeader {
     }
   }
 
-  /** Result of consuming the header region of a stream: the header plus
-    * the first data line (already read while probing for the end of the
-    * directives), if any. */
-  final case class ParseResult(header: ZeekHeader, pendingLine: Option[String])
+  /** Read the header directives from `lines`, leaving the reader on the
+    * first data line ([[ByteLineReader.onLine]]), or past the end when the
+    * file has none. Blank lines before the data are skipped and unknown
+    * directives ignored (reference: src/zeek_reader.cpp:50-118). Throws
+    * ZeekFormatException if `#fields`/`#types` are missing or their
+    * counts mismatch — which also covers non-Zeek input (e.g. a fake gzip
+    * payload or an empty file). */
+  def read(lines: ByteLineReader): ZeekHeader = {
+    var h = Default
+    while (lines.next() && (lines.lineEnd == lines.lineStart || lines.buf(lines.lineStart) == '#'))
+      if (lines.lineEnd > lines.lineStart) h = directive(h, lines.lineString)
+    if (h.fields.isEmpty)
+      throw new ZeekFormatException("not a valid Zeek log file: missing #fields directive")
+    if (h.types.isEmpty)
+      throw new ZeekFormatException("not a valid Zeek log file: missing #types directive")
+    if (h.fields.length != h.types.length)
+      throw new ZeekFormatException(
+        s"invalid Zeek header: #fields has ${h.fields.length} entries but #types has ${h.types.length}")
+    h
+  }
 
-  /** Incremental header parser: feed lines with `offer` until it returns
-    * false (first data line — NOT consumed into the header); then call
-    * `build()`. Unknown directives are ignored
-    * (reference: src/zeek_reader.cpp:50-118). */
-  final class Builder {
-    private var h = Default
-
-    /** Returns true while the line belongs to the header region. */
-    def offer(line0: String): Boolean = {
-      val line = if (line0.nonEmpty && line0.last == '\r') line0.dropRight(1) else line0
-      if (line.isEmpty) return true // blank lines before data: skip
-      if (line.charAt(0) != '#') return false
-      if (line.startsWith("#separator")) {
-        // the separator directive is itself delimited by a single space,
-        // since the real separator is not yet known (drop exactly one so a
-        // literal-space separator survives)
-        val v = line.substring("#separator".length).stripPrefix(" ")
-        h = h.copy(separator = unescapeSeparator(v))
-      } else {
-        val parts = splitOn(line, h.separator)
-        val directive = parts.head
-        def value: String = if (parts.length > 1) parts(1) else ""
-        directive match {
-          case "#set_separator" => h = h.copy(setSeparator = value)
-          case "#empty_field"   => h = h.copy(emptyField = value)
-          case "#unset_field"   => h = h.copy(unsetField = value)
-          case "#path"          => h = h.copy(path = Some(value))
-          case "#open"          => h = h.copy(open = Some(value))
-          case "#fields"        => h = h.copy(fields = parts.tail.toVector)
-          case "#types"         => h = h.copy(types = parts.tail.toVector)
-          case _                => // #close, unknown: ignore
-        }
+  /** `h` with one `#` directive line applied. */
+  private def directive(h: ZeekHeader, line: String): ZeekHeader =
+    if (line.startsWith("#separator")) {
+      // the separator directive is itself delimited by a single space,
+      // since the real separator is not yet known (drop exactly one so a
+      // literal-space separator survives)
+      h.copy(separator = unescapeSeparator(line.substring("#separator".length).stripPrefix(" ")))
+    } else {
+      val parts = splitOn(line, h.separator)
+      def value: String = if (parts.length > 1) parts(1) else ""
+      parts.head match {
+        case "#set_separator" => h.copy(setSeparator = value)
+        case "#empty_field"   => h.copy(emptyField = value)
+        case "#unset_field"   => h.copy(unsetField = value)
+        case "#path"          => h.copy(path = Some(value))
+        case "#open"          => h.copy(open = Some(value))
+        case "#fields"        => h.copy(fields = parts.tail.toVector)
+        case "#types"         => h.copy(types = parts.tail.toVector)
+        case _                => h // #close, unknown: ignore
       }
-      true
     }
-
-    /** Throws ZeekFormatException if `#fields`/`#types` are missing or
-      * their counts mismatch — which also covers non-Zeek input (e.g. a
-      * fake gzip payload or an empty file). */
-    def build(): ZeekHeader = {
-      if (h.fields.isEmpty)
-        throw new ZeekFormatException("not a valid Zeek log file: missing #fields directive")
-      if (h.types.isEmpty)
-        throw new ZeekFormatException("not a valid Zeek log file: missing #types directive")
-      if (h.fields.length != h.types.length)
-        throw new ZeekFormatException(
-          s"invalid Zeek header: #fields has ${h.fields.length} entries but #types has ${h.types.length}")
-      h
-    }
-  }
-
-  /** Parse header + pending first data line from an iterator of lines. */
-  def parse(lines: Iterator[String]): ParseResult = {
-    val b = new Builder
-    var pending: Option[String] = None
-    while (pending.isEmpty && lines.hasNext) {
-      val l = lines.next()
-      if (!b.offer(l)) pending = Some(if (l.nonEmpty && l.last == '\r') l.dropRight(1) else l)
-    }
-    ParseResult(b.build(), pending)
-  }
-
-  /** Parse just the header from an InputStream (used at schema-inference
-    * time, where the data rows are not needed). */
-  def parseHeaderOnly(in: InputStream): ZeekHeader = {
-    val br = new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8), 64 * 1024)
-    val it = new Iterator[String] {
-      private var nextLine: String = br.readLine()
-      def hasNext: Boolean = nextLine != null
-      def next(): String = { val l = nextLine; nextLine = br.readLine(); l }
-    }
-    parse(it).header
-  }
 
   private def splitOn(s: String, sep: Char): Array[String] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[String]

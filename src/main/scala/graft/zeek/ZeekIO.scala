@@ -5,7 +5,7 @@ import java.util.zip.GZIPInputStream
 
 import com.github.luben.zstd.ZstdInputStream
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FSDataInputStream, Path}
 
 /** File access + compression auto-detection for Zeek logs.
   *
@@ -16,54 +16,51 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * it (matching the reference's error path for data/error_test/fake_gzip).
   */
 object ZeekIO {
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** The one WARN line a file that ignore_file_errors lets a read pass over
+    * leaves: the file, what the read did about it, and the cause. */
+  def warnIgnored(path: String, cause: Throwable, action: String): Unit =
+    log.warn(s"ignore_file_errors: $action Zeek log '$path': ${cause.getMessage}")
+
+  /** An open Zeek file. `in` reads its decompressed bytes from the start;
+    * `raw` is the positioned file stream beneath it, which a ranged read
+    * of a plain file seeks once the header is read. Compressed streams
+    * have no meaningful byte offsets, so they are never range-split.
+    * Closing `in` closes `raw`. */
+  final class ZeekFile(val raw: FSDataInputStream, val in: InputStream, val compressed: Boolean)
+
+  /** The one opener: whole-file and ranged reads, headers and data. */
+  def openFile(path: String, conf: Configuration): ZeekFile = {
+    val p = new Path(path)
+    val raw = p.getFileSystem(conf).open(p)
+    val buffered = new BufferedInputStream(raw, 64 * 1024)
+    val in = decode(buffered)
+    new ZeekFile(raw, in, in ne buffered)
+  }
 
   /** Open a (possibly compressed) file as a decompressed stream. */
-  def open(path: String, conf: Configuration): InputStream =
-    openWithInfo(path, conf)._1
+  def open(path: String, conf: Configuration): InputStream = openFile(path, conf).in
 
-  /** Open + report whether the content was compressed (compressed streams
-    * have no meaningful byte offsets, so they are never range-split). */
-  def openWithInfo(path: String, conf: Configuration): (InputStream, Boolean) = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(conf)
-    val buffered = new BufferedInputStream(fs.open(p), 64 * 1024)
-    val wrapped = sniffAndWrap(buffered)
-    (wrapped, wrapped ne buffered)
-  }
-
-  /** Raw positioned stream + compression sniff for ranged reads. */
-  def openRaw(path: String, conf: Configuration): (org.apache.hadoop.fs.FSDataInputStream, Boolean) = {
-    val p = new Path(path)
-    val in = p.getFileSystem(conf).open(p)
-    val m = new Array[Byte](4)
-    var n = 0
-    var eof = false
-    while (n < 4 && !eof) {
-      val r = in.read(m, n, 4 - n)
-      if (r < 0) eof = true else n += r
-    }
-    val compressed =
-      (n >= 2 && (m(0) & 0xff) == 0x1f && (m(1) & 0xff) == 0x8b) ||
-      (n >= 4 && (m(0) & 0xff) == 0x28 && (m(1) & 0xff) == 0xb5 &&
-        (m(2) & 0xff) == 0x2f && (m(3) & 0xff) == 0xfd)
-    (in, compressed)
-  }
-
-  /** Detect gzip (1f 8b) / zstd (28 b5 2f fd) magic and wrap accordingly. */
-  def sniffAndWrap(in: BufferedInputStream): InputStream = {
+  /** `in` through the decompressor its first bytes announce: gzip (1f 8b)
+    * or zstd (28 b5 2f fd); `in` itself for anything else. */
+  private def decode(in: BufferedInputStream): InputStream = {
     in.mark(4)
-    val m = new Array[Int](4)
-    var n = 0
-    var eof = false
-    while (n < 4 && !eof) {
-      val b = in.read()
-      if (b < 0) eof = true else { m(n) = b; n += 1 }
-    }
+    val m = in.readNBytes(4)
     in.reset()
-    if (n >= 2 && m(0) == 0x1f && m(1) == 0x8b) new GZIPInputStream(in, 64 * 1024)
-    else if (n >= 4 && m(0) == 0x28 && m(1) == 0xb5 && m(2) == 0x2f && m(3) == 0xfd)
-      new ZstdInputStream(in)
+    def is(magic: Int*) = m.length >= magic.length &&
+      magic.indices.forall(i => (m(i) & 0xff) == magic(i))
+    if (is(0x1f, 0x8b)) new GZIPInputStream(in, 64 * 1024)
+    else if (is(0x28, 0xb5, 0x2f, 0xfd)) new ZstdInputStream(in)
     else in
+  }
+
+  /** The header of the file at `path`, read through the same opener and
+    * line reader as a scan. */
+  def header(path: String, conf: Configuration): ZeekHeader = {
+    val in = open(path, conf)
+    try ZeekHeader.read(new ByteLineReader(in))
+    finally in.close()
   }
 
   /** Glob-expansion result: one listed file with the metadata the rest of
@@ -73,13 +70,16 @@ object ZeekIO {
     * files=threads scale model). */
   final case class GlobFile(path: String, mtime: Long, length: Long)
 
-  /** Like [[expandGlob]] but returns full [[GlobFile]] metadata — the
-    * streaming source's watermark bookkeeping needs mtimes, and the batch
-    * planner needs lengths (split planning + size statistics).
+  /** Expand a glob (or plain path, or a directory's files) into
+    * [[GlobFile]]s sorted by path — the streaming source's watermark
+    * bookkeeping needs mtimes, and the batch planner needs lengths (split
+    * planning + size statistics). The sort keeps "first file"
+    * deterministic (reference: src/zeek_scanner.cpp:446-453); an empty
+    * result is the caller's error to raise.
     * Paths are fully-qualified URIs: `.getPath.toString` keeps scheme +
     * authority, where `.toUri.getPath` would strip "s3a://bucket" and
     * make later opens resolve against the default filesystem. */
-  def expandGlobMeta(pattern: String, conf: Configuration): Seq[GlobFile] = {
+  def expandGlob(pattern: String, conf: Configuration): Seq[GlobFile] = {
     val p = new Path(pattern)
     val fs = p.getFileSystem(conf)
     val statuses = Option(fs.globStatus(p)).getOrElse(Array.empty)
@@ -95,10 +95,6 @@ object ZeekIO {
     expanded.sortBy(_.path).toSeq
   }
 
-  /** (path, modificationTime) pairs — see [[expandGlobMeta]]. */
-  def expandGlobWithTimes(pattern: String, conf: Configuration): Seq[(String, Long)] =
-    expandGlobMeta(pattern, conf).map(f => (f.path, f.mtime))
-
   /** The `filename` virtual column's display form: local `file:` URIs
     * render as plain paths — matching the reference scanner's filename
     * output for local logs — while other schemes (s3a://bucket/…) keep
@@ -108,10 +104,4 @@ object ZeekIO {
     if (path.startsWith("file:"))
       try new Path(path).toUri.getPath catch { case _: Exception => path }
     else path
-
-  /** Expand a glob (or plain path) into lexicographically sorted file
-    * paths. Empty result is an error (reference: src/zeek_scanner.cpp:
-    * 446-453; sort at :453 keeps "first file" deterministic). */
-  def expandGlob(pattern: String, conf: Configuration): Seq[String] =
-    expandGlobWithTimes(pattern, conf).map(_._1)
 }

@@ -47,9 +47,7 @@ object ZeekJson {
     * TSV archive) for the same streams, and the TSV header is the
     * authoritative type source the JSON format lacks. */
   def typesFromAscii(spark: SparkSession, headerLogPath: String): Map[String, String] = {
-    val conf = spark.sessionState.newHadoopConf()
-    val in = ZeekIO.open(headerLogPath, conf)
-    val h = try ZeekHeader.parseHeaderOnly(in) finally in.close()
+    val h = ZeekIO.header(headerLogPath, spark.sessionState.newHadoopConf())
     h.fields.zip(h.types).toMap
   }
 

@@ -11,9 +11,6 @@ final case class ZeekOptions(
     inet: Boolean = true,
     unionByName: Boolean = false,
     ignoreFileErrors: Boolean = false,
-    /** byte-range split size for large UNCOMPRESSED files (compressed
-      * files are never split); ≤0 disables splitting */
-    splitSize: Long = 128L * 1024 * 1024,
     /** streaming only: mtime slack window (ms) behind the watermark in
       * which files are tracked by path identity — absorbs preserved-mtime
       * copies and clock skew between writers; see ZeekOffset */
@@ -35,23 +32,27 @@ final case class ZeekOptions(
     maxBytesPerTrigger: Option[Long] = None) extends Serializable
 
 object ZeekOptions {
+  /** Options from a reader's map. A value that is not a `true`/`false`
+    * (any case) for a boolean option, or not a number for a numeric one,
+    * fails naming the option and the value. */
   def fromMap(m: java.util.Map[String, String]): ZeekOptions = {
-    def b(k: String, dflt: Boolean): Boolean =
-      Option(m.get(k)).map(_.trim.toLowerCase == "true").getOrElse(dflt)
+    def opt[T](k: String)(parse: String => Option[T]): Option[T] =
+      Option(m.get(k)).map { v =>
+        parse(v.trim).getOrElse(throw new ZeekFormatException(
+          s"zeek option '$k' has an invalid value '$v'"))
+      }
+    def b(k: String): Option[Boolean] = opt(k)(_.toBooleanOption)
+    def n(k: String): Option[Long] = opt(k)(_.toLongOption)
     ZeekOptions(
-      filename = b("filename", dflt = false),
-      replacePeriods = b("replace_periods", dflt = true),
-      inet = b("inet", dflt = true),
-      unionByName = b("union_by_name", dflt = false),
-      ignoreFileErrors = b("ignore_file_errors", dflt = false),
-      splitSize = Option(m.get("split_size")).map(_.trim.toLong)
-        .getOrElse(128L * 1024 * 1024),
-      streamMtimeSlackMs = Option(m.get("stream_mtime_slack_ms")).map(_.trim.toLong)
-        .getOrElse(5L * 60 * 1000),
-      streamListingCache = Option(m.get("stream_listing_cache"))
-        .map(_.trim.toLowerCase == "true"),
-      maxFilesPerTrigger = Option(m.get("max_files_per_trigger")).map(_.trim.toInt),
-      maxBytesPerTrigger = Option(m.get("max_bytes_per_trigger")).map(_.trim.toLong))
+      filename = b("filename").getOrElse(false),
+      replacePeriods = b("replace_periods").getOrElse(true),
+      inet = b("inet").getOrElse(true),
+      unionByName = b("union_by_name").getOrElse(false),
+      ignoreFileErrors = b("ignore_file_errors").getOrElse(false),
+      streamMtimeSlackMs = n("stream_mtime_slack_ms").getOrElse(5L * 60 * 1000),
+      streamListingCache = b("stream_listing_cache"),
+      maxFilesPerTrigger = opt("max_files_per_trigger")(_.toIntOption),
+      maxBytesPerTrigger = n("max_bytes_per_trigger"))
   }
 }
 
@@ -94,7 +95,7 @@ final case class ZeekBind(
 object ZeekSchema {
 
   def bind(paths: Seq[String], opts: ZeekOptions, conf: Configuration): ZeekBind = {
-    val metas = paths.flatMap(p => ZeekIO.expandGlobMeta(p, conf))
+    val metas = paths.flatMap(p => ZeekIO.expandGlob(p, conf))
     val lengths = metas.map(m => m.path -> m.length).toMap
     val files = metas.map(_.path).distinct.sorted
     if (files.isEmpty)
@@ -103,12 +104,6 @@ object ZeekSchema {
     val b = if (opts.unionByName) bindUnion(files, lengths, opts, conf)
             else bindStrict(files, lengths, opts, conf)
     b.copy(patterns = paths)
-  }
-
-  private def parseHeader(path: String, conf: Configuration): ZeekHeader = {
-    val in = ZeekIO.open(path, conf)
-    try ZeekHeader.parseHeaderOnly(in)
-    finally in.close()
   }
 
   /** Headers of ALL files, read on a bounded thread pool, results in
@@ -126,7 +121,7 @@ object ZeekSchema {
   private def parseHeaders(files: Seq[String],
       conf: Configuration): Seq[Either[Exception, ZeekHeader]] = {
     def one(f: String): Either[Exception, ZeekHeader] =
-      try Right(parseHeader(f, conf))
+      try Right(ZeekIO.header(f, conf))
       catch { case e: Exception => Left(e) }
     if (files.lengthCompare(2) < 0) files.map(one)
     else {
@@ -155,9 +150,11 @@ object ZeekSchema {
     val it = files.iterator
     while (header == null && it.hasNext) {
       val f = it.next()
-      try header = parseHeader(f, conf)
+      try header = ZeekIO.header(f, conf)
       catch {
-        case e: Exception if opts.ignoreFileErrors => if (err == null) err = e
+        case e: Exception if opts.ignoreFileErrors =>
+          ZeekIO.warnIgnored(f, e, "skipped")
+          if (err == null) err = e
         case e: Exception =>
           throw new ZeekFormatException(s"Failed to read Zeek log '$f': ${e.getMessage}")
       }
@@ -176,7 +173,9 @@ object ZeekSchema {
       opts: ZeekOptions, conf: Configuration): ZeekBind = {
     val headers = files.zip(parseHeaders(files, conf)).map {
       case (_, Right(h)) => Some(h)
-      case (_, Left(_)) if opts.ignoreFileErrors => None
+      case (f, Left(e)) if opts.ignoreFileErrors =>
+        ZeekIO.warnIgnored(f, e, "skipped")
+        None
       case (f, Left(e)) =>
         // first failing file in sort order — same file and message the
         // serial loop reported (it just stopped reading there)

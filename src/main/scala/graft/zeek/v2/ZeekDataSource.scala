@@ -26,12 +26,12 @@ import graft.zeek._
   * filter pushdown, COUNT(*) fast path, `filename` virtual column,
   * gzip/zstd auto-detection, ignore_file_errors.
   *
-  * Scale model: files are packed into input partitions by Spark's own
-  * file-scan rule ([[ZeekPlanning]]). The reference runs one thread per
-  * file (MaxThreads = #files); a large log still gets a task of its own
-  * (and a big plain one a task per byte range), while small files share
-  * one, so a directory of hourly rotations pays the fixed cost of a task
-  * once per partition instead of once per file. Executors read the Hadoop
+  * Scale model: files are cut and packed into input partitions by Spark's
+  * own file-scan rule ([[ZeekPlanning]]). The reference runs one thread
+  * per file (MaxThreads = #files); a large log still gets a task of its
+  * own (and a plain one past Spark's split size a task per byte range),
+  * while small files share one, so a directory of hourly rotations pays
+  * the fixed cost of a task once per partition instead of once per file. Executors read the Hadoop
   * configuration from one broadcast ([[ZeekDataSource.broadcastConf]])
   * rather than deserializing a copy in every task.
   */
@@ -242,7 +242,7 @@ class ZeekCountScan(bind: ZeekBind, nCounts: Int) extends Scan with Batch {
   override def description(): String =
     s"ZeekCountScan files=${bind.files.size} pushed=[COUNT(*)]"
   override def planInputPartitions(): Array[InputPartition] =
-    ZeekPlanning.partitions(bind.files, bind.opts.splitSize)
+    ZeekPlanning.partitions(bind.files)
   override def createReaderFactory(): PartitionReaderFactory =
     ZeekCountReaderFactory(bind.header, bind.dataSchema, bind.opts,
       ZeekDataSource.broadcastConf(), nCounts)
@@ -306,14 +306,14 @@ class ZeekScan(bind: ZeekBind, required: StructType, pushed: Array[Filter],
   override def description(): String =
     s"ZeekScan files=${bind.files.size} required=[${required.fieldNames.mkString(",")}] pushed=[${pushed.mkString(",")}]"
 
-  /** The (pruned) files packed by Spark's file-scan rule, plus byte-range
-    * splits of large uncompressed files (beyond the reference: a single
-    * huge plain log no longer serializes the scan) — see [[ZeekPlanning]].
-    * Compression is judged by extension here; a mis-named compressed file
-    * is caught by the reader's magic-byte sniff (start-0 split reads the
-    * whole file, other splits yield 0 rows). */
+  /** The (pruned) files cut and packed by Spark's file-scan rule (beyond
+    * the reference: a single huge plain log no longer serializes the
+    * scan) — see [[ZeekPlanning]]. Compression is judged by extension
+    * here; a mis-named compressed file is caught by the reader's
+    * magic-byte sniff (start-0 split reads the whole file, other splits
+    * yield 0 rows). */
   override def planInputPartitions(): Array[InputPartition] =
-    ZeekPlanning.partitions(runtimeBind.files, bind.opts.splitSize)
+    ZeekPlanning.partitions(runtimeBind.files)
 
   override def createReaderFactory(): PartitionReaderFactory =
     ZeekPartitionReaderFactory(bind.header, bind.dataSchema, bind.opts, required, pushed,
@@ -326,31 +326,37 @@ class ZeekScan(bind: ZeekBind, required: StructType, pushed: Array[Filter],
       SparkSession.active.sessionState.newHadoopConf())
 }
 
-/** The files one task reads, in path order: several whole files, or one
-  * byte range of a split file. */
+/** The files one task reads, in path order: whole files and byte ranges
+  * of cut ones. */
 final case class ZeekInputPartition(specs: Seq[ZeekFileSpec]) extends InputPartition
 
-/** Input partitions of a Zeek scan, computed purely from bind-time
-  * lengths (no filesystem RPCs at plan time).
+/** Input partitions of a Zeek scan or micro-batch, computed purely from
+  * bind-time lengths (no filesystem RPCs at plan time) by Spark's own
+  * file-scan rule (`FilePartition.maxSplitBytes` / `getFilePartitions`):
   *
-  * Whole files are packed the way Spark packs a file scan
-  * (`FilePartition.maxSplitBytes` / `getFilePartitions`): each file costs
-  * its [[estimatedSize]] plus `spark.sql.files.openCostInBytes`, and a
-  * partition closes when the next file would take it past
-  * `min(maxPartitionBytes, max(openCost, total / minPartitionNum))`,
-  * `minPartitionNum` defaulting to the default parallelism. A log of
-  * tens of MB therefore still gets a task of its own — the reference's
-  * one thread per file — while 150 tiny rotations share a handful of
-  * tasks. Unlike Spark, files are walked in path order, not by size, so
-  * a scan's row order stays the files' order. A plain file larger than
-  * `split_size` is cut into byte ranges, each its own partition. */
+  *  - `maxSplit = min(maxPartitionBytes, max(openCost, total / minPartitionNum))`,
+  *    `total` summing each file's [[estimatedSize]] plus
+  *    `spark.sql.files.openCostInBytes`, `minPartitionNum` defaulting to
+  *    the default parallelism;
+  *  - a plain file longer than `maxSplit` is cut into `maxSplit` byte
+  *    ranges; a compressed one (by extension) is never cut;
+  *  - the pieces are packed next-fit: a partition closes when the next
+  *    piece would take it past `maxSplit`, and each piece adds its size
+  *    plus the open cost.
+  *
+  * A log of tens of MB therefore still gets a task of its own — the
+  * reference's one thread per file — while 150 tiny rotations share a
+  * handful of tasks. Unlike Spark, pieces are walked in path order, not by
+  * size, so a scan's row order stays the files' order. */
 object ZeekPlanning {
-  /** A file's bytes as the planner and `estimateStatistics` see them: the
-    * bind-time on-disk length, times 6 for a compressed extension (its
-    * decompressed size); 0 when the length is unknown. */
+  /** A file's or range's bytes as the planner and `estimateStatistics`
+    * see them: the bind-time on-disk length (or the range's share of it),
+    * times 6 for a compressed extension (its decompressed size); 0 when
+    * the length is unknown. */
   def estimatedSize(spec: ZeekFileSpec): Long = {
     val len = math.max(spec.length, 0L)
-    if (compressedExt(spec.path)) len * 6 else len
+    if (compressedExt(spec.path)) len * 6
+    else math.max((if (spec.end >= 0) spec.end else len) - spec.start, 0L)
   }
 
   private def compressedExt(path: String): Boolean = {
@@ -358,8 +364,8 @@ object ZeekPlanning {
     lower.endsWith(".gz") || lower.endsWith(".zst")
   }
 
-  /** `files` in order as packed partitions; `split` <= 0 cuts no file. */
-  def partitions(files: Seq[ZeekFileSpec], split: Long): Array[InputPartition] = {
+  /** `files` in order, cut and packed into partitions. */
+  def partitions(files: Seq[ZeekFileSpec]): Array[InputPartition] = {
     val sqlConf = SparkSession.active.sessionState.conf
     val openCost = sqlConf.filesOpenCostInBytes
     val minPartitionNum = sqlConf.filesMinPartitionNum
@@ -367,32 +373,27 @@ object ZeekPlanning {
     val total = files.map(estimatedSize(_) + openCost).sum
     val maxSplit = math.min(sqlConf.filesMaxPartitionBytes, math.max(openCost, total / minPartitionNum))
 
+    // bind-time length; -1 (unknown) cuts nothing — no FS RPCs here
+    val pieces = files.flatMap { spec =>
+      val len = if (compressedExt(spec.path)) -1L else spec.length
+      if (len <= maxSplit) Seq(spec)
+      else (0L until len by maxSplit).map(start =>
+        spec.copy(start = start, end = if (start + maxSplit >= len) -1L else start + maxSplit))
+    }
     val out = Array.newBuilder[InputPartition]
     val current = scala.collection.mutable.ArrayBuffer.empty[ZeekFileSpec]
     var currentSize = 0L
-    def closePartition(): Unit = if (current.nonEmpty) {
-      out += ZeekInputPartition(current.toList)
-      current.clear()
-      currentSize = 0L
-    }
-    files.foreach { spec =>
-      // bind-time length; -1 (unknown) disables splitting — no FS RPCs here
-      val len = if (compressedExt(spec.path)) -1L else spec.length
-      if (split > 0 && len > split) {
-        closePartition()
-        val n = ((len + split - 1) / split).toInt
-        (0 until n).foreach { i =>
-          out += ZeekInputPartition(Seq(spec.copy(start = i * split,
-            end = if (i == n - 1) -1L else (i + 1) * split)))
-        }
-      } else {
-        val size = estimatedSize(spec)
-        if (currentSize + size > maxSplit) closePartition()
-        current += spec
-        currentSize += size + openCost
+    pieces.foreach { piece =>
+      val size = estimatedSize(piece)
+      if (current.nonEmpty && currentSize + size > maxSplit) {
+        out += ZeekInputPartition(current.toList)
+        current.clear()
+        currentSize = 0L
       }
+      current += piece
+      currentSize += size + openCost
     }
-    closePartition()
+    if (current.nonEmpty) out += ZeekInputPartition(current.toList)
     out.result()
   }
 

@@ -96,8 +96,8 @@ object ZeekOffset {
 
 /** Micro-batch streaming over a Zeek log directory: each trigger lists
   * the pattern (through a dir-mtime-keyed cache — see `currentFiles`)
-  * and packs the newly-appeared files into partitions as a batch scan
-  * does ([[ZeekPlanning]]). Schema is fixed at
+  * and cuts and packs the newly-appeared files into partitions as a batch
+  * scan does ([[ZeekPlanning]]). Schema is fixed at
   * stream start (the bind); new files are validated against it
   * per-partition exactly like the batch path (strict) or mapped by name
   * (union_by_name). */
@@ -216,10 +216,10 @@ class ZeekMicroBatchStream(
       catch { case _: java.io.IOException => -1L } // missing dir: state -1
     }
 
-  // expandGlobMeta returns empty for an empty glob (no throw) — "no
+  // expandGlob returns empty for an empty glob (no throw) — "no
   // files yet" is a normal streaming state
   private def listNow(): Seq[ZeekIO.GlobFile] =
-    patterns.flatMap(ZeekIO.expandGlobMeta(_, conf)).distinct.sortBy(_.path)
+    patterns.flatMap(ZeekIO.expandGlob(_, conf)).distinct.sortBy(_.path)
 
   private def currentFiles(): Seq[ZeekIO.GlobFile] = watchDirs match {
     case None => listNow()
@@ -371,10 +371,10 @@ class ZeekMicroBatchStream(
     // vanishes and reappears below the window merely re-warns)
     listedBefore.clear()
     listedBefore ++= listed.map(_.path)
-    // packed like a batch scan's files; a streamed file is never cut
+    // cut and packed like a batch scan's files
     ZeekPlanning.partitions(listed
       .filter(f => e.processed(f.path, f.mtime) && !s.processed(f.path, f.mtime))
-      .map(f => ZeekFileSpec(f.path, None, length = f.length)), split = 0L)
+      .map(f => ZeekFileSpec(f.path, None, length = f.length)))
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

@@ -11,10 +11,10 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.zeek._
 
 /** Line-level scan state of the Zeek partition readers: open (+
-  * decompression sniff), incremental header parse, ranged-split
-  * positioning (a line belongs to the split containing its first byte),
-  * blank/mid-file-directive skipping, and the ignore_file_errors
-  * semantics for read errors.
+  * decompression sniff) and header read ([[ZeekIO.openFile]],
+  * [[ZeekHeader.read]]), ranged-split positioning (a line belongs to the
+  * split containing its first byte), blank/mid-file-directive skipping,
+  * and the ignore_file_errors semantics for read errors.
   *
   * Callers drive it as: `if (!init()) no data` then `while (nextDataLine())
   * use (buf, lineStart, lineEnd)`.
@@ -29,108 +29,66 @@ final class ZeekLineScanner(spec: ZeekFileSpec, opts: ZeekOptions,
 
   private var in: InputStream = _
   private var lines: ByteLineReader = _
-  private var pendingBytes: Array[Byte] = _
-  private var pendingOffset = 0L
+  /** the reader's current line is not yet returned by nextDataLine */
+  private var pending = false
   private var rangeEnd: Long = -1L // exclusive; -1 = unbounded
   private var done = false
 
-  /** Open the file and parse its header. Returns false when this split
-    * yields no data (compressed content under a ranged split, an empty
-    * tail, or — for the caller to arrange — errors under
-    * ignore_file_errors). Header/IO errors propagate to the caller, which
-    * applies the ignore_file_errors policy around init(). */
+  /** Open the file and read its header. Returns false when this split
+    * yields no data (compressed content under a ranged split, or an empty
+    * tail). Header/IO errors propagate to the caller, which applies the
+    * ignore_file_errors policy around init(). */
   def init(): Boolean = {
-    if (spec.start > 0) {
-      // ranged split of an uncompressed file: parse + validate the header
-      // from offset 0 first (cheap — a few KB) so an invalid or
-      // schema-mismatched file behaves exactly like the whole-file path;
-      // then seek to start-1 and discard the first (partial) line.
-      val (raw, compressed) = ZeekIO.openRaw(spec.path, conf)
-      in = raw
-      if (compressed) {
-        // extension lied (plain name, compressed content): the start-0
-        // split reads the whole file; this split contributes nothing
-        done = true
-        close()
-        return false
-      }
-      raw.seek(0)
-      val headReader = new ByteLineReader(new java.io.BufferedInputStream(raw, 16 * 1024))
-      val hb = new ZeekHeader.Builder
-      var headerDone = false
-      while (!headerDone && headReader.next()) {
-        if (!hb.offer(headReader.lineString)) headerDone = true
-      }
-      fileHeader = hb.build() // throws on non-zeek content
-      raw.seek(spec.start - 1)
-      lines = new ByteLineReader(new java.io.BufferedInputStream(raw, 64 * 1024),
-        baseOffset = spec.start - 1)
-      if (!lines.next()) { done = true; close(); return false } // empty tail
-      rangeEnd = spec.end
-      return true
-    }
-
-    val (stream, compressed) = ZeekIO.openWithInfo(spec.path, conf)
-    in = stream
-    if (!compressed) rangeEnd = spec.end // compressed files are never range-bounded
+    val f = ZeekIO.openFile(spec.path, conf)
+    in = f.in
+    // extension lied (plain name, compressed content): the start-0 split
+    // reads the whole file; this split contributes nothing
+    if (spec.start > 0 && f.compressed) { close(); return false }
     lines = new ByteLineReader(in)
-    // incremental header parse: no look-ahead, so the first data line is
-    // captured as bytes and the reader stays positioned at the second
-    val hb = new ZeekHeader.Builder
-    var headerDone = false
-    while (!headerDone && lines.next()) {
-      if (!hb.offer(lines.lineString)) {
-        pendingBytes = java.util.Arrays.copyOfRange(lines.buf, lines.lineStart, lines.lineEnd)
-        pendingOffset = lines.lineOffset
-        headerDone = true
-      }
-    }
-    fileHeader = hb.build()
+    // every split reads and validates the header from offset 0 (a few
+    // KB), so an invalid or schema-mismatched file fails every split alike
+    fileHeader = ZeekHeader.read(lines)
+    if (!f.compressed) rangeEnd = spec.end
+    if (spec.start > 0) {
+      // a ranged split then starts at start-1 and drops the line that
+      // byte ends (the previous split owns it)
+      f.raw.seek(spec.start - 1)
+      lines = new ByteLineReader(f.raw, baseOffset = spec.start - 1)
+      if (!lines.next()) { close(); return false } // empty tail
+    } else pending = lines.onLine
     true
   }
 
   /** Advance to the next data line (blank lines and mid/trailing
     * directives like #close are skipped). Returns false at EOF or when
     * the split's byte range is exhausted. Read errors follow
-    * ignore_file_errors: swallowed as EOF when set, wrapped otherwise. */
+    * ignore_file_errors: a WARN and the end of this file's rows when
+    * set, a failure naming the file otherwise. */
   def nextDataLine(): Boolean = {
-    if (done) return false
-    while (true) {
-      if (pendingBytes != null) {
-        buf = pendingBytes
-        lineStart = 0
-        lineEnd = pendingBytes.length
-        pendingBytes = null
-        if (rangeEnd >= 0 && pendingOffset >= rangeEnd) {
-          // first data line starts beyond this split (split ends inside
-          // the header region) — it belongs to a later split
-          done = true
-          close()
-          return false
+    while (!done) {
+      val ok = pending || {
+        try lines.next()
+        catch {
+          case e: Exception if opts.ignoreFileErrors =>
+            ZeekIO.warnIgnored(spec.path, e, "stopped reading")
+            false
+          case e: Exception =>
+            throw new ZeekFormatException(s"Failed to read Zeek log '${spec.path}': ${e.getMessage}")
         }
-      } else {
-        val ok =
-          try lines.next()
-          catch {
-            case e: Exception if opts.ignoreFileErrors =>
-              done = true; close(); return false
-            case e: Exception =>
-              throw new ZeekFormatException(s"Failed to read Zeek log '${spec.path}': ${e.getMessage}")
-          }
-        if (!ok) { done = true; close(); return false }
-        if (rangeEnd >= 0 && lines.lineOffset >= rangeEnd) {
-          // next line starts in a later split — this range is done
-          done = true
-          close()
-          return false
-        }
+      }
+      pending = false
+      // a line starting at or past rangeEnd belongs to a later split
+      if (!ok || (rangeEnd >= 0 && lines.lineOffset >= rangeEnd)) {
+        done = true
+        close()
+      } else if (lines.lineEnd > lines.lineStart && lines.buf(lines.lineStart) != '#') {
         buf = lines.buf
         lineStart = lines.lineStart
         lineEnd = lines.lineEnd
+        return true
       }
-      if (lineEnd > lineStart && buf(lineStart) != '#') return true
     }
-    false // unreachable
+    false
   }
 
   def close(): Unit = {
@@ -146,9 +104,9 @@ object ZeekLineScanner {
     * the first data line, and its projection of `required`, which
     * validates the file's header against the bind. None when the file
     * yields no data here — an empty range, or any error under
-    * ignore_file_errors, so the reader goes on with its next file.
-    * Without that option an error fails the scan naming the file (a
-    * partition reads several). */
+    * ignore_file_errors (logged), so the reader goes on with its next
+    * file. Without that option an error fails the scan naming the file
+    * (a partition reads several). */
   def open(spec: ZeekFileSpec, boundHeader: ZeekHeader, dataSchema: StructType,
       opts: ZeekOptions, required: StructType,
       conf: Configuration): Option[(ZeekLineScanner, ZeekProjection)] = {
@@ -161,7 +119,9 @@ object ZeekLineScanner {
       case e: Exception =>
         scanner.close()
         e match {
-          case _ if opts.ignoreFileErrors => None
+          case _ if opts.ignoreFileErrors =>
+            ZeekIO.warnIgnored(spec.path, e, "skipped")
+            None
           case z: ZeekFormatException if z.getMessage.contains(spec.path) => throw z
           case _ =>
             throw new ZeekFormatException(s"Failed to read Zeek log '${spec.path}': ${e.getMessage}")

@@ -17,7 +17,8 @@ import graft.zeek.ZeekFormatException
   * (reference: `README.md` examples, `src/zeek_scanner.cpp` table
   * function registration). DuckDB spells options `key=value`; Spark's
   * named-argument syntax is `key => value` — same names, same semantics,
-  * every option `ZeekOptions` accepts. The function materializes the
+  * every option [[graft.zeek.ZeekOptions.fromMap]] reads: the reference's
+  * five, plus the streaming ones, which a batch read ignores. The function materializes the
   * SAME `ZeekTable`/DSv2 relation as `spark.read.format("zeek")`, so
   * pushdown, columnar reads, statistics, runtime file pruning, and
   * streaming reuse apply unchanged.

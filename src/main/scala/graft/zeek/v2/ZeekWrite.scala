@@ -194,8 +194,7 @@ class ZeekBatchWrite(schema: StructType, dir: String, pathName: String,
           n.endsWith(".log") || n.endsWith(".log.gz") || n.endsWith(".log.zst")
         }
     existing.headOption.foreach { s =>
-      val in = ZeekIO.open(s.getPath.toString, conf.value.value)
-      val header = try ZeekHeader.parseHeaderOnly(in) finally in.close()
+      val header = ZeekIO.header(s.getPath.toString, conf.value.value)
       val cols = ZeekWriteCore.columns(schema)
       if (header.fields != cols.map(_.name).toSeq || header.types != cols.map(_.zeekType).toSeq)
         throw new ZeekFormatException(

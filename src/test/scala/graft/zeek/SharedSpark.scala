@@ -37,4 +37,16 @@ object SharedSpark {
     }
     b.getOrCreate()
   }
+
+  /** Runs `body` with the session confs `kvs` set, then puts each one
+    * back as it was (a value set before, or unset). */
+  def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    val before = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally before.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

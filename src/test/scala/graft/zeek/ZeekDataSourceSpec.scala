@@ -283,6 +283,22 @@ class ZeekDataSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(e.getMessage == s"""No files found that match the pattern "$pattern"""")
   }
 
+  test("a boolean option takes only true or false, in any case") {
+    val dir = ZeekFixtures.tempDir()
+    val p = ZeekFixtures.write(dir, "a.log", ZeekFixtures.base("t", Seq(("1.0", "A1", "1"))))
+    val e = intercept[ZeekFormatException](read(p, Map("ignore_file_errors" -> "ture")))
+    assert(e.getMessage.contains("ignore_file_errors") && e.getMessage.contains("'ture'"), e.getMessage)
+    assert(read(p, Map("ignore_file_errors" -> "TRUE", "filename" -> "False")).count() == 1)
+  }
+
+  test("a numeric option that does not parse fails naming the option and the value") {
+    val dir = ZeekFixtures.tempDir()
+    val p = ZeekFixtures.write(dir, "a.log", ZeekFixtures.base("t", Seq(("1.0", "A1", "1"))))
+    val e = intercept[ZeekFormatException](read(p, Map("max_files_per_trigger" -> "ten")))
+    assert(e.getMessage.contains("max_files_per_trigger") && e.getMessage.contains("'ten'"), e.getMessage)
+    assert(read(p, Map("max_files_per_trigger" -> " 10 ")).count() == 1)
+  }
+
   test("filter pushdown: results identical to post-scan semantics") {
     val dir = ZeekFixtures.tempDir()
     val p = ZeekFixtures.write(dir, "conn.log", ZeekFixtures.connContent)

@@ -49,13 +49,17 @@ object ZeekFixtures {
 
   def row(vals: String*): String = vals.mkString("\t") + "\n"
 
+  /** The files and ranges each input partition of `df`'s Zeek scans
+    * reads, in planned order. */
+  def plannedSpecs(df: org.apache.spark.sql.DataFrame): Seq[Seq[ZeekFileSpec]] =
+    df.queryExecution.sparkPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }.flatMap(_.inputPartitions).map(_.asInstanceOf[graft.zeek.v2.ZeekInputPartition].specs)
+
   /** The files each input partition of `df`'s Zeek scans reads, by base
     * name, in planned order. */
   def plannedFiles(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] =
-    df.queryExecution.sparkPlan.collect {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
-    }.flatMap(_.inputPartitions).map(
-      _.asInstanceOf[graft.zeek.v2.ZeekInputPartition].specs.map(_.path.split('/').last))
+    plannedSpecs(df).map(_.map(_.path.split('/').last))
 
   /** conn-like fixture exercising every scalar type + lists. */
   val connFields = Seq("ts", "uid", "id.orig_h", "id.orig_p", "id.resp_h", "id.resp_p",
@@ -77,6 +81,35 @@ object ZeekFixtures {
   def base(pathName: String, rows: Seq[(String, String, String)]): String =
     header(pathName, Seq("ts", "id", "value"), Seq("time", "string", "count")) +
       rows.map { case (a, b, c) => row(a, b, c) }.mkString
+
+  /** The six `schema_*` directories of FIXTURES.md's table under `root`:
+    * strict-mode matches and mismatches (extra field, reordered fields,
+    * changed type) and the two union_by_name cases (overlap with NULL
+    * fill, type conflict). Returns `root`. */
+  def writeSchemaDirs(root: Path): Path = {
+    def dir(name: String) = Files.createDirectories(root.resolve(name))
+    val a = base("t", Seq(("1.0", "A1", "10"), ("2.0", "A2", "20")))
+    val b = base("t", Seq(("3.0", "B1", "30")))
+    write(dir("schema_match"), "a.log", a)
+    write(dir("schema_match"), "b.log", b)
+    write(dir("schema_extra"), "a.log", a)
+    write(dir("schema_extra"), "b.log", log("t", Seq("ts", "id", "value", "extra"),
+      Seq("time", "string", "count", "string"), Seq(Seq("3.0", "B1", "30", "x"))))
+    write(dir("schema_reorder"), "a.log", a)
+    write(dir("schema_reorder"), "b.log", log("t", Seq("id", "ts", "value"),
+      Seq("string", "time", "count"), Seq(Seq("B1", "3.0", "30"))))
+    write(dir("schema_type"), "a.log", a)
+    write(dir("schema_type"), "b.log", log("t", Seq("ts", "id", "value"),
+      Seq("time", "string", "string"), Seq(Seq("3.0", "B1", "thirty"))))
+    write(dir("schema_union_overlap"), "old.log", a)
+    write(dir("schema_union_overlap"), "new.log", log("t",
+      Seq("ts", "id", "value", "extra", "newfield"), Seq("time", "string", "count", "string", "bool"),
+      Seq(Seq("3.0", "B1", "30", "hello", "T"), Seq("4.0", "B2", "40", "world", "F"))))
+    write(dir("schema_union_typeconflict"), "a.log", a)
+    write(dir("schema_union_typeconflict"), "b.log", log("t", Seq("ts", "id", "value"),
+      Seq("time", "string", "string"), Seq(Seq("3.0", "B1", "thirty"))))
+    root
+  }
 
   // ---- reference-shaped corpora (exact FIXTURES.md schemas) -------------
 

@@ -138,4 +138,43 @@ class ZeekGeneratedCorpusSpec extends AnyFunSuite {
       assert(got == want, s"x $name $pivot")
     }
   }
+
+  private lazy val schemaRoot = ZeekFixtures.writeSchemaDirs(ZeekFixtures.tempDir())
+  private def zeek(path: String, opts: (String, String)*) = {
+    var r = spark.read.format("zeek")
+    opts.foreach { case (k, v) => r = r.option(k, v) }
+    r.load(s"$schemaRoot/$path")
+  }
+
+  test("strict schema validation errors name the mismatch") {
+    assert(zeek("schema_match/*.log").count() == 3)
+    def errorOf(glob: String): String =
+      intercept[Exception](zeek(glob).count()).getMessage
+    assert(errorOf("schema_extra/*.log").contains("different field count"))
+    assert(errorOf("schema_reorder/*.log").contains("field 0 differs"))
+    assert(errorOf("schema_type/*.log").contains("type for field 'value' differs"))
+  }
+
+  test("union_by_name over the generated schema fixtures") {
+    val u = zeek("schema_union_overlap/*.log", "union_by_name" -> "true")
+    assert(u.count() == 4)
+    assert(u.schema.length == 5) // ts, id, value, extra, newfield
+    val a = u.filter(col("id").like("A%"))
+      .agg(count(lit(1)), count(col("extra"))).collect().head
+    assert(a.getLong(0) == 2 && a.getLong(1) == 0) // absent → NULL
+    val b = u.filter(col("id").like("B%")).orderBy("id")
+      .select("id", "extra", "newfield").collect()
+    assert(b.map(r => (r.getString(0), r.getString(1), r.getBoolean(2))).toSeq ==
+      Seq(("B1", "hello", true), ("B2", "world", false)))
+    assert(u.filter(col("value") > 15).count() == 3)
+    assert(u.filter(col("extra").isNull).count() == 2)
+    assert(u.filter(col("extra").isNotNull).count() == 2)
+    // strict mode on the same files still errors
+    assert(intercept[Exception](zeek("schema_union_overlap/*.log").count())
+      .getMessage.contains("different field count"))
+    // type conflict is a bind-time error
+    assert(intercept[Exception](
+      zeek("schema_union_typeconflict/*.log", "union_by_name" -> "true").count())
+      .getMessage.contains("field 'value' has type"))
+  }
 }

@@ -4,6 +4,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 class ZeekHeaderSpec extends AnyFunSuite {
 
+  private def reader(content: String) =
+    new ByteLineReader(new java.io.ByteArrayInputStream(content.getBytes("UTF-8")))
+
   test("separator unescape: hex, named, literal") {
     assert(ZeekHeader.unescapeSeparator("\\x09") == '\t')
     assert(ZeekHeader.unescapeSeparator("\\x2C") == ',')
@@ -14,9 +17,8 @@ class ZeekHeaderSpec extends AnyFunSuite {
   }
 
   test("header parse: directives, fields, types, pending line") {
-    val lines = ZeekFixtures.connContent.split("\n").iterator
-    val res = ZeekHeader.parse(lines)
-    val h = res.header
+    val lines = reader(ZeekFixtures.connContent)
+    val h = ZeekHeader.read(lines)
     assert(h.separator == '\t')
     assert(h.setSeparator == ",")
     assert(h.emptyField == "(empty)")
@@ -24,31 +26,31 @@ class ZeekHeaderSpec extends AnyFunSuite {
     assert(h.path.contains("conn"))
     assert(h.fields == ZeekFixtures.connFields.toVector)
     assert(h.types == ZeekFixtures.connTypes.toVector)
-    assert(res.pendingLine.exists(_.startsWith("1768539602.060078")))
+    assert(lines.onLine && lines.lineString.startsWith("1768539602.060078"))
   }
 
   test("space separator") {
     val content = "#separator  \n#fields a b\n#types count count\n1 2\n"
     // note: "#separator " followed by a literal space char
-    val res = ZeekHeader.parse(content.split("\n").iterator)
-    assert(res.header.separator == ' ')
-    assert(res.header.fields == Vector("a", "b"))
+    val h = ZeekHeader.read(reader(content))
+    assert(h.separator == ' ')
+    assert(h.fields == Vector("a", "b"))
   }
 
   test("missing #fields / #types errors") {
     val noFields = "#separator \\x09\n#types\tcount\n1\n"
-    val e1 = intercept[ZeekFormatException](ZeekHeader.parse(noFields.split("\n").iterator))
+    val e1 = intercept[ZeekFormatException](ZeekHeader.read(reader(noFields)))
     assert(e1.getMessage.contains("#fields"))
     val noTypes = "#separator \\x09\n#fields\ta\n1\n"
-    val e2 = intercept[ZeekFormatException](ZeekHeader.parse(noTypes.split("\n").iterator))
+    val e2 = intercept[ZeekFormatException](ZeekHeader.read(reader(noTypes)))
     assert(e2.getMessage.contains("#types"))
     val empty = ""
-    intercept[ZeekFormatException](ZeekHeader.parse(Iterator.empty))
+    intercept[ZeekFormatException](ZeekHeader.read(reader(empty)))
   }
 
   test("fields/types count mismatch") {
     val bad = "#separator \\x09\n#fields\ta\tb\n#types\tcount\n1\t2\n"
-    val e = intercept[ZeekFormatException](ZeekHeader.parse(bad.split("\n").iterator))
+    val e = intercept[ZeekFormatException](ZeekHeader.read(reader(bad)))
     assert(e.getMessage.contains("#fields has 2"))
   }
 

@@ -3,9 +3,10 @@ package graft.zeek
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.zeek.SharedSpark.withConf
 import graft.zeek.v2.{ZeekCountScan, ZeekDataSource, ZeekScan}
 
-/** Zeek input partitions pack whole files by Spark's file-scan rule, in
+/** Zeek input partitions cut and pack files by Spark's file-scan rule, in
   * path order; readers move from file to file inside a partition, and
   * factories carry the Hadoop configuration as a broadcast. */
 class ZeekPackingSpec extends AnyFunSuite {
@@ -22,9 +23,24 @@ class ZeekPackingSpec extends AnyFunSuite {
     (dir, names)
   }
 
-  private def withMinPartitionNum[T](n: Int)(body: => T): T = {
-    spark.conf.set("spark.sql.files.minPartitionNum", n.toString)
-    try body finally spark.conf.unset("spark.sql.files.minPartitionNum")
+  /** The messages `body` logs through ZeekIO's logger, and its result. */
+  private def zeekWarnings[T](body: => T): (T, Seq[String]) = {
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "zeek-capture", null, null, true, org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
+    }
+    val logger = org.apache.logging.log4j.LogManager.getLogger(ZeekIO.getClass).asInstanceOf[Logger]
+    appender.start()
+    logger.addAppender(appender)
+    try {
+      val r = body
+      (r, seen.toArray(Array.empty[String]).toSeq)
+    } finally {
+      logger.removeAppender(appender)
+      appender.stop()
+    }
   }
 
   test("150 tiny files pack by Spark's file-scan rule, each file once, in path order") {
@@ -51,7 +67,7 @@ class ZeekPackingSpec extends AnyFunSuite {
 
   test("minPartitionNum=1 packs several files into one partition; filename is per row") {
     val (dir, names) = tinyLogs(6)
-    withMinPartitionNum(1) {
+    withConf("spark.sql.files.minPartitionNum" -> "1") {
       val df = spark.read.format("zeek").option("filename", "true").load(s"$dir/*.log")
       assert(ZeekFixtures.plannedFiles(df) == Seq(names))
       val rows = df.select("id", "filename").collect()
@@ -70,7 +86,7 @@ class ZeekPackingSpec extends AnyFunSuite {
     ZeekFixtures.writeRaw(dir, "fake_gzip.log.gz", "this is not gzip content".getBytes("UTF-8"))
     ZeekFixtures.write(dir, "valid.log.gz",
       ZeekFixtures.base("t", Seq(("1.0", "A1", "100"), ("2.0", "A2", "200"))), gzip = true)
-    withMinPartitionNum(1) {
+    withConf("spark.sql.files.minPartitionNum" -> "1") {
       val df = spark.read.format("zeek").option("ignore_file_errors", "true").load(s"$dir/*.log.gz")
       assert(ZeekFixtures.plannedFiles(df) ==
         Seq(Seq("corrupted.log.gz", "fake_gzip.log.gz", "valid.log.gz")))
@@ -127,5 +143,79 @@ class ZeekPackingSpec extends AnyFunSuite {
     // one broadcast while the configuration is unchanged
     assert(ZeekDataSource.broadcastConf().id == ZeekDataSource.broadcastConf().id)
     assert(spark.read.format("zeek").load(s"$dir/*.log").filter(col("id") === "ID001").count() == 1)
+  }
+
+  test("a plain file past Spark's split size is cut; every byte planned once, rows in order") {
+    val dir = ZeekFixtures.tempDir()
+    val small = Seq("a.log", "c.log", "d.log")
+    small.zipWithIndex.foreach { case (name, i) =>
+      ZeekFixtures.write(dir, name, ZeekFixtures.base("t", Seq((s"$i.0", s"S$i", s"$i"))))
+    }
+    // ~6 MB: longer than maxSplit = max(openCost, total / minPartitionNum)
+    // at default confs with a default parallelism of 4 or more
+    val sb = new StringBuilder(ZeekFixtures.header("t", Seq("ts", "id", "value"),
+      Seq("time", "string", "count")))
+    (0 until 250000).foreach(i => sb.append(f"$i.5\tB$i%07d\t$i\n"))
+    ZeekFixtures.write(dir, "b.log", sb.toString)
+    val bLen = new java.io.File(dir.toFile, "b.log").length
+
+    def read() = spark.read.format("zeek").option("filename", "true").load(s"$dir/*.log")
+    val df = read()
+    val planned = ZeekFixtures.plannedSpecs(df)
+    val flat = planned.flatten
+    val pieces = flat.filter(_.path.endsWith("/b.log"))
+    assert(pieces.length > 1, planned)
+    // the ranges tile b.log: no byte twice, none left out
+    assert(pieces.head.start == 0 && pieces.last.end == -1L, pieces)
+    pieces.sliding(2).foreach { case Seq(x, y) => assert(x.end == y.start && x.end < bLen, pieces) }
+    // small files whole, once each, and everything in path order
+    assert(flat.map(_.path.split('/').last).distinct == Seq("a.log", "b.log", "c.log", "d.log"))
+    assert(flat.filterNot(_.path.endsWith("/b.log")).forall(s => s.start == 0 && s.end == -1L))
+
+    val unsplit = withConf("spark.sql.files.minPartitionNum" -> "1") {
+      val whole = read()
+      assert(ZeekFixtures.plannedSpecs(whole).flatten.count(_.path.endsWith("/b.log")) == 1)
+      whole.select("id", "filename").collect().toSeq
+    }
+    val rows = df.select("id", "filename").collect().toSeq
+    assert(rows.length == 250003)
+    assert(rows == unsplit, "the cut read returns the unsplit read, in order")
+    rows.foreach { r =>
+      val expected = if (r.getString(0).startsWith("B")) "b.log"
+        else small(r.getString(0).drop(1).toInt)
+      assert(r.getString(1).endsWith("/" + expected), r)
+    }
+  }
+
+  test("ignore_file_errors logs one WARN per skipped file, naming it and the cause") {
+    val dir = ZeekFixtures.tempDir()
+    ZeekFixtures.writeRaw(dir, "corrupted.log.gz", Array.empty[Byte])
+    ZeekFixtures.writeRaw(dir, "fake_gzip.log.gz", "this is not gzip content".getBytes("UTF-8"))
+    ZeekFixtures.write(dir, "valid.log.gz",
+      ZeekFixtures.base("t", Seq(("1.0", "A1", "100"), ("2.0", "A2", "200"))), gzip = true)
+    // a gzip cut short after its header: the read stops early
+    val rows = (0 until 20000).map(i => (s"$i.0", s"T$i", s"$i"))
+    val whole = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
+      ZeekFixtures.write(ZeekFixtures.tempDir(), "t.log.gz", ZeekFixtures.base("t", rows), gzip = true)))
+    ZeekFixtures.writeRaw(dir, "truncated.log.gz", whole.take(whole.length / 2))
+
+    val (n, warnings) = zeekWarnings(spark.read.format("zeek")
+      .option("ignore_file_errors", "true").load(s"$dir/*.log.gz").count())
+    assert(n > 2 && n < 20002, n)
+    val named = warnings.filter(_.contains("corrupted.log.gz"))
+    assert(named.nonEmpty && named.forall(_.contains("skipped")), warnings)
+    assert(warnings.exists(w => w.contains("fake_gzip.log.gz") && w.contains("skipped")), warnings)
+    assert(warnings.exists(w => w.contains("truncated.log.gz") && w.contains("stopped reading") &&
+      w.contains("end of ZLIB")), warnings)
+    assert(!warnings.exists(_.contains("valid.log.gz")), warnings)
+    // one WARN per file at each place that passes over it: bind and scan
+    assert(warnings.count(_.contains("corrupted.log.gz")) <= 2, warnings)
+
+    val clean = ZeekFixtures.tempDir()
+    ZeekFixtures.write(clean, "valid.log.gz",
+      ZeekFixtures.base("t", Seq(("1.0", "A1", "100"))), gzip = true)
+    val (m, none) = zeekWarnings(spark.read.format("zeek")
+      .option("ignore_file_errors", "true").load(s"$clean/*.log.gz").count())
+    assert(m == 1 && none.isEmpty, none)
   }
 }

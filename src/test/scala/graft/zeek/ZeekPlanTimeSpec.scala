@@ -7,6 +7,7 @@ import org.apache.hadoop.fs.{FileStatus, FSDataInputStream, Path => HPath, RawLo
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.zeek.SharedSpark.withConf
 import graft.zeek.v2.ZeekScan
 
 /** Local filesystem that counts metadata/open RPCs — planning must issue
@@ -50,13 +51,14 @@ class ZeekPlanTimeSpec extends AnyFunSuite {
     conf.setClass("fs.countfs.impl", classOf[CountingLocalFs],
       classOf[org.apache.hadoop.fs.FileSystem])
     val bind = ZeekSchema.bind(Seq(s"countfs:$dir/*.log"),
-      ZeekOptions(splitSize = 1024), conf)
+      ZeekOptions(), conf)
     assert(bind.files.forall(_.length > 0), "bind must carry real lengths")
 
     CountingLocalFs.reset()
     val scan = new ZeekScan(bind, bind.schema,
       Array.empty[org.apache.spark.sql.sources.Filter])
-    val parts = scan.planInputPartitions()
+    val parts = withConf("spark.sql.files.maxPartitionBytes" -> "1024")(
+      scan.planInputPartitions())
     val stats = scan.estimateStatistics()
     assert(stats.sizeInBytes().getAsLong > 0)
     // a.log is ~4KB > 1KB split size → byte-range splits from the carried length
@@ -97,12 +99,14 @@ class ZeekPlanTimeSpec extends AnyFunSuite {
     val dir = ZeekFixtures.tempDir()
     val rows = (1 to 500).map(i => (s"$i.0", f"ID$i%05d", s"$i"))
     ZeekFixtures.write(dir, "a.log", ZeekFixtures.base("t", rows))
-    val df = spark.read.format("zeek").option("split_size", "1024").load(s"$dir/a.log")
-      .groupBy().count()
-    val p = df.queryExecution.executedPlan.toString
-    assert(p.contains("ZeekCountScan"), p.take(2000))
-    // header lines live in split 0 only; each split counts its own range
-    assert(df.collect().head.getLong(0) == 500L)
+    withConf("spark.sql.files.maxPartitionBytes" -> "1024") {
+      val df = spark.read.format("zeek").load(s"$dir/a.log")
+        .groupBy().count()
+      val p = df.queryExecution.executedPlan.toString
+      assert(p.contains("ZeekCountScan"), p.take(2000))
+      // header lines live in split 0 only; each split counts its own range
+      assert(df.collect().head.getLong(0) == 500L)
+    }
   }
 
   test("filename predicates prune whole files at plan time") {
