@@ -2,6 +2,7 @@ package graft.zeek
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** Options of the Zeek source, mirroring the reference's named parameters
   * (reference: src/zeek_scanner.cpp:455-479, README.md:66-99). */
@@ -15,14 +16,6 @@ final case class ZeekOptions(
       * which files are tracked by path identity — absorbs preserved-mtime
       * copies and clock skew between writers; see ZeekOffset */
     streamMtimeSlackMs: Long = 5L * 60 * 1000,
-    /** streaming only: reuse the previous trigger's directory listing
-      * while the watched directories' own mtimes are unchanged (one
-      * getFileStatus per directory per trigger instead of a full glob of
-      * thousands of rotated logs). None = auto: enabled on filesystems
-      * whose directory mtime tracks child membership (local/HDFS),
-      * disabled elsewhere (object-store "directories" don't update, so a
-      * cache there would go permanently stale). */
-    streamListingCache: Option[Boolean] = None,
     /** streaming only: admission control — cap each micro-batch at this
       * many newly-appeared files (oldest first). A restart against a
       * large rotated-log backlog otherwise plans one giant batch. */
@@ -32,27 +25,51 @@ final case class ZeekOptions(
     maxBytesPerTrigger: Option[Long] = None) extends Serializable
 
 object ZeekOptions {
-  /** Options from a reader's map. A value that is not a `true`/`false`
-    * (any case) for a boolean option, or not a number for a numeric one,
-    * fails naming the option and the value. */
+  /** Every option name a Zeek read takes: the reader's own, the sink's (a
+    * catalog table carries them into its reads) and Spark's path keys. */
+  val known: Seq[String] = Seq("filename", "replace_periods", "inet", "union_by_name",
+    "ignore_file_errors", "stream_mtime_slack_ms", "max_files_per_trigger",
+    "max_bytes_per_trigger", "compression", "zeek_path", "max_rows_per_file", "path", "paths")
+
+  /** Option `k` of `m` through `parse`. A value `parse` rejects fails
+    * naming the option, the value and `rule`. */
+  def opt[T](m: java.util.Map[String, String], k: String, rule: String = "")(
+      parse: String => Option[T]): Option[T] =
+    Option(m.get(k)).map { v =>
+      parse(v.trim).getOrElse(throw new ZeekFormatException(
+        s"zeek option '$k' has an invalid value '$v'$rule"))
+    }
+
+  /** Options from a reader's map. An option name not in [[known]] fails,
+    * listing the known ones. A session-catalog table's map (it carries
+    * `provider`) also holds the table's own properties (owner, location,
+    * comment, TBLPROPERTIES); there only its OPTIONS clause is checked,
+    * which Spark repeats under the `option.` prefix. A value that is not a
+    * `true`/`false` (any case) for a boolean option, not a number for a
+    * numeric one, or out of a streaming number's range fails naming the
+    * option and the value. */
   def fromMap(m: java.util.Map[String, String]): ZeekOptions = {
-    def opt[T](k: String)(parse: String => Option[T]): Option[T] =
-      Option(m.get(k)).map { v =>
-        parse(v.trim).getOrElse(throw new ZeekFormatException(
-          s"zeek option '$k' has an invalid value '$v'"))
-      }
-    def b(k: String): Option[Boolean] = opt(k)(_.toBooleanOption)
-    def n(k: String): Option[Long] = opt(k)(_.toLongOption)
+    import org.apache.spark.sql.connector.catalog.TableCatalog.{OPTION_PREFIX, PROP_PROVIDER}
+    val keys = m.keySet.asScala.map(_.toLowerCase(java.util.Locale.ROOT))
+    val names = if (!keys.contains(PROP_PROVIDER)) keys
+      else keys.filter(_.startsWith(OPTION_PREFIX)).map(_.stripPrefix(OPTION_PREFIX))
+    names.find(!known.contains(_)).foreach { k =>
+      throw new ZeekFormatException(
+        s"unknown zeek option '$k'; known options: ${known.mkString(", ")}")
+    }
+    def b(k: String): Option[Boolean] = opt(m, k)(_.toBooleanOption)
     ZeekOptions(
       filename = b("filename").getOrElse(false),
       replacePeriods = b("replace_periods").getOrElse(true),
       inet = b("inet").getOrElse(true),
       unionByName = b("union_by_name").getOrElse(false),
       ignoreFileErrors = b("ignore_file_errors").getOrElse(false),
-      streamMtimeSlackMs = n("stream_mtime_slack_ms").getOrElse(5L * 60 * 1000),
-      streamListingCache = b("stream_listing_cache"),
-      maxFilesPerTrigger = opt("max_files_per_trigger")(_.toIntOption),
-      maxBytesPerTrigger = n("max_bytes_per_trigger"))
+      streamMtimeSlackMs = opt(m, "stream_mtime_slack_ms", " (must be >= 0)")(
+        _.toLongOption.filter(_ >= 0)).getOrElse(5L * 60 * 1000),
+      maxFilesPerTrigger = opt(m, "max_files_per_trigger", " (must be > 0)")(
+        _.toIntOption.filter(_ > 0)),
+      maxBytesPerTrigger = opt(m, "max_bytes_per_trigger", " (must be > 0)")(
+        _.toLongOption.filter(_ > 0)))
   }
 }
 
@@ -82,7 +99,7 @@ final case class ZeekBind(
     /** full output schema (incl. filename column when enabled) */
     schema: StructType,
     opts: ZeekOptions,
-    /** original path patterns (streaming re-globs them per trigger) */
+    /** original path patterns (streaming lists them once per trigger) */
     patterns: Seq[String]) extends Serializable {
   def filenameIndex: Int = if (opts.filename) schema.length - 1 else -1
 }
@@ -133,7 +150,6 @@ object ZeekSchema {
           t
         })
       try {
-        import scala.jdk.CollectionConverters._
         val tasks: Seq[java.util.concurrent.Callable[Either[Exception, ZeekHeader]]] =
           files.map(f => () => one(f))
         pool.invokeAll(tasks.asJava).asScala.map(_.get()).toSeq

@@ -319,10 +319,10 @@ class ZeekScan(bind: ZeekBind, required: StructType, pushed: Array[Filter],
     ZeekPartitionReaderFactory(bind.header, bind.dataSchema, bind.opts, required, pushed,
       ZeekDataSource.broadcastConf(), limit)
 
-  /** Streaming read: each trigger re-globs the pattern; new files become
-    * the micro-batch's partitions (Zeek's hourly-rotation model). */
+  /** Streaming read: each trigger lists the patterns once; new files
+    * become the micro-batch's partitions (Zeek's hourly-rotation model). */
   override def toMicroBatchStream(checkpointLocation: String): org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new ZeekMicroBatchStream(bind, bind.patterns, required, pushed,
+    new ZeekMicroBatchStream(bind, required, pushed,
       SparkSession.active.sessionState.newHadoopConf())
 }
 

@@ -95,15 +95,16 @@ object ZeekOffset {
 }
 
 /** Micro-batch streaming over a Zeek log directory: each trigger lists
-  * the pattern (through a dir-mtime-keyed cache — see `currentFiles`)
-  * and cuts and packs the newly-appeared files into partitions as a batch
-  * scan does ([[ZeekPlanning]]). Schema is fixed at
+  * the bind's patterns once, and cuts and packs the newly-appeared files
+  * into partitions as a batch scan does ([[ZeekPlanning]]). The listing
+  * `latestOffset(start, limit)` takes serves the same trigger's
+  * `reportLatestOffset()` and `planInputPartitions`, as Spark's
+  * FileStreamSource lists once per trigger. Schema is fixed at
   * stream start (the bind); new files are validated against it
   * per-partition exactly like the batch path (strict) or mapped by name
   * (union_by_name). */
 class ZeekMicroBatchStream(
     bind: ZeekBind,
-    patterns: Seq[String],
     required: StructType,
     pushed: Array[Filter],
     conf: Configuration) extends MicroBatchStream with SupportsTriggerAvailableNow {
@@ -116,130 +117,27 @@ class ZeekMicroBatchStream(
   @transient private val listedBefore = scala.collection.mutable.HashSet.empty[String]
   @transient private var firstPlan = true
 
-  // ---- per-trigger listing cache --------------------------------------
-  // Each trigger needs the listing twice (latestOffset + plan); without a
-  // cache that is 2 full globs per trigger over what the reference's
-  // rotation model makes thousands of files. While every watched
-  // directory's own mtime is unchanged, the previous listing is reused —
-  // one getFileStatus per directory instead of a full glob. POSIX/HDFS
-  // dir mtimes change on child add/remove/rename, which is exactly the
-  // membership the glob discovers; appends to existing files don't
-  // refresh the cache, which is fine because ingestion is per-file
-  // appearance (see ZeekOffset). Guards:
-  //  - dirs modified within MtimeGranularityMs of the cached listing are
-  //    never trusted (a file created in the same mtime tick as the glob
-  //    would otherwise hide until the next membership change);
-  //  - glob characters in directory components, or filesystems whose
-  //    scheme isn't known to maintain dir mtimes (object stores), disable
-  //    the cache entirely unless stream_listing_cache=true forces it.
-  private val MtimeGranularityMs = 2000L
-  /** Filesystems whose directory mtime tracks child membership. Extend
-    * via hadoop conf `graft.zeek.stream.cache.schemes` (comma-separated)
-    * for custom FileSystem impls with POSIX-style dir mtimes. */
-  private val dirMtimeSchemes: Set[String] =
-    Set("file", "hdfs", "viewfs") ++
-      conf.getTrimmedStrings("graft.zeek.stream.cache.schemes").toSet
-  @transient private var cachedListing: Seq[ZeekIO.GlobFile] = _
-  @transient private var cachedDirState: Seq[Long] = _
-  @transient private var cachedAtMs: Long = 0L
-
-  private def hasGlob(s: String): Boolean = s.exists("*?[]{}\\".contains(_))
-
-  /** The scheme of the filesystem the path actually resolves to. A
-    * scheme-less pattern resolves against fs.defaultFS — which on a
-    * cluster may be an object store — so the URI's own (null) scheme
-    * must not default to "file": ask the resolved FileSystem instead
-    * (getScheme, or its canonical URI for impls that don't override
-    * getScheme, e.g. RawLocalFileSystem). An unresolvable path yields
-    * "" = not allowlisted = no cache (safe). */
-  private def fsScheme(p: org.apache.hadoop.fs.Path): String =
-    try {
-      val fs = p.getFileSystem(conf)
-      try fs.getScheme
-      catch {
-        case _: UnsupportedOperationException =>
-          Option(fs.getUri.getScheme).getOrElse("")
-      }
-    } catch { case scala.util.control.NonFatal(_) => "" }
-
-  // The watched-dir resolution is cached, but must be re-evaluated when
-  // a plain pattern that was MISSING at resolution time (and therefore
-  // fell back to watching its parent) later appears: if it was created
-  // as a directory, files landing inside it never bump the parent's
-  // mtime, so the stale fallback would hide new files forever.
-  @transient private var resolvedWatch: Option[Option[Seq[org.apache.hadoop.fs.Path]]] = None
-  @transient private var missingPlain: Seq[org.apache.hadoop.fs.Path] = Seq.empty
-
-  private def resolveWatchDirs(): Option[Seq[org.apache.hadoop.fs.Path]] = {
-    val enabled = bind.opts.streamListingCache
-    if (enabled.contains(false)) None
-    else {
-      val missing = Seq.newBuilder[org.apache.hadoop.fs.Path]
-      val dirs = patterns.map { pat =>
-        val p = new org.apache.hadoop.fs.Path(pat)
-        val parent = if (p.getParent == null) p else p.getParent
-        if (hasGlob(p.getName)) parent // glob in the filename only
-        else {
-          // plain path: a directory pattern watches itself, a file
-          // watches its parent; a not-yet-existing path watches the
-          // parent provisionally and is re-resolved when it appears
-          try if (p.getFileSystem(conf).getFileStatus(p).isDirectory) p else parent
-          catch { case scala.util.control.NonFatal(_) => missing += p; parent }
-        }
-      }
-      missingPlain = missing.result()
-      val ok = dirs.forall(p => !hasGlob(p.toString)) &&
-        (enabled.contains(true) || dirs.forall(p => dirMtimeSchemes.contains(fsScheme(p))))
-      if (ok) Some(dirs.distinct) else None
-    }
-  }
-
-  /** The directories whose mtimes key the cache, or None when caching is
-    * unsafe for these patterns/filesystem. */
-  private def watchDirs: Option[Seq[org.apache.hadoop.fs.Path]] = {
-    val reResolve = resolvedWatch.isEmpty ||
-      (missingPlain.nonEmpty && missingPlain.exists(pathExists))
-    if (reResolve) {
-      resolvedWatch = Some(resolveWatchDirs())
-      cachedListing = null // watched set changed: old dir mtimes don't apply
-    }
-    resolvedWatch.get
-  }
-
-  private def pathExists(p: org.apache.hadoop.fs.Path): Boolean =
-    try { p.getFileSystem(conf).getFileStatus(p); true }
-    catch { case scala.util.control.NonFatal(_) => false }
-
-  private def dirMtimes(dirs: Seq[org.apache.hadoop.fs.Path]): Seq[Long] =
-    dirs.map { d =>
-      try d.getFileSystem(conf).getFileStatus(d).getModificationTime
-      catch { case _: java.io.IOException => -1L } // missing dir: state -1
-    }
-
   // expandGlob returns empty for an empty glob (no throw) — "no
   // files yet" is a normal streaming state
   private def listNow(): Seq[ZeekIO.GlobFile] =
-    patterns.flatMap(ZeekIO.expandGlob(_, conf)).distinct.sortBy(_.path)
+    bind.patterns.flatMap(ZeekIO.expandGlob(_, conf)).distinct.sortBy(_.path)
 
-  private def currentFiles(): Seq[ZeekIO.GlobFile] = watchDirs match {
-    case None => listNow()
-    case Some(dirs) =>
-      val state = dirMtimes(dirs)
-      val fresh = cachedListing != null && state == cachedDirState &&
-        state.forall(m => cachedAtMs > m + MtimeGranularityMs)
-      if (fresh) cachedListing
-      else {
-        val listing = listNow()
-        cachedDirState = state
-        cachedAtMs = System.currentTimeMillis()
-        cachedListing = listing
-        listing
-      }
+  /** The last trigger's listing and the offset computed from it: the
+    * trigger's `reportLatestOffset` and `planInputPartitions` reuse it
+    * instead of listing again. */
+  @transient private var trigger: Option[(Seq[ZeekIO.GlobFile], Offset)] = None
+
+  private def remember(listed: Seq[ZeekIO.GlobFile], end: Offset): Offset = {
+    trigger = Some((listed, end))
+    end
   }
 
   override def initialOffset(): Offset = ZeekOffset.Empty
 
-  override def latestOffset(): Offset = offsetFor(listingForOffsets())
+  override def latestOffset(): Offset = {
+    val listed = listing()
+    remember(listed, offsetFor(listed))
+  }
 
   /** Watermark + window offset covering exactly `files`. Kept separate
     * from the listing so callers that already hold a listing (the
@@ -276,7 +174,10 @@ class ZeekMicroBatchStream(
     }
   }
 
-  override def reportLatestOffset(): Offset = latestOffset()
+  override def reportLatestOffset(): Offset = trigger match {
+    case Some((listed, _)) => offsetFor(listed)
+    case None              => latestOffset()
+  }
 
   /** Trigger.AvailableNow: snapshot the listing once; every subsequent
     * (rate-limited) batch of the run admits only snapshot files, so the
@@ -285,8 +186,8 @@ class ZeekMicroBatchStream(
   override def prepareForTriggerAvailableNow(): Unit =
     availableNowSnapshot = Some(listNow())
 
-  private def listingForOffsets(): Seq[ZeekIO.GlobFile] =
-    availableNowSnapshot.getOrElse(currentFiles())
+  /** A trigger's listing: the AvailableNow snapshot, or one glob per pattern. */
+  private def listing(): Seq[ZeekIO.GlobFile] = availableNowSnapshot.getOrElse(listNow())
 
   /** Most restrictive (files, bytes) caps in `limit`; None = uncapped.
     * Row-based limits are not satisfiable before parsing and are
@@ -308,7 +209,7 @@ class ZeekMicroBatchStream(
     val (maxFiles, maxBytes) = caps(limit)
     if (maxFiles.isEmpty && maxBytes.isEmpty) return latestOffset()
 
-    val listed = listingForOffsets()
+    val listed = listing()
     val backlog = listed.filterNot(f => s.processed(f.path, f.mtime))
       .sortBy(f => (f.mtime, f.path))
     val admitted = {
@@ -321,31 +222,35 @@ class ZeekMicroBatchStream(
         n == 1 || (maxFiles.forall(n <= _) && maxBytes.forall(bytes <= _))
       }
     }
-    if (admitted.isEmpty) start // no new data: engine sees offset unchanged
-    else if (admitted.length == backlog.length) offsetFor(listed) // caught up: compact from THIS listing
-    else s.legacySeen match {
-      // Capped batch: the watermark must NOT advance — every un-admitted
-      // backlog file has to stay unprocessed — so the end offset keeps
-      // the start's below-window line and carries the admitted paths
-      // (plus the start's still-relevant window files) in the boundary.
-      // The boundary grows with the backlog while rate-limited and
-      // re-compacts on the first uncapped batch.
-      case None =>
-        ZeekOffset(s.watermark, (s.boundary ++ admitted.map(_.path)).distinct, s.slack)
-      // a legacy (round-1 full-list) start offset tracks processed files
-      // ONLY through its seen-set — append to it rather than building a
-      // watermark offset that would forget the legacy files
-      case Some(seen) =>
-        ZeekOffset(Long.MinValue, Seq.empty,
-          legacySeen = Some((seen ++ admitted.map(_.path)).distinct))
-    }
+    val end: Offset =
+      if (admitted.isEmpty) start // no new data: engine sees offset unchanged
+      else if (admitted.length == backlog.length) offsetFor(listed) // caught up: compact from THIS listing
+      else s.legacySeen match {
+        // Capped batch: the watermark must NOT advance — every un-admitted
+        // backlog file has to stay unprocessed — so the end offset keeps
+        // the start's below-window line and carries the admitted paths
+        // (plus the start's still-relevant window files) in the boundary.
+        // The boundary grows with the backlog while rate-limited and
+        // re-compacts on the first uncapped batch.
+        case None =>
+          ZeekOffset(s.watermark, (s.boundary ++ admitted.map(_.path)).distinct, s.slack)
+        // a legacy (round-1 full-list) start offset tracks processed files
+        // ONLY through its seen-set — append to it rather than building a
+        // watermark offset that would forget the legacy files
+        case Some(seen) =>
+          ZeekOffset(Long.MinValue, Seq.empty,
+            legacySeen = Some((seen ++ admitted.map(_.path)).distinct))
+      }
+    remember(listed, end)
   }
 
   override def deserializeOffset(json: String): Offset = ZeekOffset.fromJson(json)
 
-  /** The batch for (start, end] is derived by re-listing the directory
-    * and keeping files processed under `end` but not under `start`.
-    * Replay determinism therefore also rests on the immutability
+  /** The batch for (start, end] keeps the listed files processed under
+    * `end` but not under `start`. The listing is the one `end` was
+    * computed from; an offset this instance did not compute (a batch
+    * replayed from the offset log after a restart) lists the patterns
+    * once. Replay determinism therefore also rests on the immutability
     * invariant above: a file DELETED between offset commit and a
     * checkpoint replay cannot be resurrected (same regime as Spark's
     * FileStreamSource with a maxAge/compacted log — log retention must
@@ -353,7 +258,7 @@ class ZeekMicroBatchStream(
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[ZeekOffset]
     val e = end.asInstanceOf[ZeekOffset]
-    val listed = currentFiles()
+    val listed = trigger.collect { case (l, o) if o == end => l }.getOrElse(listNow())
     // a file FIRST listed with an mtime already below the start window is
     // assumed processed and skipped — surface the silent skip (not on the
     // first batch after (re)start, where every old file is legitimately

@@ -18,7 +18,9 @@ import graft.zeek.ZeekFormatException
   * function registration). DuckDB spells options `key=value`; Spark's
   * named-argument syntax is `key => value` — same names, same semantics,
   * every option [[graft.zeek.ZeekOptions.fromMap]] reads: the reference's
-  * five, plus the streaming ones, which a batch read ignores. The function materializes the
+  * five, plus the streaming ones, which a batch read ignores. A name
+  * outside [[graft.zeek.ZeekOptions.known]] fails the query, listing the
+  * known ones. The function materializes the
   * SAME `ZeekTable`/DSv2 relation as `spark.read.format("zeek")`, so
   * pushdown, columnar reads, statistics, runtime file pruning, and
   * streaming reuse apply unchanged.

@@ -57,12 +57,8 @@ class ZeekWriteBuilder(info: LogicalWriteInfo, dir: String,
   }
 
   private def maxRowsPerFile: Long =
-    Option(props.get("max_rows_per_file")).map(_.trim.toLong) match {
-      case Some(n) if n <= 0 =>
-        throw new ZeekFormatException("zeek sink: max_rows_per_file must be positive")
-      case Some(n) => n
-      case None    => Long.MaxValue
-    }
+    ZeekOptions.opt(props, "max_rows_per_file", " (must be > 0)")(_.toLongOption.filter(_ > 0))
+      .getOrElse(Long.MaxValue)
 
   private def conf = ZeekDataSource.broadcastConf()
 

@@ -299,6 +299,46 @@ class ZeekDataSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(read(p, Map("max_files_per_trigger" -> " 10 ")).count() == 1)
   }
 
+  test("an unknown option name fails naming it and listing the known ones") {
+    val dir = ZeekFixtures.tempDir()
+    val p = ZeekFixtures.write(dir, "a.log", ZeekFixtures.base("t", Seq(("1.0", "A1", "1"))))
+    for (k <- Seq("ignore_file_error", "split_size", "max_file_per_trigger")) {
+      val e = intercept[ZeekFormatException](read(p, Map(k -> "true")))
+      assert(e.getMessage.contains(s"'$k'") && ZeekOptions.known.forall(e.getMessage.contains(_)),
+        e.getMessage)
+    }
+    graft.zeek.v2.ZeekTableFunction.register(spark)
+    val sql = intercept[Exception](
+      spark.sql(s"SELECT * FROM read_zeek('$p', ignore_file_error => true)").collect())
+    val msgs = Iterator.iterate[Throwable](sql)(_.getCause).takeWhile(_ != null).map(_.getMessage)
+    assert(msgs.exists(_.contains("'ignore_file_error'")), sql.getMessage)
+    assert(read(p, Map("Filename" -> "true", "zeek_path" -> "t")).columns.contains("filename"))
+    // a catalog table's own properties are not read options; its OPTIONS are
+    try {
+      spark.sql(s"CREATE TABLE zeek_opts_ok USING zeek OPTIONS (path '$dir', filename 'true') " +
+        "TBLPROPERTIES ('team' = 'soc') COMMENT 'dns'")
+      assert(spark.table("zeek_opts_ok").columns.contains("filename"))
+      val table = intercept[Exception] {
+        spark.sql(s"CREATE TABLE zeek_opts_bad USING zeek OPTIONS (path '$dir', split_size '1')")
+        spark.table("zeek_opts_bad").collect()
+      }
+      assert(Iterator.iterate[Throwable](table)(_.getCause).takeWhile(_ != null)
+        .exists(_.getMessage.contains("'split_size'")), table.getMessage)
+    } finally Seq("zeek_opts_ok", "zeek_opts_bad").foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
+  }
+
+  test("streaming numbers out of range fail naming the option and the value") {
+    val dir = ZeekFixtures.tempDir()
+    val p = ZeekFixtures.write(dir, "a.log", ZeekFixtures.base("t", Seq(("1.0", "A1", "1"))))
+    for ((k, v) <- Seq("stream_mtime_slack_ms" -> "-1", "max_files_per_trigger" -> "0",
+        "max_bytes_per_trigger" -> "-5")) {
+      val e = intercept[ZeekFormatException](read(p, Map(k -> v)))
+      assert(e.getMessage.contains(k) && e.getMessage.contains(s"'$v'"), e.getMessage)
+    }
+    assert(read(p, Map("stream_mtime_slack_ms" -> "0", "max_files_per_trigger" -> "1",
+      "max_bytes_per_trigger" -> "1")).count() == 1)
+  }
+
   test("filter pushdown: results identical to post-scan semantics") {
     val dir = ZeekFixtures.tempDir()
     val p = ZeekFixtures.write(dir, "conn.log", ZeekFixtures.connContent)

@@ -141,94 +141,52 @@ class ZeekPlanTimeSpec extends AnyFunSuite {
     assert(df.collect().map(_.getString(1)).toSeq == Seq("b"))
   }
 
-  test("streaming listing cache: unchanged dir mtime skips the re-glob") {
+  test("streaming: one trigger lists the patterns once; a replayed offset lists once") {
+    import graft.zeek.v2.{ZeekInputPartition, ZeekMicroBatchStream, ZeekOffset}
     val dir = ZeekFixtures.tempDir()
-    for (n <- Seq("a", "b", "c"))
-      ZeekFixtures.write(dir, s"$n.log",
-        ZeekFixtures.base("t", Seq(("1.0", s"${n.toUpperCase}1", "100"))))
-    // back-date the directory so the same-mtime-tick guard trusts the cache
-    dir.toFile.setLastModified(System.currentTimeMillis() - 10000)
-
+    for (i <- 1 to 5) {
+      val p = ZeekFixtures.write(dir, s"f$i.log",
+        ZeekFixtures.base("t", Seq((s"$i.0", s"F$i", s"$i"))))
+      assert(new java.io.File(p).setLastModified(1600000000000L + i * 10000L))
+    }
     val conf = spark.sessionState.newHadoopConf()
     conf.setClass("fs.countfs.impl", classOf[CountingLocalFs],
       classOf[org.apache.hadoop.fs.FileSystem])
-    // the test FS is not in the built-in dir-mtime allowlist — opt it in
-    // through the documented extension key
-    conf.setStrings("graft.zeek.stream.cache.schemes", "countfs")
-    val bind = ZeekSchema.bind(Seq(s"countfs:$dir/*.log"), ZeekOptions(), conf)
-    val stream = new graft.zeek.v2.ZeekMicroBatchStream(bind, bind.patterns,
-      bind.schema, Array.empty, conf)
-
-    val o1 = stream.latestOffset() // populates the cache
+    val pattern = s"countfs:$dir/*.log"
+    def calls() = (CountingLocalFs.listCalls.get, CountingLocalFs.statCalls.get,
+      CountingLocalFs.openCalls.get)
     CountingLocalFs.reset()
-    val o2 = stream.latestOffset()
-    assert(o2 == o1)
-    assert(CountingLocalFs.listCalls.get == 0,
-      s"cached trigger re-listed the directory ${CountingLocalFs.listCalls.get} times")
-    assert(CountingLocalFs.statCalls.get <= 1, // the one dir-mtime validity probe
-      s"cached trigger made ${CountingLocalFs.statCalls.get} stat calls")
+    ZeekIO.expandGlob(pattern, conf)
+    val oneGlob = calls()
+    assert(oneGlob._1 > 0, "a glob must list the directory")
+    def files(parts: Array[org.apache.spark.sql.connector.read.InputPartition]) =
+      parts.toSeq.flatMap(_.asInstanceOf[ZeekInputPartition].specs.map(_.path.split('/').last))
 
-    // membership change (new rotation) must invalidate the cache
-    ZeekFixtures.write(dir, "d.log",
-      ZeekFixtures.base("t", Seq(("2.0", "D1", "200"))))
-    val o3 = stream.latestOffset().asInstanceOf[graft.zeek.v2.ZeekOffset]
-    assert(o3.boundary.exists(_.endsWith("d.log")),
-      s"new file missed after dir change: ${o3.boundary}")
+    for ((cap, batches) <- Seq(None -> Seq(1 to 5), Some(2) -> Seq(1 to 2, 3 to 4, 5 to 5))) {
+      val bind = ZeekSchema.bind(Seq(pattern), ZeekOptions(maxFilesPerTrigger = cap), conf)
+      val stream = new ZeekMicroBatchStream(bind, bind.schema, Array.empty, conf)
+      var start = stream.initialOffset()
+      for (want <- batches) {
+        CountingLocalFs.reset()
+        val end = stream.latestOffset(start, stream.getDefaultReadLimit)
+        val reported = stream.reportLatestOffset().asInstanceOf[ZeekOffset]
+        val planned = files(stream.planInputPartitions(start, end))
+        assert(calls() == oneGlob, s"cap $cap: one trigger made ${calls()}, one glob $oneGlob")
+        assert(planned == want.map(i => s"f$i.log"), s"cap $cap")
+        assert(reported.watermark == 1600000050000L, reported.toString)
 
-    // a dir modified within the granularity window is never served cached
-    CountingLocalFs.reset()
-    stream.latestOffset()
-    assert(CountingLocalFs.listCalls.get > 0,
-      "freshly-modified dir must re-list (same-tick create could hide)")
-
-    // explicit opt-out always re-globs
-    val noCache = new graft.zeek.v2.ZeekMicroBatchStream(
-      bind.copy(opts = ZeekOptions(streamListingCache = Some(false))),
-      bind.patterns, bind.schema, Array.empty, conf)
-    noCache.latestOffset()
-    CountingLocalFs.reset()
-    noCache.latestOffset()
-    assert(CountingLocalFs.listCalls.get > 0)
-  }
-
-  test("streaming listing cache: a watched path created after stream start is re-resolved") {
-    // a plain (non-glob) pattern that doesn't exist at the first trigger
-    // provisionally watches its PARENT; once the path is created as a
-    // directory, files landing inside it never bump the parent's mtime —
-    // the watched set must be re-resolved or the cache goes stale forever
-    val root = ZeekFixtures.tempDir()
-    val seed = ZeekFixtures.tempDir()
-    ZeekFixtures.write(seed, "seed.log",
-      ZeekFixtures.base("t", Seq(("1.0", "S1", "100"))))
-    val conf = spark.sessionState.newHadoopConf()
-    val bind = ZeekSchema.bind(Seq(s"$seed/*.log"), ZeekOptions(), conf)
-    val logs = root.resolve("logs")
-    val stream = new graft.zeek.v2.ZeekMicroBatchStream(
-      bind, Seq(logs.toString), bind.schema, Array.empty, conf)
-
-    // trigger 1: path missing → empty, parent provisionally watched
-    assert(stream.latestOffset() == graft.zeek.v2.ZeekOffset.Empty)
-
-    // the path appears as a directory; back-date mtimes so the
-    // same-mtime-tick guard would otherwise trust a cached listing
-    java.nio.file.Files.createDirectories(logs)
-    val old = System.currentTimeMillis() - 10000
-    root.toFile.setLastModified(old)
-    logs.toFile.setLastModified(old)
-    // trigger 2: still empty, but the watch must move onto `logs` itself
-    assert(stream.latestOffset() == graft.zeek.v2.ZeekOffset.Empty)
-    root.toFile.setLastModified(old)
-    logs.toFile.setLastModified(old)
-    stream.latestOffset() // trigger 3: caches the (empty) listing of `logs`
-
-    // a file inside `logs` bumps logs' mtime but NOT the parent's — a
-    // stale parent watch would serve the cached empty listing forever
-    ZeekFixtures.write(logs, "x.log",
-      ZeekFixtures.base("t", Seq(("2.0", "X1", "200"))))
-    root.toFile.setLastModified(old)
-    val o = stream.latestOffset().asInstanceOf[graft.zeek.v2.ZeekOffset]
-    assert(o.boundary.exists(_.endsWith("x.log")),
-      s"file created inside a late-appearing watched dir was missed: ${o.boundary}")
+        // a fresh stream asked to plan an offset it did not compute (a
+        // batch replayed after a restart) lists once and plans the same files
+        val fresh = new ZeekMicroBatchStream(bind, bind.schema, Array.empty, conf)
+        CountingLocalFs.reset()
+        val replayed = files(fresh.planInputPartitions(
+          fresh.deserializeOffset(start.json), fresh.deserializeOffset(end.json)))
+        assert(calls() == oneGlob, s"cap $cap: replay made ${calls()}, one glob $oneGlob")
+        assert(replayed == planned, s"cap $cap")
+        start = end
+      }
+      assert(stream.latestOffset(start, stream.getDefaultReadLimit) == start, "idle after the backlog")
+    }
   }
 
   test("filename column golden form: plain path for local files") {

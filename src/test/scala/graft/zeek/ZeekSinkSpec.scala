@@ -69,17 +69,20 @@ class ZeekSinkSpec extends AnyFunSuite {
     assert(text.contains("#types\ttime\tinterval\taddr\tcount\tport\tbool\tdouble\tvector[string]\tvector[interval]"))
   }
 
-  test("reference corpus round trip: dns.log.gz written and re-read identically") {
+  test("dns.log.gz written and re-read identically: generated corpus, and the reference tree's when present") {
     val data = new java.io.File("/root/reference/data")
-    assume(data.isDirectory, "reference tree not present")
-    val orig = read("/root/reference/data/dns.log.gz")
-    val out = ZeekFixtures.tempDir()
-    orig.write.format("zeek").mode("append").option("compression", "gzip").save(out.toString)
-    val files = new java.io.File(out.toString).listFiles().map(_.getName).filter(_.endsWith(".log.gz"))
-    assert(files.nonEmpty, "gzip option must produce .log.gz parts")
-    val back = read(s"$out/*.log.gz")
-    assert(back.schema == orig.schema)
-    assert(collectSorted(back) == collectSorted(orig))
+    val generated = ZeekFixtures.write(ZeekFixtures.tempDir(), "dns.log.gz", ZeekFixtures.log("dns",
+      ZeekFixtures.dnsFields, ZeekFixtures.dnsTypes, ZeekFixtures.dnsRows(40)), gzip = true)
+    for (src <- generated +: Seq(s"$data/dns.log.gz").filter(_ => data.isDirectory)) {
+      val orig = read(src)
+      val out = ZeekFixtures.tempDir()
+      orig.write.format("zeek").mode("append").option("compression", "gzip").save(out.toString)
+      val files = new java.io.File(out.toString).listFiles().map(_.getName).filter(_.endsWith(".log.gz"))
+      assert(files.nonEmpty, "gzip option must produce .log.gz parts")
+      val back = read(s"$out/*.log.gz")
+      assert(back.schema == orig.schema, src)
+      assert(collectSorted(back) == collectSorted(orig), src)
+    }
   }
 
   test("zstd compression round-trips through the reader's magic-byte sniff") {
@@ -189,6 +192,17 @@ class ZeekSinkSpec extends AnyFunSuite {
     assert(perFile == Seq(1L, 3L, 3L, 3L), perFile.toString)
     assert(!new java.io.File(out.toString).listFiles()
       .exists(_.getName.contains("inprogress")))
+  }
+
+  test("a max_rows_per_file that is not a positive number fails naming the option and the value") {
+    import spark.implicits._
+    val df = Seq((1L, "a")).toDF("n", "s")
+    for (v <- Seq("ten", "0")) {
+      val e = intercept[Exception](df.write.format("zeek").mode("append")
+        .option("max_rows_per_file", v).save(ZeekFixtures.tempDir().toString))
+      val msg = chainMessages(e)
+      assert(msg.contains("max_rows_per_file") && msg.contains(s"'$v'"), msg)
+    }
   }
 
   test("stateful streaming into the sink: watermarked windowed counts land as zeek rotations") {

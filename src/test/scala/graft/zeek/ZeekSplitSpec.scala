@@ -126,8 +126,7 @@ class ZeekSplitSpec extends AnyFunSuite {
     val bind = ZeekSchema.bind(Seq(s"$dir/*.log"), ZeekOptions(), conf)
     withConf("spark.sql.files.maxPartitionBytes" -> "10000") {
       val batch = new graft.zeek.v2.ZeekScan(bind, bind.schema, Array.empty).planInputPartitions()
-      val stream = new graft.zeek.v2.ZeekMicroBatchStream(bind, bind.patterns,
-        bind.schema, Array.empty, conf)
+      val stream = new graft.zeek.v2.ZeekMicroBatchStream(bind, bind.schema, Array.empty, conf)
       val start = stream.initialOffset()
       val micro = stream.planInputPartitions(start, stream.latestOffset(start, stream.getDefaultReadLimit))
       def ranges(parts: Array[org.apache.spark.sql.connector.read.InputPartition]) =

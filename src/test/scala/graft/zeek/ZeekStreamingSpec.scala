@@ -192,8 +192,7 @@ class ZeekStreamingSpec extends AnyFunSuite {
     val conf = spark.sessionState.newHadoopConf()
     val bind = ZeekSchema.bind(Seq(s"$dir/*.log"),
       ZeekOptions(maxFilesPerTrigger = Some(2)), conf)
-    val stream = new graft.zeek.v2.ZeekMicroBatchStream(bind, bind.patterns,
-      bind.schema, Array.empty, conf)
+    val stream = new graft.zeek.v2.ZeekMicroBatchStream(bind, bind.schema, Array.empty, conf)
     val limit = stream.getDefaultReadLimit
     assert(limit.isInstanceOf[org.apache.spark.sql.connector.read.streaming.ReadMaxFiles])
 
@@ -237,8 +236,7 @@ class ZeekStreamingSpec extends AnyFunSuite {
     // countfs is not in the dir-mtime cache allowlist → every listing is real
     val bind = ZeekSchema.bind(Seq(s"countfs:$dir/*.log"),
       ZeekOptions(maxFilesPerTrigger = Some(5)), conf)
-    val stream = new graft.zeek.v2.ZeekMicroBatchStream(bind, bind.patterns,
-      bind.schema, Array.empty, conf)
+    val stream = new graft.zeek.v2.ZeekMicroBatchStream(bind, bind.schema, Array.empty, conf)
 
     CountingLocalFs.reset()
     stream.latestOffset()
@@ -272,8 +270,7 @@ class ZeekStreamingSpec extends AnyFunSuite {
     val conf = spark.sessionState.newHadoopConf()
     val bind = ZeekSchema.bind(Seq(s"$dir/*.log"),
       ZeekOptions(maxBytesPerTrigger = Some(cap)), conf)
-    val stream = new graft.zeek.v2.ZeekMicroBatchStream(bind, bind.patterns,
-      bind.schema, Array.empty, conf)
+    val stream = new graft.zeek.v2.ZeekMicroBatchStream(bind, bind.schema, Array.empty, conf)
     val limit = stream.getDefaultReadLimit
 
     var s = stream.initialOffset()
