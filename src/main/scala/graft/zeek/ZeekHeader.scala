@@ -73,11 +73,15 @@ object ZeekHeader {
     * directives ignored (reference: src/zeek_reader.cpp:50-118). Throws
     * ZeekFormatException if `#fields`/`#types` are missing or their
     * counts mismatch — which also covers non-Zeek input (e.g. a fake gzip
-    * payload or an empty file). */
-  def read(lines: ByteLineReader): ZeekHeader = {
+    * payload or an empty file). `onDirective` sees the reader on each
+    * directive line before it is applied. */
+  def read(lines: ByteLineReader, onDirective: ByteLineReader => Unit = _ => ()): ZeekHeader = {
     var h = Default
     while (lines.next() && (lines.lineEnd == lines.lineStart || lines.buf(lines.lineStart) == '#'))
-      if (lines.lineEnd > lines.lineStart) h = directive(h, lines.lineString)
+      if (lines.lineEnd > lines.lineStart) {
+        onDirective(lines)
+        h = directive(h, lines.lineString)
+      }
     if (h.fields.isEmpty)
       throw new ZeekFormatException("not a valid Zeek log file: missing #fields directive")
     if (h.types.isEmpty)

@@ -23,6 +23,13 @@ object ZeekIO {
   def warnIgnored(path: String, cause: Throwable, action: String): Unit =
     log.warn(s"ignore_file_errors: $action Zeek log '$path': ${cause.getMessage}")
 
+  /** The error a failed read of the file at `path` raises: `e` itself
+    * when it already names the file, else a wrap that does. */
+  def readFailure(path: String, e: Exception): ZeekFormatException = e match {
+    case z: ZeekFormatException if z.getMessage.contains(path) => z
+    case _ => new ZeekFormatException(s"Failed to read Zeek log '$path': ${e.getMessage}")
+  }
+
   /** An open Zeek file. `in` reads its decompressed bytes from the start;
     * `raw` is the positioned file stream beneath it, which a ranged read
     * of a plain file seeks once the header is read. Compressed streams

@@ -67,13 +67,26 @@ object ZeekWriteCore {
     * the canonical form would re-parse inexactly, a 7th digit `5` is
     * appended — the value then re-parses to exactly `micros` (error
     * < 0.5 µs before truncation). Re-parse fidelity beats canonical
-    * formatting: the sink's contract is a lossless round trip. */
+    * formatting: the sink's contract is a lossless round trip.
+    *
+    * Below 2^53 µs the canonical text's re-parse is tested without
+    * parsing it: `micros.toDouble` is exact there, so `micros / 1e6` is
+    * the correctly rounded quotient — the same double `parseDouble`
+    * returns for the text. */
   def renderMicros(micros: Long): String = {
-    val sign = if (micros < 0) "-" else ""
     val m = math.abs(micros)
-    val canonical = s"$sign${m / 1000000L}.${"%06d".format(m % 1000000L)}"
+    val frac = (m % 1000000L).toInt
+    val sb = new java.lang.StringBuilder(24)
+    if (micros < 0) sb.append('-')
+    sb.append(m / 1000000L).append('.')
+    var p = 100000
+    while (p > 0) { sb.append(('0' + frac / p % 10).toChar); p /= 10 }
+    val canonical = sb.toString
     def reparse(s: String): Long = (java.lang.Double.parseDouble(s) * 1e6).toLong
-    if (reparse(canonical) == micros) canonical
+    val exact =
+      if (m < (1L << 53)) ((micros.toDouble / 1e6) * 1e6).toLong == micros
+      else reparse(canonical) == micros
+    if (exact) canonical
     else {
       // exact target micros + 0.5: survives the truncation (error < 0.5 µs)
       val compensated = canonical + "5"
@@ -193,8 +206,13 @@ object ZeekWriteCore {
     sb.toString
   }
 
-  def footer(closeMs: Long): String = s"#close$Sep${stampText(closeMs)}\n"
+  /** One `#name<sep>value` directive line, newline included; the
+    * separator is one byte, as the scanner splits on it. */
+  def directive(name: String, sep: Char, value: String): Array[Byte] =
+    (s"#$name".getBytes(java.nio.charset.StandardCharsets.UTF_8) :+ sep.toByte) ++
+      s"$value\n".getBytes(java.nio.charset.StandardCharsets.UTF_8)
 
+  /** One row's cells, separator-joined, without the newline. */
   def renderRow(cols: Array[ColumnSpec], row: InternalRow): String = {
     val sb = new java.lang.StringBuilder
     var i = 0
@@ -203,7 +221,6 @@ object ZeekWriteCore {
       sb.append(cols(i).render(row, i))
       i += 1
     }
-    sb.append('\n')
     sb.toString
   }
 }

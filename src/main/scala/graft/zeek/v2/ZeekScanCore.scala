@@ -118,14 +118,9 @@ object ZeekLineScanner {
     } catch {
       case e: Exception =>
         scanner.close()
-        e match {
-          case _ if opts.ignoreFileErrors =>
-            ZeekIO.warnIgnored(spec.path, e, "skipped")
-            None
-          case z: ZeekFormatException if z.getMessage.contains(spec.path) => throw z
-          case _ =>
-            throw new ZeekFormatException(s"Failed to read Zeek log '${spec.path}': ${e.getMessage}")
-        }
+        if (!opts.ignoreFileErrors) throw ZeekIO.readFailure(spec.path, e)
+        ZeekIO.warnIgnored(spec.path, e, "skipped")
+        None
     }
   }
 }

@@ -1,8 +1,6 @@
 package graft.zeek.v2
 
-import java.io.OutputStream
 import java.nio.charset.StandardCharsets
-import java.util.zip.GZIPOutputStream
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.broadcast.Broadcast
@@ -23,10 +21,11 @@ import graft.zeek._
   * Layout and scale model mirror the read side: ONE log file per input
   * partition (`part-NNNNN-<task>-<epoch>.log[.gz]`), written through the
   * Hadoop FileSystem API (works on HDFS/object stores), no driver-side
-  * data movement. Tasks write to a dot-prefixed temp name and rename on
-  * task commit, so concurrent readers and task retries never observe a
-  * half-written log; speculative duplicates are impossible to commit
-  * twice under distinct names + rename-if-absent semantics.
+  * data movement. Tasks write through [[ZeekPartRoller]] (the part
+  * writer `Zeek.recompress` shares) to a dot-prefixed temp name and
+  * rename on task commit, so concurrent readers and task retries never
+  * observe a half-written log; speculative duplicates are impossible to
+  * commit twice under distinct names + rename-if-absent semantics.
   *
   * Options: `compression` = gzip|zstd|none (default none; both match the
   * reader's magic-byte sniffing), `zeek_path` = the `#path` directive
@@ -41,20 +40,9 @@ class ZeekWriteBuilder(info: LogicalWriteInfo, dir: String,
   private var truncateFirst = false
   override def truncate(): WriteBuilder = { truncateFirst = true; this }
 
-  private def codec: String =
-    Option(props.get("compression")).map(_.trim.toLowerCase) match {
-      case None | Some("none") | Some("uncompressed") => "none"
-      case Some("gzip") | Some("gz")                  => "gzip"
-      case Some("zstd") | Some("zst")                 => "zstd"
-      case Some(other) =>
-        throw new ZeekFormatException(s"zeek sink: unsupported compression '$other' (gzip|zstd|none)")
-    }
+  private def codec: String = ZeekParts.codec(Option(props.get("compression")))
 
-  private def pathName: String = Option(props.get("zeek_path")).getOrElse {
-    val base = new Path(dir).getName
-    val dot = base.indexOf('.')
-    if (dot > 0) base.substring(0, dot) else base
-  }
+  private def pathName: String = Option(props.get("zeek_path")).getOrElse(ZeekParts.logName(dir))
 
   private def maxRowsPerFile: Long =
     ZeekOptions.opt(props, "max_rows_per_file", " (must be > 0)")(_.toLongOption.filter(_ > 0))
@@ -127,17 +115,15 @@ class ZeekStreamingWrite(schema: StructType, dir: String, pathName: String,
     if (stale != null)
       stale.filter(s => !committed.contains(s.getPath.getName))
         .foreach(s => fs.delete(s.getPath, false))
-    ZeekDataSource.clearBindCache()
+    ZeekParts.committed()
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     // clear only THIS query's + epoch's temps — a concurrent writer's
     // in-progress files (or a racing restart's) must not be clobbered
     val dirPath = new Path(dir)
-    val fs = dirPath.getFileSystem(conf.value.value)
-    val epochPrefix = f".zeek-part-q$qid-e$epochId%05d-"
-    val temps = fs.globStatus(new Path(dirPath, epochPrefix + "*"))
-    if (temps != null) temps.foreach(s => fs.delete(s.getPath, false))
+    ZeekParts.deleteGlob(dirPath.getFileSystem(conf.value.value), dirPath,
+      f".zeek-part-q$qid-e$epochId%05d-*")
   }
 }
 
@@ -159,17 +145,7 @@ class ZeekBatchWrite(schema: StructType, dir: String, pathName: String,
     ZeekWriteCore.columns(schema) // validate renderability on the driver, not mid-task
     val dirPath = new Path(dir)
     val fs = dirPath.getFileSystem(conf.value.value)
-    if (truncateFirst && fs.exists(dirPath)) {
-      // overwrite: drop previous log part-files (ours or not), keep the dir
-      fs.listStatus(dirPath).filterNot(_.isDirectory)
-        .filter { s =>
-          val n = s.getPath.getName
-          n.endsWith(".log") || n.endsWith(".log.gz") || n.endsWith(".log.zst") ||
-            n.startsWith(".zeek-")
-        }
-        .foreach(s => fs.delete(s.getPath, false))
-    }
-    fs.mkdirs(dirPath)
+    ZeekParts.prepare(fs, dirPath, overwrite = truncateFirst)
     if (!truncateFirst) validateAppendCompatible(fs, dirPath)
     ZeekWriterFactory(schema, dir, pathName, codec, jobTag, maxRowsPerFile, conf)
   }
@@ -184,11 +160,7 @@ class ZeekBatchWrite(schema: StructType, dir: String, pathName: String,
   private def validateAppendCompatible(fs: org.apache.hadoop.fs.FileSystem,
       dirPath: Path): Unit = {
     val existing = if (!fs.exists(dirPath)) Array.empty[org.apache.hadoop.fs.FileStatus]
-      else fs.listStatus(dirPath).filterNot(_.isDirectory)
-        .filter { s =>
-          val n = s.getPath.getName
-          n.endsWith(".log") || n.endsWith(".log.gz") || n.endsWith(".log.zst")
-        }
+      else fs.listStatus(dirPath).filterNot(_.isDirectory).filter(s => ZeekParts.isLog(s.getPath.getName))
     existing.headOption.foreach { s =>
       val header = ZeekIO.header(s.getPath.toString, conf.value.value)
       val cols = ZeekWriteCore.columns(schema)
@@ -201,19 +173,13 @@ class ZeekBatchWrite(schema: StructType, dir: String, pathName: String,
     }
   }
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit =
-    ZeekDataSource.clearBindCache() // a same-TTL read must see the new parts
+  override def commit(messages: Array[WriterCommitMessage]): Unit = ZeekParts.committed()
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     // best effort: clear THIS job's in-progress temps (batch temp names
     // embed the job tag) — never a concurrent job's
     val dirPath = new Path(dir)
-    val fs = dirPath.getFileSystem(conf.value.value)
-    if (fs.exists(dirPath))
-      fs.listStatus(dirPath).filter { s =>
-        val n = s.getPath.getName
-        n.startsWith(".zeek-") && n.contains(s"-$jobTag")
-      }.foreach(s => fs.delete(s.getPath, false))
+    ZeekParts.deleteGlob(dirPath.getFileSystem(conf.value.value), dirPath, s".zeek-*-$jobTag*")
   }
 }
 
@@ -235,67 +201,29 @@ class ZeekDataWriter(schema: StructType, dir: String, pathName: String,
     extends DataWriter[InternalRow] {
 
   private val cols = ZeekWriteCore.columns(schema)
-  private val ext = codec match {
-    case "gzip" => ".log.gz"
-    case "zstd" => ".log.zst"
-    case _      => ".log"
-  }
 
   /** Batch names carry the task id + a per-job tag (several appends —
     * even from concurrent applications — must not collide); streaming
     * names carry the query id and are deterministic in (epoch,
     * partition) within it, so epoch replays overwrite instead of
-    * duplicating while other queries' rotations stay untouchable. With
-    * `max_rows_per_file` a task rolls through `-rN` suffixed files (the
-    * size axis of zeek's own rotation model) — roll points are
-    * data-deterministic, so streaming names stay replay-stable. */
-  private def finalName(roll: Int): String = {
-    val suffix = if (maxRowsPerFile == Long.MaxValue) "" else s"-r$roll"
-    epoch match {
-      case Some(e) => f"part-q$streamTag-e$e%05d-p$partitionId%05d$suffix$ext"
-      case None    => f"part-$partitionId%05d-$taskId-$jobTag$suffix$ext"
-    }
+    * duplicating while other queries' rotations stay untouchable. Roll
+    * points are data-deterministic, so streaming names stay
+    * replay-stable. */
+  private val stem = epoch match {
+    case Some(e) => f"part-q$streamTag-e$e%05d-p$partitionId%05d"
+    case None    => f"part-$partitionId%05d-$taskId-$jobTag"
   }
 
-  private val fs = new Path(dir).getFileSystem(conf.value.value)
-
-  private var out: OutputStream = _
-  private var roll = 0
-  private var fileRows = 0L
-  private var anyRows = false
-  // closed rolls stay TEMPS until task commit — a task that dies after
-  // rolling must leave nothing visible, and its retry must not duplicate
-  private val closed = scala.collection.mutable.ArrayBuffer.empty[(Path, Path)]
-  private var currentTmp: Path = _
-
-  private def ensureOpen(): Unit = if (out == null) {
-    currentTmp = new Path(dir, s".zeek-${finalName(roll)}.$taskId.inprogress")
-    val raw = fs.create(currentTmp, true)
-    out = codec match {
-      case "gzip" => new GZIPOutputStream(raw, 64 * 1024)
-      case "zstd" => new com.github.luben.zstd.ZstdOutputStream(raw)
-      case _      => raw
-    }
-    write(ZeekWriteCore.header(cols, pathName, System.currentTimeMillis()))
-    fileRows = 0L
+  private val parts = {
+    val dirPath = new Path(dir)
+    new ZeekPartRoller(dirPath.getFileSystem(conf.value.value), dirPath, stem, codec, taskId,
+      maxRowsPerFile, () => ZeekWriteCore.header(cols, pathName, System.currentTimeMillis())
+        .getBytes(StandardCharsets.UTF_8), ZeekWriteCore.Sep)
   }
-
-  private def closeCurrentFile(): Unit = if (out != null) {
-    write(ZeekWriteCore.footer(System.currentTimeMillis()))
-    out.close()
-    out = null
-    closed += ((currentTmp, new Path(dir, finalName(roll))))
-    roll += 1
-  }
-
-  private def write(s: String): Unit = out.write(s.getBytes(StandardCharsets.UTF_8))
 
   override def write(record: InternalRow): Unit = {
-    ensureOpen()
-    write(ZeekWriteCore.renderRow(cols, record))
-    fileRows += 1
-    anyRows = true
-    if (fileRows >= maxRowsPerFile) closeCurrentFile()
+    val b = ZeekWriteCore.renderRow(cols, record).getBytes(StandardCharsets.UTF_8)
+    parts.line(b, 0, b.length)
   }
 
   override def commit(): WriterCommitMessage = {
@@ -303,24 +231,11 @@ class ZeekDataWriter(schema: StructType, dir: String, pathName: String,
     // an empty frame round-trips to an empty table with schema); all
     // other empty partitions — and every empty streaming epoch partition
     // — emit nothing
-    if (!anyRows && partitionId == 0 && epoch.isEmpty) ensureOpen()
-    closeCurrentFile()
-    closed.foreach { case (tmp, fin) =>
-      // streaming epoch replay: the deterministic name already exists —
-      // replace it (same data re-rendered), keeping recovery idempotent
-      if (epoch.isDefined && fs.exists(fin)) fs.delete(fin, false)
-      if (!fs.rename(tmp, fin))
-        throw new ZeekFormatException(s"zeek sink: could not commit '$fin'")
-    }
-    ZeekTaskCommit(closed.map(_._2.toString).mkString(","))
+    ZeekTaskCommit(parts.commit(headerOnly = partitionId == 0 && epoch.isEmpty,
+      replace = epoch.isDefined).mkString(","))
   }
 
-  override def abort(): Unit = {
-    if (out != null) { try out.close() catch { case _: Exception => () }; out = null }
-    if (currentTmp != null) fs.delete(currentTmp, false)
-    closed.foreach { case (tmp, _) => fs.delete(tmp, false) }
-  }
+  override def abort(): Unit = parts.abort()
 
-  override def close(): Unit =
-    if (out != null) { try out.close() catch { case _: Exception => () }; out = null }
+  override def close(): Unit = parts.close()
 }

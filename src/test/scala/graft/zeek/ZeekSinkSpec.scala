@@ -39,6 +39,41 @@ class ZeekSinkSpec extends AnyFunSuite {
     }
   }
 
+  test("renderMicros renders exactly as the String.format + parseDouble formula") {
+    // the formula renderMicros replaced, kept as the oracle
+    def formula(micros: Long): String = {
+      val sign = if (micros < 0) "-" else ""
+      val m = math.abs(micros)
+      val canonical = s"$sign${m / 1000000L}.${"%06d".format(m % 1000000L)}"
+      def reparse(s: String): Long = (java.lang.Double.parseDouble(s) * 1e6).toLong
+      if (reparse(canonical) == micros) canonical
+      else {
+        val compensated = canonical + "5"
+        if (reparse(compensated) == micros) compensated else canonical
+      }
+    }
+    val rnd = new java.util.SplittableRandom(20261019L)
+    val edge = 1L << 53
+    val adversarial = Seq(0L, 1L, -1L, 999999L, 1000000L, 1612345678123456L,
+      253402300799999999L, -62135596800000000L)
+    val edges = Seq(edge - 2, edge - 1, edge, edge + 1, edge + 2).flatMap(m => Seq(m, -m))
+    val random = Iterator.tabulate(1200000) { i =>
+      val m = i % 3 match {
+        case 0 => rnd.nextLong(-edge, edge)                            // the exact range
+        case 1 => rnd.nextLong(1000000000000000L, 2000000000000000L) // epochs of today
+        case _ => rnd.nextLong(Long.MinValue + 1, Long.MaxValue)       // everything else
+      }
+      if (i % 2 == 0) m else -m
+    }
+    var n = 0
+    (adversarial.iterator ++ edges ++ random).foreach { m =>
+      val s = ZeekWriteCore.renderMicros(m)
+      if (s != formula(m)) fail(s"micros $m rendered '$s', the formula '${formula(m)}'")
+      n += 1
+    }
+    assert(n >= 1000000)
+  }
+
   test("full-type round trip: read → write → read is value-identical") {
     val dir = ZeekFixtures.tempDir()
     val content = ZeekFixtures.header("rt",

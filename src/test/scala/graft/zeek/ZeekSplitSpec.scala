@@ -171,4 +171,161 @@ class ZeekSplitSpec extends AnyFunSuite {
       spark.sessionState.newHadoopConf())
     assert(header.path.contains("t"), header.path.toString)
   }
+
+  private def chainMessages(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" | ")
+
+  /** The decompressed lines of a file, through the reader's opener. */
+  private def textLines(path: String): Seq[String] = {
+    val in = ZeekIO.open(path, spark.sessionState.newHadoopConf())
+    try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+    finally in.close()
+  }
+
+  /** The files of `dir` but the local filesystem's `.crc` checksums. */
+  private def names(dir: String): Seq[String] =
+    new java.io.File(dir).listFiles().map(_.getName).filterNot(_.endsWith(".crc")).sorted.toSeq
+
+  private def parts(dir: String): Seq[String] =
+    names(dir).filter(_.endsWith(".log.zst")).map(n => s"$dir/$n")
+
+  private def rowsOf(path: String): Seq[String] =
+    spark.read.format("zeek").load(path).collect().map(_.toString).sorted.toSeq
+
+  test("recompress copies lines: custom separator and markers, escaped text and exact times survive") {
+    val dir = ZeekFixtures.tempDir()
+    val src = Seq(
+      "#separator \\x7c",
+      "#set_separator|;",
+      "#empty_field|EMPTY",
+      "#unset_field|NULL",
+      "#path|custom",
+      "#open|2026-01-16-00-00-01",
+      "#fields|ts|s|tags|n",
+      "#types|time|string|set[string]|count",
+      "1612345678.123456789|a\\x09b|-|1",
+      "",
+      "NULL|plain|x;y|2",
+      "# a mid-file comment",
+      "1.5|EMPTY|NULL|NULL",
+      "1.000000001|-|-;NULL|4",
+      "2.25|(empty)|EMPTY|5",
+      "#close|2026-01-16-01-00-00")
+    val p = ZeekFixtures.write(dir, "custom.log.gz", src.mkString("", "\n", "\n"), gzip = true)
+    val out = s"$dir/parts"
+    Zeek.recompress(spark, p, out, rowsPerFile = 2L)
+
+    val ps = parts(out)
+    assert(ps.length == 3, ps.toString)
+    val texts = ps.map(textLines)
+    // every part: the source's directives verbatim but #close, then data, then a fresh #close
+    val directives = src.take(8)
+    texts.foreach { t =>
+      assert(t.take(8) == directives, t.toString)
+      assert(t.last.startsWith("#close|") && t.last != src.last, t.last)
+    }
+    val data = src.filter(l => l.nonEmpty && !l.startsWith("#"))
+    assert(texts.flatMap(_.drop(8).dropRight(1)) == data)
+    val srcDf = spark.read.format("zeek").load(p)
+    val partsDf = spark.read.format("zeek").load(s"$out/*.log.zst")
+    assert(partsDf.schema == srcDf.schema)
+    assert(rowsOf(s"$out/*.log.zst") == rowsOf(p))
+    val r = partsDf.filter(col("n") === 1).select("s", "tags").collect().head
+    assert(r.getString(0) == "a\\x09b" && r.getSeq[String](1) == Seq("-"), r.toString)
+  }
+
+  test("recompress of a glob: one task per file, each file's rows in its own parts") {
+    val dir = ZeekFixtures.tempDir()
+    val header = ZeekFixtures.header("t", Seq("ts", "id", "value"), Seq("time", "string", "count"))
+    for (f <- Seq("a", "b", "c"))
+      ZeekFixtures.write(dir, s"$f.log.gz",
+        header + (0 until 4).map(i => s"$i.5\t${f}_$i\t$i\n").mkString, gzip = true)
+    val out = s"$dir/parts"
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (j.properties != null && j.properties.getProperty("spark.jobGroup.id") == "recompress-glob")
+          jobs.add(j.stageInfos.map(_.numTasks).sum)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("recompress-glob", "recompress of three files")
+      try Zeek.recompress(spark, s"$dir/*.log.gz", out, rowsPerFile = 3L)
+      finally sc.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 10000
+      while (jobs.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(20)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.toArray.toSeq == Seq(3), "one job of one task per input file")
+
+    val ps = parts(out)
+    assert(ps.length == 6, ps.toString) // 4 rows per file, 3 per part
+    for ((f, i) <- Seq("a", "b", "c").zipWithIndex) {
+      val own = ps.filter(_.split('/').last.startsWith(f"part-$i%05d-"))
+      assert(own.length == 2, s"$f: $ps")
+      val ids = own.flatMap(textLines).filterNot(_.startsWith("#")).map(_.split('\t')(1))
+      assert(ids == (0 until 4).map(k => s"${f}_$k"), ids.toString)
+    }
+    assert(rowsOf(s"$out/*.log.zst") == rowsOf(s"$dir/*.log.gz"))
+  }
+
+  test("recompress of a glob with a mismatched header fails naming the file") {
+    val dir = ZeekFixtures.tempDir()
+    ZeekFixtures.write(dir, "a.log", bigLog(10))
+    val odd = ZeekFixtures.write(dir, "b.log",
+      ZeekFixtures.header("t", Seq("ts", "id"), Seq("time", "string")) + "1.5\tx\n")
+    val out = s"$dir/parts"
+    val e = intercept[Exception](Zeek.recompress(spark, s"$dir/*.log", out))
+    val msg = chainMessages(e)
+    assert(msg.contains(odd) && msg.contains("mismatch"), msg)
+    assert(names(out).isEmpty, "a failed rewrite leaves none of its parts: " + names(out))
+  }
+
+  test("recompress of a truncated gzip fails naming the file and leaves no part or temp") {
+    val dir = ZeekFixtures.tempDir()
+    val whole = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(
+      ZeekFixtures.write(dir, "whole.log.gz", bigLog(20000), gzip = true)))
+    val p = ZeekFixtures.writeRaw(dir, "cut.log.gz", whole.take(whole.length / 2))
+    val out = s"$dir/parts"
+    val e = intercept[Exception](Zeek.recompress(spark, p, out, rowsPerFile = 3000L))
+    assert(chainMessages(e).contains(p), chainMessages(e))
+    assert(names(out).isEmpty, names(out).toString)
+  }
+
+  test("a second recompress into the same directory leaves only its parts and keeps foreign files") {
+    val dir = ZeekFixtures.tempDir()
+    val p = ZeekFixtures.write(dir, "conn.log.gz", bigLog(9000), gzip = true)
+    val out = s"$dir/parts"
+    Zeek.recompress(spark, p, out, rowsPerFile = 2000L)
+    assert(parts(out).length == 5)
+    val foreign = new java.io.File(out, "README.txt")
+    java.nio.file.Files.write(foreign.toPath, "keep me".getBytes("UTF-8"))
+    Zeek.recompress(spark, p, out, rowsPerFile = 5000L)
+    assert(parts(out).length == 2, names(out).toString)
+    assert(names(out).toSet == parts(out).map(_.split('/').last).toSet + "README.txt")
+    assert(rowsOf(s"$out/*.log.zst") == rowsOf(p))
+    // the parts as input of a rewrite into their own directory would be
+    // deleted before they are read: refused, and the parts stay
+    val e = intercept[ZeekFormatException](Zeek.recompress(spark, s"$out/*.log.zst", out))
+    assert(e.getMessage.contains("output directory"), e.getMessage)
+    assert(parts(out).length == 2)
+  }
+
+  test("recompress of a header-only source yields one header-only part, #path from its name") {
+    val dir = ZeekFixtures.tempDir()
+    val header = ZeekFixtures.header("t", Seq("ts", "id"), Seq("time", "string"))
+      .linesWithSeparators.filterNot(_.startsWith("#path")).mkString
+    val p = ZeekFixtures.write(dir, "empty.log", header + "#close\t2026-01-16-01-00-00\n")
+    val out = s"$dir/parts"
+    Zeek.recompress(spark, p, out)
+    val ps = parts(out)
+    assert(ps.length == 1, ps.toString)
+    val text = textLines(ps.head)
+    assert(text.forall(_.startsWith("#")))
+    assert(text.indexOf("#path\tempty") >= 0 &&
+      text.indexOf("#path\tempty") < text.indexWhere(_.startsWith("#open")), text.toString)
+    val back = spark.read.format("zeek").load(ps.head)
+    assert(back.schema == spark.read.format("zeek").load(p).schema)
+    assert(back.count() == 0)
+  }
 }
