@@ -36,6 +36,9 @@ object Zeek {
     * not match or cannot be read fails the rewrite naming it, and leaves
     * none of this rewrite's parts behind. `outDir` is overwritten like
     * the sink's `mode("overwrite")`: its Zeek logs go, other files stay.
+    * Fewer input files than the default parallelism leave cores idle, so
+    * then each task inflates its file ahead on a helper thread while it
+    * copies lines ([[ZeekIO.openFile]]).
     *
     * `rowsPerFile` sizes the parts: pick `target_part_bytes /
     * avg_row_bytes` (e.g. ~4M conn rows ≈ 1 GB uncompressed ≈ 128 MB
@@ -68,15 +71,16 @@ object Zeek {
     ZeekParts.prepare(fs, dir, overwrite = true)
     val jobTag = java.util.UUID.randomUUID().toString.substring(0, 8)
     val bconf = ZeekDataSource.broadcastConf(conf)
+    val readAhead = files.length < spark.sparkContext.defaultParallelism
     try {
       spark.sparkContext.parallelize(files.zipWithIndex, files.length).foreach { case (f, i) =>
-        copyFile(f, i, first, files.head, outDir, partCodec, rowsPerFile, jobTag, bconf.value.value)
+        copyFile(f, i, first, files.head, outDir, partCodec, rowsPerFile, jobTag, readAhead,
+          bconf.value.value)
       }
     } catch {
       case e: Exception =>
         // no half copy: drop what this rewrite's tasks published or left
-        ZeekParts.deleteGlob(fs, dir, s".zeek-*-$jobTag*")
-        ZeekParts.deleteGlob(fs, dir, s"part-*-$jobTag*")
+        ZeekParts.deleteJob(fs, dir, jobTag)
         throw e
     }
     ZeekParts.committed()
@@ -89,11 +93,12 @@ object Zeek {
   /** One recompress task: the data lines of the file at `path` (input
     * `index`) copied into rotated parts named like a sink task's. */
   private def copyFile(path: String, index: Int, first: ZeekHeader, firstPath: String,
-      outDir: String, codec: String, rowsPerFile: Long, jobTag: String,
+      outDir: String, codec: String, rowsPerFile: Long, jobTag: String, readAhead: Boolean,
       conf: Configuration): Unit = {
     val dir = new Path(outDir)
     val fs = dir.getFileSystem(conf)
-    val in = try ZeekIO.open(path, conf) catch { case e: Exception => throw ZeekIO.readFailure(path, e) }
+    val in = try ZeekIO.openFile(path, conf, readAhead).in
+      catch { case e: Exception => throw ZeekIO.readFailure(path, e) }
     var parts: ZeekPartRoller = null
     try {
       val lines = new ByteLineReader(in)
@@ -128,7 +133,10 @@ object Zeek {
     } catch {
       case e: Exception =>
         if (parts != null) parts.abort()
-        throw (e match { case k: TaskKilledException => k; case _ => ZeekIO.readFailure(path, e) })
+        throw (e match {
+          case _: TaskKilledException | _: InterruptedException => e
+          case _ => ZeekIO.readFailure(path, e)
+        })
     } finally in.close()
   }
 

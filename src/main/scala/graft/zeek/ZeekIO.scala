@@ -37,17 +37,30 @@ object ZeekIO {
     * Closing `in` closes `raw`. */
   final class ZeekFile(val raw: FSDataInputStream, val in: InputStream, val compressed: Boolean)
 
-  /** The one opener: whole-file and ranged reads, headers and data. */
-  def openFile(path: String, conf: Configuration): ZeekFile = {
+  /** The one opener: whole-file and ranged reads, headers and data.
+    *
+    * With `readAhead` a gzip or zstd stream is inflated ahead on a helper
+    * thread ([[ReadAheadInputStream]]), so the one task that reads a
+    * non-splittable file no longer inflates and parses in turn. Callers
+    * set it only when their job leaves task slots idle (a scan planned
+    * into fewer partitions than its minimum partition count, a
+    * recompress of fewer files than the default parallelism): where
+    * every slot already reads, the helpers only contend for the cores
+    * (BASELINE.md, "Zeek read-ahead on a spare core"). Plain files and
+    * bind-time header reads are never read ahead. */
+  def openFile(path: String, conf: Configuration, readAhead: Boolean): ZeekFile = {
     val p = new Path(path)
     val raw = p.getFileSystem(conf).open(p)
     val buffered = new BufferedInputStream(raw, 64 * 1024)
-    val in = decode(buffered)
-    new ZeekFile(raw, in, in ne buffered)
+    val decoded = decode(buffered)
+    val compressed = decoded ne buffered
+    new ZeekFile(raw, if (readAhead && compressed) new ReadAheadInputStream(decoded) else decoded,
+      compressed)
   }
 
-  /** Open a (possibly compressed) file as a decompressed stream. */
-  def open(path: String, conf: Configuration): InputStream = openFile(path, conf).in
+  /** Open a (possibly compressed) file as a decompressed stream, read on
+    * the calling thread. */
+  def open(path: String, conf: Configuration): InputStream = openFile(path, conf, readAhead = false).in
 
   /** `in` through the decompressor its first bytes announce: gzip (1f 8b)
     * or zstd (28 b5 2f fd); `in` itself for anything else. */

@@ -37,9 +37,15 @@ import graft.zeek._
   * reclaimed until its `reset()`). A pushed LIMIT counts the partition's
   * passing rows, as a LocalLimit does. List columns fill the array
   * vector's child with one run of elements per row.
+  *
+  * When the scan has fewer partitions than task slots, the partition says
+  * `readAhead` ([[ZeekPlanning]]) and a gzip or zstd file inflates on a
+  * helper thread while this one tokenizes and parses, so a single
+  * compressed log costs about its parse instead of inflate plus parse.
   */
 final class ZeekColumnarPartitionReader(
     specs: Seq[ZeekFileSpec],
+    readAhead: Boolean,
     boundHeader: ZeekHeader,
     dataSchema: StructType,
     opts: ZeekOptions,
@@ -73,7 +79,7 @@ final class ZeekColumnarPartitionReader(
   private def nextFile(): Boolean = {
     while (files.hasNext) {
       val spec = files.next()
-      ZeekLineScanner.open(spec, boundHeader, dataSchema, opts, required, conf) match {
+      ZeekLineScanner.open(spec, boundHeader, dataSchema, opts, required, conf, readAhead) match {
         case Some((s, p)) =>
           scanner = s
           proj = p

@@ -14,9 +14,11 @@ import graft.zeek._
   * emits ONE row with their sum. Strict-mode schema validation and the
   * ignore_file_errors policy behave exactly like a data scan: a
   * mismatched file still errors a COUNT(*), and an ignored bad file
-  * contributes zero. */
+  * contributes zero. Compressed files are read ahead when the partition
+  * says so ([[ZeekInputPartition]]). */
 final class ZeekCountPartitionReader(
     specs: Seq[ZeekFileSpec],
+    readAhead: Boolean,
     boundHeader: ZeekHeader,
     dataSchema: StructType,
     opts: ZeekOptions,
@@ -32,7 +34,7 @@ final class ZeekCountPartitionReader(
     var n = 0L
     specs.foreach { spec =>
       // an empty projection: the per-file schema check only
-      ZeekLineScanner.open(spec, boundHeader, dataSchema, opts, new StructType(), conf)
+      ZeekLineScanner.open(spec, boundHeader, dataSchema, opts, new StructType(), conf, readAhead)
         .foreach { case (scanner, _) =>
           try while (scanner.nextDataLine()) n += 1
           finally scanner.close()

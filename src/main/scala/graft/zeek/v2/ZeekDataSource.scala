@@ -254,9 +254,11 @@ final case class ZeekCountReaderFactory(
     opts: ZeekOptions,
     conf: Broadcast[SerializableConfiguration],
     nCounts: Int) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.catalyst.InternalRow] =
-    new ZeekCountPartitionReader(partition.asInstanceOf[ZeekInputPartition].specs,
-      boundHeader, dataSchema, opts, conf.value.value, nCounts)
+  override def createReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.catalyst.InternalRow] = {
+    val p = partition.asInstanceOf[ZeekInputPartition]
+    new ZeekCountPartitionReader(p.specs, p.readAhead, boundHeader, dataSchema, opts,
+      conf.value.value, nCounts)
+  }
 }
 
 class ZeekScan(bind: ZeekBind, required: StructType, pushed: Array[Filter],
@@ -327,8 +329,11 @@ class ZeekScan(bind: ZeekBind, required: StructType, pushed: Array[Filter],
 }
 
 /** The files one task reads, in path order: whole files and byte ranges
-  * of cut ones. */
-final case class ZeekInputPartition(specs: Seq[ZeekFileSpec]) extends InputPartition
+  * of cut ones. `readAhead`: its compressed files inflate on a helper
+  * thread ([[ZeekIO.openFile]]), set when the plan leaves task slots
+  * idle. */
+final case class ZeekInputPartition(specs: Seq[ZeekFileSpec], readAhead: Boolean)
+    extends InputPartition
 
 /** Input partitions of a Zeek scan or micro-batch, computed purely from
   * bind-time lengths (no filesystem RPCs at plan time) by Spark's own
@@ -347,7 +352,13 @@ final case class ZeekInputPartition(specs: Seq[ZeekFileSpec]) extends InputParti
   * A log of tens of MB therefore still gets a task of its own — the
   * reference's one thread per file — while 150 tiny rotations share a
   * handful of tasks. Unlike Spark, pieces are walked in path order, not by
-  * size, so a scan's row order stays the files' order. */
+  * size, so a scan's row order stays the files' order.
+  *
+  * A plan of fewer partitions than `minPartitionNum` leaves task slots
+  * idle, so its partitions read ahead: each compressed stream inflates on
+  * a spare core while its task parses. A plan that fills the slots does
+  * not, since there the helper threads would only contend with the
+  * tasks for the cores. */
 object ZeekPlanning {
   /** A file's or range's bytes as the planner and `estimateStatistics`
     * see them: the bind-time on-disk length (or the range's share of it),
@@ -380,21 +391,23 @@ object ZeekPlanning {
       else (0L until len by maxSplit).map(start =>
         spec.copy(start = start, end = if (start + maxSplit >= len) -1L else start + maxSplit))
     }
-    val out = Array.newBuilder[InputPartition]
+    val out = Seq.newBuilder[List[ZeekFileSpec]]
     val current = scala.collection.mutable.ArrayBuffer.empty[ZeekFileSpec]
     var currentSize = 0L
     pieces.foreach { piece =>
       val size = estimatedSize(piece)
       if (current.nonEmpty && currentSize + size > maxSplit) {
-        out += ZeekInputPartition(current.toList)
+        out += current.toList
         current.clear()
         currentSize = 0L
       }
       current += piece
       currentSize += size + openCost
     }
-    if (current.nonEmpty) out += ZeekInputPartition(current.toList)
-    out.result()
+    if (current.nonEmpty) out += current.toList
+    val packed = out.result()
+    packed.map(ZeekInputPartition(_, readAhead = packed.length < minPartitionNum))
+      .toArray[InputPartition]
   }
 
   /** The files of `bind` whose display path passes every filter in
@@ -433,7 +446,9 @@ final case class ZeekPartitionReaderFactory(
   override def createReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.catalyst.InternalRow] =
     throw new UnsupportedOperationException("Zeek data scans are columnar")
 
-  override def createColumnarReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
-    new ZeekColumnarPartitionReader(partition.asInstanceOf[ZeekInputPartition].specs,
-      boundHeader, dataSchema, opts, required, pushed, conf.value.value, limit)
+  override def createColumnarReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
+    val p = partition.asInstanceOf[ZeekInputPartition]
+    new ZeekColumnarPartitionReader(p.specs, p.readAhead, boundHeader, dataSchema, opts,
+      required, pushed, conf.value.value, limit)
+  }
 }

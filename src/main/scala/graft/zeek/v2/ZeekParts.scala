@@ -141,4 +141,12 @@ object ZeekParts {
     * cleanup of one job's or epoch's files, never another's). */
   def deleteGlob(fs: FileSystem, dir: Path, pattern: String): Unit =
     Option(fs.globStatus(new Path(dir, pattern))).foreach(_.foreach(s => fs.delete(s.getPath, false)))
+
+  /** Deletes what the batch job tagged `jobTag` left in `dir`: its temps
+    * and the parts its tasks committed (both names embed the tag), so a
+    * failed job leaves no half write and touches no other job's files. */
+  def deleteJob(fs: FileSystem, dir: Path, jobTag: String): Unit = {
+    deleteGlob(fs, dir, s".zeek-*-$jobTag*")
+    deleteGlob(fs, dir, s"part-*-$jobTag*")
+  }
 }

@@ -17,10 +17,11 @@ import graft.zeek._
   * and the ignore_file_errors semantics for read errors.
   *
   * Callers drive it as: `if (!init()) no data` then `while (nextDataLine())
-  * use (buf, lineStart, lineEnd)`.
+  * use (buf, lineStart, lineEnd)`. With `readAhead` a compressed file is
+  * inflated ahead on a helper thread (see [[ZeekIO.openFile]]).
   */
 final class ZeekLineScanner(spec: ZeekFileSpec, opts: ZeekOptions,
-    conf: Configuration) {
+    conf: Configuration, readAhead: Boolean = false) {
 
   var fileHeader: ZeekHeader = _ // valid after init() returns true
   var buf: Array[Byte] = _
@@ -39,7 +40,7 @@ final class ZeekLineScanner(spec: ZeekFileSpec, opts: ZeekOptions,
     * tail). Header/IO errors propagate to the caller, which applies the
     * ignore_file_errors policy around init(). */
   def init(): Boolean = {
-    val f = ZeekIO.openFile(spec.path, conf)
+    val f = ZeekIO.openFile(spec.path, conf, readAhead)
     in = f.in
     // extension lied (plain name, compressed content): the start-0 split
     // reads the whole file; this split contributes nothing
@@ -63,12 +64,14 @@ final class ZeekLineScanner(spec: ZeekFileSpec, opts: ZeekOptions,
     * directives like #close are skipped). Returns false at EOF or when
     * the split's byte range is exhausted. Read errors follow
     * ignore_file_errors: a WARN and the end of this file's rows when
-    * set, a failure naming the file otherwise. */
+    * set, a failure naming the file otherwise. An interrupt of the task
+    * thread is neither: it propagates as it came. */
   def nextDataLine(): Boolean = {
     while (!done) {
       val ok = pending || {
         try lines.next()
         catch {
+          case e: InterruptedException => throw e
           case e: Exception if opts.ignoreFileErrors =>
             ZeekIO.warnIgnored(spec.path, e, "stopped reading")
             false
@@ -106,11 +109,12 @@ object ZeekLineScanner {
     * yields no data here — an empty range, or any error under
     * ignore_file_errors (logged), so the reader goes on with its next
     * file. Without that option an error fails the scan naming the file
-    * (a partition reads several). */
+    * (a partition reads several). An interrupt propagates as it came.
+    * `readAhead` is the input partition's ([[ZeekPlanning]]). */
   def open(spec: ZeekFileSpec, boundHeader: ZeekHeader, dataSchema: StructType,
-      opts: ZeekOptions, required: StructType,
-      conf: Configuration): Option[(ZeekLineScanner, ZeekProjection)] = {
-    val scanner = new ZeekLineScanner(spec, opts, conf)
+      opts: ZeekOptions, required: StructType, conf: Configuration,
+      readAhead: Boolean): Option[(ZeekLineScanner, ZeekProjection)] = {
+    val scanner = new ZeekLineScanner(spec, opts, conf, readAhead)
     try {
       if (!scanner.init()) None
       else Some((scanner, new ZeekProjection(spec, boundHeader, dataSchema, opts, required,
@@ -118,6 +122,7 @@ object ZeekLineScanner {
     } catch {
       case e: Exception =>
         scanner.close()
+        if (e.isInstanceOf[InterruptedException]) throw e
         if (!opts.ignoreFileErrors) throw ZeekIO.readFailure(spec.path, e)
         ZeekIO.warnIgnored(spec.path, e, "skipped")
         None

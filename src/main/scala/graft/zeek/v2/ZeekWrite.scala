@@ -152,7 +152,7 @@ class ZeekBatchWrite(schema: StructType, dir: String, pathName: String,
 
   /** Disambiguates part names across CONCURRENT applications appending
     * to the same directory (task ids restart per application), and
-    * scopes this job's abort cleanup to its own temps. */
+    * scopes this job's abort cleanup to its own temps and parts. */
   private val jobTag = java.util.UUID.randomUUID().toString.substring(0, 8)
 
   /** Appending mismatched columns would poison the directory for the
@@ -175,11 +175,11 @@ class ZeekBatchWrite(schema: StructType, dir: String, pathName: String,
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = ZeekParts.committed()
 
+  /** Best effort, no half write: the job's temps and the parts its tasks
+    * already committed go; a concurrent or earlier job's stay. */
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    // best effort: clear THIS job's in-progress temps (batch temp names
-    // embed the job tag) — never a concurrent job's
     val dirPath = new Path(dir)
-    ZeekParts.deleteGlob(dirPath.getFileSystem(conf.value.value), dirPath, s".zeek-*-$jobTag*")
+    ZeekParts.deleteJob(dirPath.getFileSystem(conf.value.value), dirPath, jobTag)
   }
 }
 

@@ -1,6 +1,7 @@
 package graft.zeek
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.{BeforeAndAfterAll, Suite}
 
 /** One shared session for every suite. SPARK_GRAFT_TEST_MASTER overrides
   * the master — the cluster-credibility runs point it at
@@ -49,4 +50,30 @@ object SharedSpark {
       case (k, None) => spark.conf.unset(k)
     }
   }
+
+  /** The live read-ahead helper threads ([[ReadAheadInputStream]]) of
+    * this JVM (a local-cluster master's executors run theirs out of its
+    * sight). A task killed when its job failed may still be closing its
+    * reader, so this waits up to `waitMs` for the helpers to end. */
+  def readAheadThreads(waitMs: Long = 10000L): Seq[Thread] = {
+    def alive = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread]).toSeq
+      .filter(t => t.isAlive && t.getName == ReadAheadInputStream.ThreadName)
+    val deadline = System.currentTimeMillis() + waitMs
+    while (alive.nonEmpty && System.currentTimeMillis() < deadline) Thread.sleep(20)
+    alive
+  }
+}
+
+/** Mixed into every Zeek suite: after its last test no read-ahead helper
+  * thread is left alive, so every stream a scan, a COUNT(*), a LIMIT, a
+  * failed read or a recompress opened was closed. Most single-file
+  * fixtures plan one partition on several slots and read ahead. */
+trait NoReadAheadLeak extends BeforeAndAfterAll { this: Suite =>
+  override def afterAll(): Unit =
+    try {
+      val alive = SharedSpark.readAheadThreads()
+      if (alive.nonEmpty)
+        throw new AssertionError(s"${alive.size} ${ReadAheadInputStream.ThreadName} " +
+          s"thread(s) alive after $suiteName")
+    } finally super.afterAll()
 }

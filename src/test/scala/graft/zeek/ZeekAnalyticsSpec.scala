@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * conn.log is generated with PLANTED behaviors, so every detection has
   * a known ground truth instead of a golden blob.
   */
-class ZeekAnalyticsSpec extends AnyFunSuite {
+class ZeekAnalyticsSpec extends AnyFunSuite with NoReadAheadLeak {
   private lazy val spark = SharedSpark.spark
 
   private val t0 = 1768539600L

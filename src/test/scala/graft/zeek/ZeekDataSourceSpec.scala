@@ -6,14 +6,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.SparkException
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.BeforeAndAfterAll
 
 /** End-to-end tests of the Zeek DSv2 source over generated fixtures,
   * covering the behavior matrix of the reference's sqllogictest corpus
   * (SURVEY.md §5): types & values, NULL markers, lists, globs + filename,
   * strict validation, union_by_name, ignore_file_errors, pushdown,
   * compression. */
-class ZeekDataSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ZeekDataSourceSpec extends AnyFunSuite with NoReadAheadLeak {
   private lazy val spark = SharedSpark.spark
 
   private def read(path: String, opts: Map[String, String] = Map.empty) = {

@@ -49,12 +49,36 @@ object ZeekFixtures {
 
   def row(vals: String*): String = vals.mkString("\t") + "\n"
 
+  /** The input partitions of `df`'s Zeek scans, in planned order. */
+  def plannedPartitions(df: org.apache.spark.sql.DataFrame): Seq[graft.zeek.v2.ZeekInputPartition] =
+    df.queryExecution.sparkPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }.flatMap(_.inputPartitions).map(_.asInstanceOf[graft.zeek.v2.ZeekInputPartition])
+
   /** The files and ranges each input partition of `df`'s Zeek scans
     * reads, in planned order. */
   def plannedSpecs(df: org.apache.spark.sql.DataFrame): Seq[Seq[ZeekFileSpec]] =
-    df.queryExecution.sparkPlan.collect {
-      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
-    }.flatMap(_.inputPartitions).map(_.asInstanceOf[graft.zeek.v2.ZeekInputPartition].specs)
+    plannedPartitions(df).map(_.specs)
+
+  /** The messages `body` logs through ZeekIO's logger, and its result. */
+  def zeekWarnings[T](body: => T): (T, Seq[String]) = {
+    import org.apache.logging.log4j.core.{LogEvent, Logger}
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "zeek-capture", null, null, true, org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
+    }
+    val logger = org.apache.logging.log4j.LogManager.getLogger(ZeekIO.getClass).asInstanceOf[Logger]
+    appender.start()
+    logger.addAppender(appender)
+    try {
+      val r = body
+      (r, seen.toArray(Array.empty[String]).toSeq)
+    } finally {
+      logger.removeAppender(appender)
+      appender.stop()
+    }
+  }
 
   /** The files each input partition of `df`'s Zeek scans reads, by base
     * name, in planned order. */

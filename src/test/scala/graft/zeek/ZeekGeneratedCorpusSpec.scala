@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * known_hosts schemas, goldens derived from the generated cells. They
   * run on every host; the reference-tree versions still run where that
   * tree exists. */
-class ZeekGeneratedCorpusSpec extends AnyFunSuite {
+class ZeekGeneratedCorpusSpec extends AnyFunSuite with NoReadAheadLeak {
   private lazy val spark = SharedSpark.spark
 
   private def markers(cell: String) = cell == "-" || cell == "(empty)"

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** ZeekJson: the JSON-lines zeek format as a typed peer of the TSV
   * source — same schema, same values, interchangeable with the TSV
   * reader/sink. */
-class ZeekJsonSpec extends AnyFunSuite {
+class ZeekJsonSpec extends AnyFunSuite with NoReadAheadLeak {
   private lazy val spark = SharedSpark.spark
 
   private def writeText(dir: Path, name: String, content: String): String = {

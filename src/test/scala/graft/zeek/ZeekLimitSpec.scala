@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Limit pushdown: partitions stop reading after n post-filter rows
   * (LocalLimit semantics — Spark still applies the global limit). */
-class ZeekLimitSpec extends AnyFunSuite {
+class ZeekLimitSpec extends AnyFunSuite with NoReadAheadLeak {
   private lazy val spark = SharedSpark.spark
 
   private def corpus(): String = {

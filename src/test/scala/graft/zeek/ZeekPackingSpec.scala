@@ -4,12 +4,12 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.zeek.SharedSpark.withConf
-import graft.zeek.v2.{ZeekCountScan, ZeekDataSource, ZeekScan}
+import graft.zeek.v2.{ZeekCountScan, ZeekDataSource, ZeekInputPartition, ZeekMicroBatchStream, ZeekScan}
 
 /** Zeek input partitions cut and pack files by Spark's file-scan rule, in
   * path order; readers move from file to file inside a partition, and
   * factories carry the Hadoop configuration as a broadcast. */
-class ZeekPackingSpec extends AnyFunSuite {
+class ZeekPackingSpec extends AnyFunSuite with NoReadAheadLeak {
   private lazy val spark = SharedSpark.spark
 
   /** `n` logs of one fixed-width row each (`f000.log` …), so every file
@@ -21,26 +21,6 @@ class ZeekPackingSpec extends AnyFunSuite {
       ZeekFixtures.write(dir, name, ZeekFixtures.base("t", Seq((s"$i.0", f"ID$i%03d", s"$i"))))
     }
     (dir, names)
-  }
-
-  /** The messages `body` logs through ZeekIO's logger, and its result. */
-  private def zeekWarnings[T](body: => T): (T, Seq[String]) = {
-    import org.apache.logging.log4j.core.{LogEvent, Logger}
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val appender = new org.apache.logging.log4j.core.appender.AbstractAppender(
-        "zeek-capture", null, null, true, org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
-    }
-    val logger = org.apache.logging.log4j.LogManager.getLogger(ZeekIO.getClass).asInstanceOf[Logger]
-    appender.start()
-    logger.addAppender(appender)
-    try {
-      val r = body
-      (r, seen.toArray(Array.empty[String]).toSeq)
-    } finally {
-      logger.removeAppender(appender)
-      appender.stop()
-    }
   }
 
   test("150 tiny files pack by Spark's file-scan rule, each file once, in path order") {
@@ -145,6 +125,38 @@ class ZeekPackingSpec extends AnyFunSuite {
     assert(spark.read.format("zeek").load(s"$dir/*.log").filter(col("id") === "ID001").count() == 1)
   }
 
+  test("a plan with fewer partitions than slots reads ahead; one that fills the slots does not") {
+    val slots = spark.sparkContext.defaultParallelism
+    assert(slots > 1, "the test session runs several task slots")
+    val gz = ZeekFixtures.write(ZeekFixtures.tempDir(), "one.log.gz",
+      ZeekFixtures.base("t", Seq(("1.0", "A1", "1"))), gzip = true)
+    val (tiny, _) = tinyLogs(150)
+    def readAhead(df: org.apache.spark.sql.DataFrame) =
+      ZeekFixtures.plannedPartitions(df).map(_.readAhead)
+    def load(path: String) = spark.read.format("zeek").load(path)
+
+    assert(readAhead(load(gz)) == Seq(true))
+    assert(readAhead(load(gz).groupBy().count()) == Seq(true), "the COUNT(*) scan too")
+    val packed = readAhead(load(s"$tiny/*.log"))
+    assert(packed.length >= slots && packed.forall(!_), packed)
+    withConf("spark.sql.files.minPartitionNum" -> "1") {
+      assert(readAhead(load(gz)) == Seq(false))
+    }
+
+    // a micro-batch plans by the same rule
+    val conf = spark.sessionState.newHadoopConf()
+    def microBatch(pattern: String) = {
+      val bind = ZeekSchema.bind(Seq(pattern), ZeekOptions(), conf)
+      val stream = new ZeekMicroBatchStream(bind, bind.schema, Array.empty, conf)
+      val start = stream.initialOffset()
+      stream.planInputPartitions(start, stream.latestOffset(start, stream.getDefaultReadLimit))
+        .toSeq.map(_.asInstanceOf[ZeekInputPartition].readAhead)
+    }
+    assert(microBatch(gz) == Seq(true))
+    val micro = microBatch(s"$tiny/*.log")
+    assert(micro.length >= slots && micro.forall(!_), micro)
+  }
+
   test("a plain file past Spark's split size is cut; every byte planned once, rows in order") {
     val dir = ZeekFixtures.tempDir()
     val small = Seq("a.log", "c.log", "d.log")
@@ -199,7 +211,7 @@ class ZeekPackingSpec extends AnyFunSuite {
       ZeekFixtures.write(ZeekFixtures.tempDir(), "t.log.gz", ZeekFixtures.base("t", rows), gzip = true)))
     ZeekFixtures.writeRaw(dir, "truncated.log.gz", whole.take(whole.length / 2))
 
-    val (n, warnings) = zeekWarnings(spark.read.format("zeek")
+    val (n, warnings) = ZeekFixtures.zeekWarnings(spark.read.format("zeek")
       .option("ignore_file_errors", "true").load(s"$dir/*.log.gz").count())
     assert(n > 2 && n < 20002, n)
     val named = warnings.filter(_.contains("corrupted.log.gz"))
@@ -214,7 +226,7 @@ class ZeekPackingSpec extends AnyFunSuite {
     val clean = ZeekFixtures.tempDir()
     ZeekFixtures.write(clean, "valid.log.gz",
       ZeekFixtures.base("t", Seq(("1.0", "A1", "100"))), gzip = true)
-    val (m, none) = zeekWarnings(spark.read.format("zeek")
+    val (m, none) = ZeekFixtures.zeekWarnings(spark.read.format("zeek")
       .option("ignore_file_errors", "true").load(s"$clean/*.log.gz").count())
     assert(m == 1 && none.isEmpty, none)
   }

@@ -38,7 +38,7 @@ object CountingLocalFs {
   def reset(): Unit = { statCalls.set(0); openCalls.set(0); listCalls.set(0) }
 }
 
-class ZeekPlanTimeSpec extends AnyFunSuite {
+class ZeekPlanTimeSpec extends AnyFunSuite with NoReadAheadLeak {
   private lazy val spark = SharedSpark.spark
 
   test("plan time issues zero filesystem RPCs; splits use bind-time lengths") {

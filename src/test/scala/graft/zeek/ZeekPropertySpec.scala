@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.{MetadataBuilder, StructField, StructType}
   * scalacheck generators directly (deterministic, reproducible failures
   * by seed) — the scalatest-scalacheck bridge isn't in the offline
   * dependency set. */
-class ZeekPropertySpec extends AnyFunSuite {
+class ZeekPropertySpec extends AnyFunSuite with NoReadAheadLeak {
   private lazy val spark = SharedSpark.spark
 
   private val scalarTypes = Seq("string", "count", "int", "double", "bool",

@@ -12,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * SURVEY.md §1.4).
   *
   * Skips cleanly if the reference tree is not present. */
-class ZeekReferenceCorpusSpec extends AnyFunSuite {
+class ZeekReferenceCorpusSpec extends AnyFunSuite with NoReadAheadLeak {
   private lazy val spark = SharedSpark.spark
   private val data = "/root/reference/data"
   private def have = new java.io.File(data).isDirectory

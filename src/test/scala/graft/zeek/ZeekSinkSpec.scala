@@ -6,7 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The zeek TSV sink: df.write.format("zeek") — round trips through the
   * reader byte-semantics (markers, types, renamed fields) and behaves
   * like a proper v2 sink (append validation, overwrite, gzip, temps). */
-class ZeekSinkSpec extends AnyFunSuite {
+class ZeekSinkSpec extends AnyFunSuite with NoReadAheadLeak {
   private lazy val spark = SharedSpark.spark
 
   /** Driver-side sink errors may arrive wrapped in SparkException. */
@@ -161,6 +161,25 @@ class ZeekSinkSpec extends AnyFunSuite {
     Seq((2L, "b")).toDF("n", "s").write.format("zeek").mode("overwrite").save(out.toString)
     assert(foreign.exists, "overwrite must not touch non-log files")
     assert(read(s"$out/*.log").count() == 1)
+  }
+
+  test("an append that fails in its last task leaves the directory exactly as it was") {
+    val out = ZeekFixtures.tempDir()
+    import spark.implicits._
+    Seq((1L, "a"), (2L, "b")).toDF("n", "s").write.format("zeek").mode("append").save(out.toString)
+    def listing() = out.toFile.listFiles().map(f => f.getName -> f.length).sortBy(_._1).toSeq
+    val before = listing()
+    // partitions 0 and 1 commit their parts before partition 2 fails
+    val failLast = udf { (n: Long) =>
+      if (n == 29L) { Thread.sleep(2000); throw new IllegalStateException("last task fails") }
+      n
+    }
+    val e = intercept[Exception](spark.range(0, 30, 1, 3)
+      .select(failLast(col("id")).as("n"), lit("x").as("s"))
+      .write.format("zeek").mode("append").save(out.toString))
+    assert(chainMessages(e).contains("last task fails"), chainMessages(e))
+    assert(listing() == before, "the earlier job's parts stay, none of the failed job's remain")
+    assert(read(s"$out/*.log").count() == 2)
   }
 
   test("empty frame writes a header-only log that reads back as schema + 0 rows") {

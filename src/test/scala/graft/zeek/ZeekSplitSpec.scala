@@ -10,7 +10,7 @@ import graft.zeek.SharedSpark.withConf
   * identical to the unsplit read (every line exactly once, regardless of
   * where split boundaries fall), and compressed content must never be
   * split even when the extension lies. */
-class ZeekSplitSpec extends AnyFunSuite {
+class ZeekSplitSpec extends AnyFunSuite with NoReadAheadLeak {
   private lazy val spark = SharedSpark.spark
 
   private def bigLog(rows: Int): String = {

@@ -5,7 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Streaming reads over a growing Zeek log directory: each trigger picks
   * up exactly the newly-appeared files (hourly-rotation model). */
-class ZeekStreamingSpec extends AnyFunSuite {
+class ZeekStreamingSpec extends AnyFunSuite with NoReadAheadLeak {
   private lazy val spark = SharedSpark.spark
 
   test("micro-batch stream processes each file exactly once as files appear") {
