@@ -1,17 +1,25 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+
 /** Benchmark main (driver contract): times the headline queries at
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line.
   *
   * Methodology: results go to the `noop` sink so the FULL plan executes
   * (a `count()` would let Catalyst eliminate final sorts). Before the
-  * timed pass, every headline query runs once at sf0.001: Spark's
-  * whole-stage-codegen cache is keyed on generated source (which is
-  * data-size-independent), so the warm-up pre-compiles each query's
-  * generated classes and JITs the hot paths for pennies, and the timed
-  * pass then measures steady-state query execution — the number that
-  * matters for a long-running cluster — rather than first-call Janino
-  * compile time (measured ~0.5-1.2 s/query of pure compile at any SF).
+  * timed passes, every headline query runs once at sf0.001 and once at
+  * the target SF: Spark's generated-code cache is keyed on generated
+  * source (which is data-size-independent), so the warm-up compiles
+  * each query's generated classes and JITs the hot paths, and the timed
+  * passes then measure steady-state query execution — the number that
+  * matters for a long-running cluster — rather than Janino compile time
+  * (~8 ms a class, ~350 classes a headline pass). The classes stay
+  * compiled only because [[BenchEnv.sessionBuilder]] sizes the cache to
+  * hold several passes: at Spark's default of 100 entries every warm
+  * query compiled its classes again. The full dump records the classes
+  * each timed pass compiled and the seconds that took, and stderr gets
+  * one WARN line when a timed pass compiled any.
   * The headline set covers every operator family but excludes the
   * intentionally all-pairs-exact d08/e06 queries (their oracle-checked
   * forms are quadratic by construction — the scalable variants are the
@@ -60,9 +68,10 @@ object Bench {
     // small count is a small-SF tune that silently caps every big
     // shuffle: shuffle=8 at sf10 left 3/4 of the cores idle, 32 took
     // the headline 219 s → 186 s), AQE, scan-parallelism floor, 64k AQE
-    // coalesce floor for CPU-dense small stages, and the
-    // SPARK_GRAFT_MASTER local-cluster branch for cluster-credibility
-    // runs. Full per-conf rationale in BenchEnv's scaladoc.
+    // coalesce floor for CPU-dense small stages, a generated-code cache
+    // that keeps the warm-up's classes, 256 KiB broadcast chunks, and
+    // the SPARK_GRAFT_MASTER local-cluster branch for cluster-
+    // credibility runs. Full per-conf rationale in BenchEnv's scaladoc.
     val spark = BenchEnv.sessionBuilder(sfDir, cpus).getOrCreate()
     sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR")
       .foreach(spark.sparkContext.setCheckpointDir)
@@ -159,9 +168,22 @@ object Bench {
     // recovering trajectory where a fourth pass visibly tightens the
     // min. Medians and raw passes are preserved in the full dump below.
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "4").toInt
+    // each pass's query times, with the classes Janino compiled during
+    // it and the seconds that took: ~0 once the warm-up filled the
+    // generated-code cache
+    val timed = (1 to passes).map { _ =>
+      val (n0, ns0) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+      val pass = selected.map(n => n -> run(n))
+      (pass, (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - n0,
+        (CodeGenerator.compileTime - ns0) / 1e9))
+    }
     val times: Map[String, Seq[Double]] =
-      (1 to passes).flatMap(_ => selected.map(n => n -> run(n)))
-        .groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+      timed.flatMap(_._1).groupBy(_._1).view.mapValues(_.map(_._2)).toMap
+    val compiles = timed.map(_._2)
+    if (compiles.exists(_._1 > 0))
+      System.err.println("[bench] WARN timed passes compiled generated code the warm-up " +
+        "did not leave cached: " +
+        compiles.map { case (n, s) => f"$n classes in $s%.2f s" }.mkString(", "))
     val control = math.max(controlPre, cpuControl())
     def median(xs: Seq[Double]): Double = {
       val ok = xs.filter(_ >= 0).sorted
@@ -195,7 +217,9 @@ object Bench {
         "queries" -> m(mins.map { case (k, v) => k -> v.toString }),
         "queries_median" -> m(meds.map { case (k, v) => k -> v.toString }),
         "queries_all_passes" -> m(selected.map(n =>
-          n -> times(n).mkString("[", ",", "]")))))
+          n -> times(n).mkString("[", ",", "]"))),
+        "codegen_compiles" -> compiles.map(_._1).mkString("[", ",", "]"),
+        "codegen_compile_s" -> compiles.map(c => f"${c._2}%.4f").mkString("[", ",", "]")))
     }
     val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "target/bench_full.json")
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(fullPath), full)

@@ -37,6 +37,10 @@ object BenchEnv {
     sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
       math.min(cpus, math.max(8L, dataBytes(dir) / (32L << 20)).toInt).toString)
 
+  /** Entries of Spark's generated-code cache in a bench session: about
+    * three headline passes' worth of classes (see [[sessionBuilder]]). */
+  val CodegenCacheEntries = 1000
+
   /** THE bench session config, env-parameterized — shared by
     * `graft.Bench` and the measurement tools (BenchProfile, PlanProbe)
     * so that profiled task metrics and captured plan artifacts come
@@ -52,7 +56,28 @@ object BenchEnv {
     *     parallelism-first coalescing fold CPU-dense small stages
     *     (signature banding, pair verify) to a single task;
     *   - cleanCheckpoints: GC-driven fallback for reliable-checkpoint
-    *     file cleanup (deterministic path is Lineage.releaseAll). */
+    *     file cleanup (deterministic path is Lineage.releaseAll);
+    *   - codegen.cache.maxEntries = [[CodegenCacheEntries]]: Spark keeps
+    *     generated classes in one JVM-wide LRU, 100 entries by default,
+    *     but one pass of the 33 `Bench.headline` queries cycles ~350
+    *     distinct classes through it, so every warm query compiled its
+    *     classes again (~3 s of Janino work a pass at sf0.02 on 4
+    *     cores). 1,000 holds about three passes. The 8 `graftbench` Zeek
+    *     legs need 52 entries; one Verify pass (4,063 classes, none
+    *     reused) gains at no size. An entry costs ~10 KB of source and
+    *     bytecode. STATIC: Spark sizes the cache once per JVM, at the
+    *     first code generation, so the setting rides on the builder,
+    *     before any query runs; setting it on a live session does
+    *     nothing;
+    *   - broadcast.blockSize 256k: every job broadcasts its task binary
+    *     in chunks of this size, 4 MB by default. A 4 MB chunk is a G1
+    *     humongous object (half a region or more; regions are 1-32 MB)
+    *     that only a pause reclaims, so peak RSS followed the GC
+    *     cadence, and less garbage (fewer pauses) read as more memory.
+    *     256 KiB is below half of G1's smallest region whatever the
+    *     heap; `graftbench` `peak_rss_mb` fell 9-19% on all three
+    *     workloads (BASELINE.md, "Generated-code cache and broadcast
+    *     chunks"). */
   def sessionBuilder(sfDir: String, cpus: String): SparkSession.Builder = {
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
     val b = SparkSession.builder()
@@ -66,6 +91,8 @@ object BenchEnv {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.broadcast.blockSize", "256k")
     if (master.startsWith("local-cluster"))
       b.config("spark.executor.extraClassPath", classesDir)
         .config("spark.executor.memory",

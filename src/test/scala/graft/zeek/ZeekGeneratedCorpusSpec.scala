@@ -139,12 +139,85 @@ class ZeekGeneratedCorpusSpec extends AnyFunSuite with NoReadAheadLeak {
     }
   }
 
-  private lazy val schemaRoot = ZeekFixtures.writeSchemaDirs(ZeekFixtures.tempDir())
-  private def zeek(path: String, opts: (String, String)*) = {
-    var r = spark.read.format("zeek")
-    opts.foreach { case (k, v) => r = r.option(k, v) }
-    r.load(s"$schemaRoot/$path")
+  private lazy val khDay = ZeekFixtures.knownHostsDay()
+  private lazy val khDir = {
+    val dir = ZeekFixtures.tempDir()
+    khDay.foreach { case (name, rows) => ZeekFixtures.write(dir, name, ZeekFixtures.log("known_hosts",
+      ZeekFixtures.knownHostsFields, ZeekFixtures.knownHostsTypes, rows), gzip = true) }
+    dir
   }
+  private def khCol(name: String) = ZeekFixtures.knownHostsFields.indexOf(name)
+  private def load(path: String, opts: Seq[(String, String)]) =
+    spark.read.format("zeek").options(opts.toMap).load(path)
+  private def kh(glob: String, opts: (String, String)*) = load(s"$khDir/$glob", opts)
+
+  test("generated known_hosts single file: values, count, NULL unset, list cell") {
+    // the hour the reference fixture mirrors: one host, host_inner_vlan
+    // unset, a three-element annotations cell
+    val (name, rows) = khDay.find { case (_, rs) => rs.length == 1 &&
+      rs.head(khCol("host_inner_vlan")) == "-" && rs.head(khCol("annotations")) == "foo,bar,baz" }.get
+    val df = kh(name)
+    assert(df.count() == 1)
+    val r = df.select(expr("unix_micros(ts)"), col("kuid"), col("host_ip"), col("conns_opened"),
+      col("conns_closed"), col("host_inner_vlan"), col("annotations")).collect().head
+    val raw = rows.head
+    assert(r.getLong(0) == ZeekFixtures.cellMicros(raw(khCol("ts"))))
+    assert(r.getString(1) == raw(khCol("kuid")))
+    assert(r.getString(2) == raw(khCol("host_ip")))
+    assert(r.getLong(3) == raw(khCol("conns_opened")).toLong)
+    assert(r.getLong(4) == raw(khCol("conns_closed")).toLong)
+    assert(r.isNullAt(5)) // '-' unset → NULL
+    assert(r.getSeq[String](6) == Seq("foo", "bar", "baz"))
+  }
+
+  test("generated known_hosts glob: 27 rows over 24 files; filename column") {
+    assert(khDay.length == 24 && khDay.map(_._2.length).sum == 27)
+    assert(kh("known_hosts*.gz").count() == 27)
+    val withName = kh("known_hosts*.gz", "filename" -> "true")
+    assert(withName.select(countDistinct(col("filename"))).collect().head.getLong(0) == 24)
+    val perFile = withName.groupBy(col("filename")).count().collect()
+      .map(r => r.getString(0).split('/').last -> r.getLong(1)).toMap
+    assert(perFile == khDay.map { case (n, rs) => n -> rs.length.toLong }.toMap)
+    val (name, _) = khDay.head
+    val one = kh(name, "filename" -> "true").select("filename").collect().head.getString(0)
+    assert(one.endsWith(name))
+  }
+
+  test("generated interval values: duration/last_active_interval as micros") {
+    val got = kh("known_hosts*.gz").orderBy("ts")
+      .select("duration", "last_active_interval").collect()
+    val want = khDay.flatMap(_._2).sortBy(raw => ZeekFixtures.cellMicros(raw(khCol("ts"))))
+    assert(got.length == want.length)
+    got.zip(want).foreach { case (r, raw) =>
+      assert(micros(r.getAs[Duration](0)) == ZeekFixtures.cellMicros(raw(khCol("duration"))), raw)
+      assert(micros(r.getAs[Duration](1)) ==
+        ZeekFixtures.cellMicros(raw(khCol("last_active_interval"))), raw)
+    }
+    assert(got.exists(r => r.getAs[Duration](1).toHours >= 1), "an interval past one hour")
+  }
+
+  test("generated inet semantics over dns.log") {
+    import graft.inet.InetFunctions
+    val first = dns.orderBy(col("ts")).limit(1).select("id_orig_h", "id_resp_h").collect().head
+    assert(first.getString(0) == dnsRows.head(dnsCol("id.orig_h")))
+    assert(first.getString(1) == dnsRows.head(dnsCol("id.resp_h")))
+    // addr columns are strings carrying their Zeek type in metadata
+    assert(dns.schema("id_orig_h").metadata.getString(ZeekTypes.ZeekTypeMeta) == "addr")
+    def rowsWhere(p: Seq[String] => Boolean) = dnsRows.count(p).toLong
+    val orig = dnsRows.head(dnsCol("id.orig_h"))
+    assert(dns.filter(InetFunctions.inet_equal(col("id_orig_h"), lit(orig))).count() ==
+      rowsWhere(_(dnsCol("id.orig_h")) == orig))
+    assert(dns.filter(InetFunctions.inet_equal(col("id_orig_h"), lit("127.0.0.1"))).count() == 0)
+    // mixed: a pushed native predicate AND a post-scan inet predicate
+    val mixed = dns.filter(col("proto") === "udp" &&
+      InetFunctions.inet_equal(col("id_resp_h"), lit("8.8.4.4")))
+    assert(!mixed.queryExecution.executedPlan.toString.contains("pushed=[]"))
+    val want = rowsWhere(r => r(dnsCol("proto")) == "udp" && r(dnsCol("id.resp_h")) == "8.8.4.4")
+    assert(want > 0 && mixed.count() == want)
+  }
+
+  private lazy val schemaRoot = ZeekFixtures.writeSchemaDirs(ZeekFixtures.tempDir())
+  private def zeek(path: String, opts: (String, String)*) = load(s"$schemaRoot/$path", opts)
 
   test("strict schema validation errors name the mismatch") {
     assert(zeek("schema_match/*.log").count() == 3)
