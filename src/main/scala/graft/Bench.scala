@@ -61,20 +61,7 @@ object Bench {
       case None => headline
     }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Session config lives in BenchEnv.sessionBuilder (shared with the
-    // measurement tools so profiled metrics and captured plan artifacts
-    // come from exactly this session): data-adaptive shuffle partitions
-    // (~32 MB of source parquet each, floor 8, cap = cores — a fixed
-    // small count is a small-SF tune that silently caps every big
-    // shuffle: shuffle=8 at sf10 left 3/4 of the cores idle, 32 took
-    // the headline 219 s → 186 s), AQE, scan-parallelism floor, 64k AQE
-    // coalesce floor for CPU-dense small stages, a generated-code cache
-    // that keeps the warm-up's classes, 256 KiB broadcast chunks, and
-    // the SPARK_GRAFT_MASTER local-cluster branch for cluster-
-    // credibility runs. Full per-conf rationale in BenchEnv's scaladoc.
     val spark = BenchEnv.sessionBuilder(sfDir, cpus).getOrCreate()
-    sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR")
-      .foreach(spark.sparkContext.setCheckpointDir)
     spark.sparkContext.setLogLevel("WARN")
 
     def run(name: String): Double = {

@@ -2,7 +2,11 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Shared harness plumbing for the Verify/Bench mains. */
+/** The one session builder. Every Spark main builds through
+  * [[sessionBuilder]]: `graft.Bench`, `graft.Verify`, and the tools
+  * `PlanProbe`, `BenchProfile`, `FaultInject` and `ScaleGen`; outside
+  * `src/main`, `graftbench`'s harness and the test probe
+  * `CodegenCacheProbe` do too. */
 object BenchEnv {
   /** Directory (or jar) this build's classes load from — handed to
     * `spark.executor.extraClassPath` in local-cluster mode, where
@@ -31,23 +35,24 @@ object BenchEnv {
     * partition, floored at 8 (tiny-SF tasks; measured ~25% total win at
     * 8 vs 32 at sf0.1) and capped at the core count (a fixed small
     * count silently caps every big shuffle: shuffle=8 at sf10 left 3/4
-    * of the cores idle — 32 took the headline 219 s → 186 s).
-    * SPARK_GRAFT_SHUFFLE overrides for experiments. */
+    * of the cores idle — 32 took the headline 219 s → 186 s). */
   def shufflePartitions(cpus: Int, dir: String): String =
-    sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      math.min(cpus, math.max(8L, dataBytes(dir) / (32L << 20)).toInt).toString)
+    math.min(cpus, math.max(8L, dataBytes(dir) / (32L << 20)).toInt).toString
 
   /** Entries of Spark's generated-code cache in a bench session: about
     * three headline passes' worth of classes (see [[sessionBuilder]]). */
   val CodegenCacheEntries = 1000
 
-  /** THE bench session config, env-parameterized — shared by
-    * `graft.Bench` and the measurement tools (BenchProfile, PlanProbe)
-    * so that profiled task metrics and captured plan artifacts come
-    * from exactly the session the bench runs; the three previously
-    * carried hand-copied builders that had already drifted (PlanProbe
-    * ignored SPARK_GRAFT_MASTER and both tools lacked the
-    * local-cluster executor classpath/memory branch).
+  /** THE session config, shared by every main (see [[BenchEnv]]) so
+    * that dumped values, timed queries, profiled task metrics and
+    * captured plans all come from one session. The environment picks
+    * only the placement: `SPARK_GRAFT_MASTER` (default `local[cpus]`;
+    * a `local-cluster[...]` master also gets this build's classes and
+    * `SPARK_GRAFT_EXEC_MEM` per executor) and
+    * `SPARK_GRAFT_CHECKPOINT_DIR`, which becomes `spark.checkpoint.dir`:
+    * the context sets it as its checkpoint dir when it starts, and every
+    * [[graft.operators.Lineage.cut]] then writes reliable checkpoints.
+    * Unset, cuts stay local.
     *
     * Conf rationale (measured, see Bench scaladoc + BASELINE.md):
     *   - files.minPartitionNum = cores: scan-parallelism FLOOR, inert
@@ -83,16 +88,15 @@ object BenchEnv {
     val b = SparkSession.builder()
       .master(master)
       .config("spark.sql.shuffle.partitions", shufflePartitions(cpus.toInt, sfDir))
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.files.minPartitionNum",
-        sys.env.getOrElse("SPARK_GRAFT_SCAN_MINPART", cpus))
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_MINPART", "64k"))
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.files.minPartitionNum", cpus)
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.broadcast.blockSize", "256k")
+    sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR").foreach(b.config("spark.checkpoint.dir", _))
     if (master.startsWith("local-cluster"))
       b.config("spark.executor.extraClassPath", classesDir)
         .config("spark.executor.memory",

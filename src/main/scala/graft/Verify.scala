@@ -1,6 +1,6 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -10,32 +10,10 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     val only = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_MASTER overrides the in-process master — the cluster-
-    // credibility runs set `local-cluster[2,16,8192]` (2 worker JVMs,
-    // real executor launch via SPARK_HOME, real block-manager fetch and
-    // broadcast transport) to exercise everything one JVM cannot.
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // GC-driven fallback for reliable-checkpoint file cleanup; the
-      // deterministic path is Lineage.releaseAll(alsoCheckpoints) below
-      .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
-    if (master.startsWith("local-cluster")) {
-      // executor JVMs are launched from SPARK_HOME with only the Spark
-      // jars — hand them this build's classes (same machine, plain path)
-      builder
-        .config("spark.executor.extraClassPath", BenchEnv.classesDir)
-        .config("spark.executor.memory",
-          sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM", "6g"))
-    }
-    val spark = builder.getOrCreate()
-    // a configured checkpoint dir flips every Lineage.cut to the
-    // reliable (executor-loss-tolerant) fabric — see operators/Lineage
-    sys.env.get("SPARK_GRAFT_CHECKPOINT_DIR")
-      .foreach(spark.sparkContext.setCheckpointDir)
+    // the bench session: SPARK_GRAFT_MASTER=local-cluster[...] runs the
+    // dump on executor JVMs, SPARK_GRAFT_CHECKPOINT_DIR makes every
+    // Lineage.cut reliable (see BenchEnv.sessionBuilder)
+    val spark = BenchEnv.sessionBuilder(sfDir, cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(q => only.isEmpty || only(q._1)).foreach { case (name, fn) =>
@@ -52,21 +30,9 @@ object Verify {
         graft.operators.Lineage.releaseAll(spark, alsoCheckpoints = true)
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      new com.fasterxml.jackson.databind.ObjectMapper()
+        .writeValueAsString(SparkEntry.oracleSql.asJava))
     spark.stop()
   }
 }

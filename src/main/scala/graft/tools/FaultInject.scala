@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerExecutorAdded, SparkListenerExecutorRemoved}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import scala.jdk.CollectionConverters._
@@ -20,9 +19,12 @@ import scala.jdk.CollectionConverters._
   * Usage:
   *   runMain graft.tools.FaultInject clean <sfDir> <queryName>
   *   runMain graft.tools.FaultInject kill  <sfDir> <queryName> [killAfterSec]
-  * (requires SPARK_HOME + SPARK_SCALA_VERSION in the environment, like
-  * every local-cluster run; checkpoint dir defaults to
-  * /tmp/graft_fi_ckpt, override with SPARK_GRAFT_CHECKPOINT_DIR.)
+  *   runMain graft.tools.FaultInject kill-local <sfDir> <queryName> [killAfterSec]
+  * (requires SPARK_GRAFT_MASTER=local-cluster[...], since the kill modes
+  * need executor JVMs, and SPARK_HOME + SPARK_SCALA_VERSION in the
+  * environment, like every local-cluster run. The checkpoint dir defaults
+  * to /tmp/graft_fi_ckpt, override with SPARK_GRAFT_CHECKPOINT_DIR;
+  * kill-local refuses one.)
   *
   * The content hash is ORDER-INSENSITIVE on purpose (sum of per-row
   * xxhash64 over the canonically-stringified row, plus the row count):
@@ -30,6 +32,24 @@ import scala.jdk.CollectionConverters._
   * the contract queries' semantics are set-level.
   */
 object FaultInject {
+
+  /** Refuse an environment the mode cannot run in, naming the variable:
+    * every mode needs executor JVMs (a `local-cluster[...]` master; under
+    * `local[*]` the killer finds no executor to kill), and `kill-local`,
+    * the CONTRAST run, needs local cuts — no checkpoint dir, so every
+    * cut is a localCheckpoint whose blocks die with their executor; its
+    * expected outcome is a job failure (checkpoint block not found),
+    * which is precisely what the reliable fabric exists to prevent. */
+  def checkEnv(mode: String, env: Map[String, String]): Unit = {
+    val master = env.getOrElse("SPARK_GRAFT_MASTER", "")
+    require(master.startsWith("local-cluster["),
+      s"SPARK_GRAFT_MASTER must be a local-cluster[...] master, got '$master': " +
+        "FaultInject kills executor JVMs, and only local-cluster launches them")
+    env.get("SPARK_GRAFT_CHECKPOINT_DIR").foreach { dir =>
+      require(mode != "kill-local",
+        s"kill-local runs with local cuts, but SPARK_GRAFT_CHECKPOINT_DIR is set ($dir): unset it")
+    }
+  }
 
   def main(args: Array[String]): Unit = {
     val mode = args(0)
@@ -39,21 +59,11 @@ object FaultInject {
     require(mode == "clean" || mode == "kill" || mode == "kill-local",
       s"mode must be clean|kill|kill-local, got $mode")
 
-    val ckptDir = sys.env.getOrElse("SPARK_GRAFT_CHECKPOINT_DIR", "/tmp/graft_fi_ckpt")
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", "local-cluster[2,16,8192]")
-    val spark = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.executor.extraClassPath", graft.BenchEnv.classesDir)
-      .config("spark.executor.memory", sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM", "6g"))
-      .getOrCreate()
-    // kill-local: the CONTRAST run — no checkpoint dir, so every cut is a
-    // localCheckpoint whose blocks die with their executor; the expected
-    // outcome is a job failure (checkpoint block not found), which is
-    // precisely what the reliable fabric exists to prevent
-    if (mode != "kill-local") spark.sparkContext.setCheckpointDir(ckptDir)
+    checkEnv(mode, sys.env)
+    val builder = graft.BenchEnv.sessionBuilder(sfDir, sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    if (mode != "kill-local" && !sys.env.contains("SPARK_GRAFT_CHECKPOINT_DIR"))
+      builder.config("spark.checkpoint.dir", "/tmp/graft_fi_ckpt")
+    val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // executor lifecycle evidence straight from the scheduler

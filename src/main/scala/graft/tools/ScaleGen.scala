@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Corpus scale-up generator: builds an sf=N×-shaped dataset from a
@@ -36,12 +36,7 @@ object ScaleGen {
     val Array(src, dst, factorStr) = args.take(3)
     val factor = factorStr.toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.BenchEnv.sessionBuilder(src, cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(dst).mkdirs()
 

@@ -299,7 +299,7 @@ class ZeekScan(bind: ZeekBind, required: StructType, pushed: Array[Filter],
     * join-side decisions (e.g. broadcasting a small lookup log). Lengths
     * come from the bind-time glob listing carried in each
     * [[ZeekFileSpec]]: planning issues ZERO filesystem RPCs (asserted by
-    * ZeekPlanTimeFsSpec). */
+    * ZeekPlanTimeSpec). */
   override def estimateStatistics(): Statistics = new Statistics {
     private val bytes: Long = bind.files.map(ZeekPlanning.estimatedSize).sum
     override def sizeInBytes(): java.util.OptionalLong = java.util.OptionalLong.of(bytes)

@@ -39,8 +39,10 @@ object GraftSql {
     * `pmod(murmur3(keys), n)`), and a false claim silently mis-joins.
     * Only call on a frame whose rows were placed by exactly that hash;
     * [[graft.operators.Lineage.cutPartitionedBy]] is the one sanctioned
-    * caller. Returns `df` unchanged if the plan is not a bare
-    * checkpoint scan. */
+    * caller. Throws if `df` is not a bare checkpoint scan, and if the
+    * stamped scan does not report the declared partitioning: both are
+    * canaries for a Spark upgrade that changes what a checkpoint plans
+    * to, or the shape of `LogicalRDD`. */
   def declareHashPartitioning(df: DataFrame, keys: Seq[String],
       numPartitions: Int): DataFrame = {
     import org.apache.spark.sql.execution.LogicalRDD
@@ -53,8 +55,14 @@ object GraftSql {
           .HashPartitioning(attrs, numPartitions)
         val stamped = lr.makeCopy(Array(lr.output, lr.rdd, part,
           lr.outputOrdering, java.lang.Boolean.valueOf(lr.isStreaming), lr.stream))
-        ofRows(df.sparkSession, stamped.asInstanceOf[LogicalRDD])
-      case _ => df
+          .asInstanceOf[LogicalRDD]
+        if (stamped.outputPartitioning != part)
+          throw new IllegalStateException(s"LogicalRDD.makeCopy dropped the declared $part: " +
+            s"the stamped scan reports ${stamped.outputPartitioning}")
+        ofRows(df.sparkSession, stamped)
+      case other => throw new IllegalArgumentException(
+        s"declareHashPartitioning needs a checkpoint scan (LogicalRDD), got ${other.nodeName}:\n" +
+          other.treeString.take(500))
     }
   }
 }

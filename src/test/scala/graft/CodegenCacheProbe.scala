@@ -8,7 +8,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
   * generated-code cache once per JVM) and runs the named contract
   * queries `passes` times over `sfDir`, printing one line per pass with
   * the classes Janino compiled during it and the seconds that took, then
-  * the resolved broadcast chunk size.
+  * the resolved broadcast chunk size and the context's checkpoint dir
+  * (`-` when none).
   *
   * Usage: CodegenCacheProbe <sfDir> <passes> <query>... */
 object CodegenCacheProbe {
@@ -30,6 +31,7 @@ object CodegenCacheProbe {
           f"classes in ${(CodeGenerator.compileTime - ns) / 1e9}%.2f s")
       }
       println(s"broadcast.blockSize KiB ${spark.sparkContext.getConf.getSizeAsKb("spark.broadcast.blockSize")}")
+      println(s"checkpoint dir ${spark.sparkContext.getCheckpointDir.getOrElse("-")}")
     } finally spark.stop()
   }
 }

@@ -61,6 +61,13 @@ class LineageSpec extends AnyFunSuite {
     assert(gist(declared) == gist(plain))
   }
 
+  test("declareHashPartitioning refuses a frame that is not a checkpoint scan, naming its plan") {
+    val df = spark.range(100).toDF("id").withColumn("k", col("id") % 7)
+    val e = intercept[IllegalArgumentException](
+      org.apache.spark.sql.graft.GraftSql.declareHashPartitioning(df, Seq("k"), 4))
+    assert(e.getMessage.contains("LogicalRDD") && e.getMessage.contains("Project"), e.getMessage)
+  }
+
   test("recordPlans captures the materialized producer plan for pinning") {
     Lineage.recordPlans = true
     Lineage.clearRecordedPlans()
