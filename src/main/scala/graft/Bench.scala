@@ -72,11 +72,10 @@ object Bench {
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         return -1.0
       } finally {
-        // deterministic release of GlobalRank's two-phase pins — a full
-        // bench session issues 100+ queries and must not let cached
-        // range-shuffle partitions pile up until GC notices them
-        graft.operators.GlobalRank.releasePins()
-        // cut blocks AND completed rdd-N checkpoint dirs — see Verify
+        // release the query's cached frames, pins, cut blocks and
+        // completed rdd-N checkpoint dirs (see Verify): a full bench
+        // session issues 100+ queries and must not let them pile up
+        // until GC notices them
         graft.operators.Lineage.releaseAll(spark, alsoCheckpoints = true)
       }
       (System.nanoTime() - t0) / 1e9
@@ -114,7 +113,6 @@ object Bench {
         case scala.util.control.NonFatal(e) =>
           System.err.println(s"[bench] target-SF warm-up $n failed: ${e.getMessage}")
       } finally {
-        graft.operators.GlobalRank.releasePins()
         graft.operators.Lineage.releaseAll(spark, alsoCheckpoints = true)
       }
     }

@@ -22,7 +22,6 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       } finally {
-        graft.operators.GlobalRank.releasePins() // see Bench.run
         // drop per-query cut blocks AND completed rdd-N checkpoint dirs —
         // a 281-query sweep with SPARK_GRAFT_CHECKPOINT_DIR set would
         // otherwise grow the dir unboundedly (nothing deletes reliable

@@ -77,18 +77,12 @@ object BenchProfile {
         try graft.SparkEntry.queries(n)(spark, warmDir)
           .write.format("noop").mode("overwrite").save()
         catch { case scala.util.control.NonFatal(_) => () }
-        finally {
-          graft.operators.GlobalRank.releasePins()
-          graft.operators.Lineage.releaseAll(spark, alsoCheckpoints = true)
-        }
+        finally graft.operators.Lineage.releaseAll(spark, alsoCheckpoints = true)
       }
     names.foreach { n =>
       try runOnce(n)
       catch { case scala.util.control.NonFatal(_) => () }
-      finally {
-        graft.operators.GlobalRank.releasePins()
-        graft.operators.Lineage.releaseAll(spark, alsoCheckpoints = true)
-      }
+      finally graft.operators.Lineage.releaseAll(spark, alsoCheckpoints = true)
     }
 
     println(f"${"query"}%-28s ${"wall_s"}%7s ${"exec_s"}%7s ${"ana_ms"}%7s ${"opt_ms"}%7s ${"plan_ms"}%8s ${"task_s"}%7s ${"maxtk_ms"}%9s ${"gc_ms"}%6s ${"shufR_MB"}%9s ${"shufW_MB"}%9s ${"stg"}%4s ${"tsk"}%5s")
@@ -102,10 +96,7 @@ object BenchProfile {
         try { runOnce(n); true }
         catch { case scala.util.control.NonFatal(e) =>
           println(s"$n FAILED: ${e.getMessage}"); false
-        } finally {
-          graft.operators.GlobalRank.releasePins()
-          graft.operators.Lineage.releaseAll(spark, alsoCheckpoints = true)
-        }
+        } finally graft.operators.Lineage.releaseAll(spark, alsoCheckpoints = true)
       if (ok) {
         val wall = (System.nanoTime() - t0) / 1e9
         // listener bus is async; give it a beat to drain

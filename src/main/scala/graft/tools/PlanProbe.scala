@@ -1,8 +1,11 @@
 package graft.tools
 
 import graft.SparkEntry
-import graft.operators.{GlobalRank, Lineage}
+import graft.operators.Lineage
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 
 /** The plan tool: reads contract-query plans against a given SF dir,
   * under the session the bench runs ([[graft.BenchEnv.sessionBuilder]];
@@ -45,24 +48,46 @@ object PlanProbe {
   /** Node counts of one plan. String counts over the plan tree text:
     * `AdaptiveSparkPlanExec` exposes no children to foreach/collect
     * before execution, so node-type traversal under AQE silently sees
-    * nothing. `hostile` names scale-hostile operators: a
-    * CartesianProduct, an unpartitioned Window. */
+    * nothing. Only what the plan runs is counted: the cached plan printed
+    * under an `InMemoryRelation` ran when the frame was cached, so its
+    * counts are taken off (its `InMemoryTableScan` counts as a scan,
+    * like a checkpoint's `Scan ExistingRDD`). `hostile` names
+    * scale-hostile operators: a CartesianProduct, an unpartitioned
+    * Window. */
   final case class PlanCounts(shuffles: Int, broadcasts: Int, reused: Int, scans: Int,
       hostile: String) {
     override def toString: String =
       s"shuffles=$shuffles\tbroadcasts=$broadcasts\treused=$reused\tscans=$scans\thostile=$hostile"
   }
 
-  def count(plan: String): PlanCounts = {
-    def n(needle: String): Int = needle.r.findAllIn(plan).size
+  def count(plan: SparkPlan): PlanCounts = {
+    val text = plan.toString
+    val cached = cachedPlans(plan).map(_.toString)
+    // occurrences in the whole text minus those in the cached plans it prints
+    def n(needle: String): Int = {
+      def in(t: String) = java.util.regex.Pattern.quote(needle).r.findAllIn(t).size
+      in(text) - cached.map(in).sum
+    }
     PlanCounts(
       shuffles = n("Exchange hashpartitioning") + n("Exchange rangepartitioning") +
         n("Exchange SinglePartition"),
       broadcasts = n("BroadcastExchange"),
       reused = n("ReusedExchange"),
-      scans = n("Scan parquet") + n("LocalTableScan") + n("Scan ExistingRDD"),
+      scans = n("Scan parquet") + n("LocalTableScan") + n("Scan ExistingRDD") +
+        n("InMemoryTableScan"),
       hostile = Seq("cartesian" -> "CartesianProduct", "global-window" -> "windowspecdefinition()")
-        .collect { case (tag, node) if plan.contains(node) => tag }.mkString(","))
+        .collect { case (tag, node) if n(node) > 0 => tag }.mkString(","))
+  }
+
+  /** The cached plans `plan`'s text prints under its outermost
+    * `InMemoryRelation`s, walked the way the text is printed: an adaptive
+    * plan prints its current plan and, once they differ, its initial one. */
+  private def cachedPlans(plan: SparkPlan): Seq[SparkPlan] = plan match {
+    case s: InMemoryTableScanExec => Seq(s.relation.cachedPlan)
+    case a: AdaptiveSparkPlanExec => cachedPlans(a.executedPlan) ++
+      (if (a.executedPlan.fastEquals(a.initialPlan)) Nil else cachedPlans(a.initialPlan))
+    case q: QueryStageExec => cachedPlans(q.plan)
+    case p => (p.children ++ p.subqueries).flatMap(cachedPlans)
   }
 
   def main(args: Array[String]): Unit = {
@@ -80,10 +105,7 @@ object PlanProbe {
   /** Run `body`, then drop the query's pins, cut blocks and checkpoint
     * files, so no query's state outlives it. */
   private def released[T](spark: SparkSession)(body: => T): T =
-    try body finally {
-      GlobalRank.releasePins()
-      Lineage.releaseAll(spark, alsoCheckpoints = true)
-    }
+    try body finally Lineage.releaseAll(spark, alsoCheckpoints = true)
 
   private def printPlans(spark: SparkSession, dir: String, names: Seq[String]): Unit = {
     val planDir = sys.env.get("SPARK_GRAFT_PLAN_DIR")
@@ -97,7 +119,7 @@ object PlanProbe {
         if (!withCuts) ""
         else Lineage.recordedPlans.zipWithIndex
           .map { case (p, i) => s"\n\n=== cut $i (executed) ===\n$p" }.mkString
-      val plan = df.queryExecution.executedPlan.toString
+      val plan = df.queryExecution.executedPlan
       planDir match {
         case Some(p) =>
           val txt = df.queryExecution.explainString(
@@ -107,7 +129,7 @@ object PlanProbe {
           println(s"wrote $p/$n.txt\t${count(plan)}")
         case None =>
           println(s"=== $n ===")
-          println(plan + cutsSuffix)
+          println(s"$plan$cutsSuffix")
           println(s"# ${count(plan)}")
       }
     } }
@@ -115,7 +137,7 @@ object PlanProbe {
 
   private def audit(spark: SparkSession, dir: String, minShuffles: Int): Unit = {
     val rows = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      try released(spark)(Some(name -> count(fn(spark, dir).queryExecution.executedPlan.toString)))
+      try released(spark)(Some(name -> count(fn(spark, dir).queryExecution.executedPlan)))
       catch {
         case e: Throwable =>
           System.err.println(s"[audit] $name failed to plan: ${e.getMessage}")
@@ -142,7 +164,7 @@ object PlanProbe {
       // collect() could exhaust driver memory on large results
       val rows = df.queryExecution.toRdd.count()
       val secs = (System.nanoTime() - t0) / 1e9
-      val c = count(df.queryExecution.executedPlan.toString)
+      val c = count(df.queryExecution.executedPlan)
       println(f"$name\trows=$rows\t$secs%.2f s\tshuffles=${c.shuffles}\t" +
         s"reused=${c.reused}\tscans=${c.scans}")
     } }

@@ -24,7 +24,6 @@ object CodegenCacheProbe {
         val (before, ns) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
         names.foreach { n =>
           SparkEntry.queries(n)(spark, sfDir).write.format("noop").mode("overwrite").save()
-          operators.GlobalRank.releasePins()
           operators.Lineage.releaseAll(spark, alsoCheckpoints = true)
         }
         println(s"pass $p compiled ${CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before} " +
