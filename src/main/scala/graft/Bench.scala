@@ -72,10 +72,9 @@ object Bench {
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         return -1.0
       } finally {
-        // release the query's cached frames, pins, cut blocks and
-        // completed rdd-N checkpoint dirs (see Verify): a full bench
-        // session issues 100+ queries and must not let them pile up
-        // until GC notices them
+        // release GlobalRank's pins, cut blocks and completed rdd-N
+        // checkpoint dirs (see Verify): a full bench session issues 100+
+        // queries and must not let them pile up until GC notices them
         graft.operators.Lineage.releaseAll(spark, alsoCheckpoints = true)
       }
       (System.nanoTime() - t0) / 1e9

@@ -45,11 +45,11 @@ object DedupClusters {
   def connectedComponentsWithRounds(nodes: DataFrame, edges: DataFrame,
       maxIter: Int = 20): (DataFrame, Int) = {
     // symmetric neighbor list; self-loops are harmless but add work.
-    // Cached hash(dst) (Lineage.cutPartitionedBy): every propagation
-    // round joins it on dst, and each round materializes through its
-    // own checkpoint, so the static edge side stays co-partitioned
-    // instead of re-exchanging per round (the PageRank treatment; plain
-    // checkpoints forget their layout under AQE)
+    // Materialized DECLARED hash(dst) (Lineage.cutPartitionedBy): every
+    // propagation round joins it on dst, and each round materializes
+    // through its own checkpoint, so the static edge side stays
+    // co-partitioned instead of re-exchanging per round (the PageRank
+    // treatment; plain checkpoints forget their layout under AQE)
     val sym = graft.operators.Lineage.cutPartitionedBy(
       edges.select(col("a").as("src"), col("b").as("dst"))
         .union(edges.select(col("b").as("src"), col("a").as("dst")))

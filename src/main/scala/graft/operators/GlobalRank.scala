@@ -21,9 +21,34 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   */
 object GlobalRank {
 
-  /** Frees [[Lineage.releaseAll]]'s ledger, GlobalRank's pins included.
-    * Kept only because `graftbench`'s harness still calls it. */
-  def releasePins(): Unit = Lineage.releaseLedger()
+  /** Pins created by the two-phase passes below. Spark's ContextCleaner
+    * unpersists them once the returned frames become unreachable, but
+    * that is GC-driven — a long benchmark/verify session issuing many
+    * GlobalRank queries can accumulate pinned partitions and pressure
+    * the block manager before any full GC runs. The registry gives such
+    * loops a deterministic release point ([[releasePins]]) between
+    * queries; the registry itself holds the only operator-side strong
+    * reference, so unreleased entries still die with the session. */
+  private val pinned =
+    new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.rdd.RDD[_]]
+
+  private def pin(rdd: org.apache.spark.rdd.RDD[Row]): org.apache.spark.rdd.RDD[Row] = {
+    rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    pinned.add(rdd)
+    rdd
+  }
+
+  /** Release every pin created so far (non-blocking). Safe once the
+    * frames returned by earlier calls have been materialized (written /
+    * collected / hashed): re-materializing AFTER release recomputes the
+    * range shuffle, which is only a correctness hazard for sources that
+    * are nondeterministic under recomputation — the in-flight scenario
+    * the pin exists for. [[Lineage.releaseAll]] calls this between
+    * queries. */
+  def releasePins(): Unit = {
+    var r = pinned.poll()
+    while (r != null) { r.unpersist(blocking = false); r = pinned.poll() }
+  }
 
   def withGlobalIndex(df: DataFrame, idxCol: String, order: Column*): DataFrame =
     withGlobalIndexAndCount(df, idxCol, order: _*)._1
@@ -45,11 +70,10 @@ object GlobalRank {
     // offsets collected by the size pass must describe the exact rows the
     // index pass sees, and without the pin a NONDETERMINISTIC source
     // recomputed between jobs (or under stage retry) could shift rows
-    // across partitions. Released deterministically via
-    // [[Lineage.releaseAll]] (ContextCleaner is the GC backstop).
-    // Shuffle-file reuse already covers the common case; the pin covers
-    // recomputation paths too.
-    val base = Lineage.pin(sorted.rdd)
+    // across partitions. Released deterministically via [[releasePins]]
+    // (ContextCleaner is the GC backstop). Shuffle-file reuse already
+    // covers the common case; the pin covers recomputation paths too.
+    val base = pin(sorted.rdd)
     // one tiny job: P partition sizes (zipWithIndex's count pass, exposed)
     val sizes = base
       .mapPartitions(it => Iterator.single(it.size.toLong), preservesPartitioning = true)
@@ -83,7 +107,7 @@ object GlobalRank {
     val schema = StructType(sorted.schema.fields :+
       StructField(sumCol, LongType, nullable = false))
     // same single-materialization pin as withGlobalIndexAndCount
-    val base = Lineage.pin(sorted.rdd)
+    val base = pin(sorted.rdd)
     val sums = base
       .mapPartitions(it => Iterator.single(it.map(_.getLong(vIdx)).sum),
         preservesPartitioning = true)

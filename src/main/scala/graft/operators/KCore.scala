@@ -34,12 +34,12 @@ object KCore {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     // materialize the symmetrized base once: every round (and the node
     // roll-up) re-reads it, and the peel chain must not re-derive it.
-    // NOT cutPartitionedBy: a hash(s) layout here was MEASURED WORSE
-    // (q128 sf0.1 task time 56 s -> 103 s) — the known layout removes
+    // NOT cutPartitionedBy: declaring hash(s) here was MEASURED WORSE
+    // (q128 sf0.1 task time 56 s -> 103 s) — the declared layout removes
     // the exchanges that double as AQE re-optimization points in the
     // lazy 4-round semi-join chain, so the alive sides stay
     // SortMergeJoin instead of converting to runtime broadcasts. The
-    // partitioned cut helps loops whose rounds each materialize (PageRank,
+    // declared cut helps loops whose rounds each materialize (PageRank,
     // hyperball), not a lazily-chained peel.
     var sym = symEdges.select(col("s"), col("t")).localCheckpoint()
     // the node roll-up reads the CUT frame: deriving it from the raw

@@ -23,12 +23,6 @@ import org.apache.spark.sql.DataFrame
   * opts every iterative family into failure-tolerant materialization
   * with one session-setup line. The cut is semantically invisible:
   * values, schema, and determinism are unchanged in both modes.
-  *
-  * `cutPartitionedBy` is the third form, for a static side a loop joins
-  * on the same keys every round: a hash-partitioned `persist`, whose
-  * scans report the layout Spark cached, instead of a checkpoint that
-  * forgets it. Its frames and GlobalRank's pins stay cached until
-  * `releaseAll`.
   */
 object Lineage {
   /** When true, [[cut]] records the executed plan of every frame it
@@ -98,86 +92,44 @@ object Lineage {
   def cut(df: DataFrame): DataFrame =
     cut(df, reliable = df.sparkSession.sparkContext.getCheckpointDir.isDefined)
 
-  /** Release actions for what [[cutPartitionedBy]] and [[GlobalRank]]
-    * persisted since the last [[releaseAll]]. Spark's ContextCleaner
-    * would unpersist them once unreachable, but that is GC-driven — a
-    * long bench/verify session can pile up cached partitions before any
-    * full GC runs — so the ledger gives such loops a deterministic
-    * release point between queries. */
-  private val ledger = new java.util.concurrent.ConcurrentLinkedQueue[() => Unit]()
-
-  /** Persist `rdd` and enter it in the ledger [[releaseAll]] frees. */
-  private[operators] def pin[T](rdd: org.apache.spark.rdd.RDD[T]): org.apache.spark.rdd.RDD[T] = {
-    rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ledger.add(() => rdd.unpersist(blocking = false))
-    rdd
-  }
-
-  /** Materialize a frame an iterative consumer joins/aggregates on `keys`
-    * EVERY round, hash-partitioned on `keys`, so each round's
-    * join/aggregate finds the big static side already co-partitioned and
-    * exchanges only the per-round (node-sized) state.
+  /** [[cut]] for a frame an iterative consumer joins/aggregates on
+    * `keys` EVERY round: materialize it hash-partitioned on `keys` and
+    * re-declare that layout on the checkpoint scan, so each round's
+    * join/aggregate finds the big static side already co-partitioned
+    * and exchanges only the per-round (node-sized) state.
     *
-    * The frame is `repartition(n, keys)` persisted and counted once. With
-    * `spark.sql.optimizer.canChangeCachedPlanOutputPartitioning` at its
-    * default (false) AQE may not change the cached query's output
-    * partitioning, so the cache holds exactly `n` partitions and every
-    * scan of it reports `HashPartitioning(keys, n)` — the layout of data
-    * Spark cached itself. A plain `cut(df.repartition(...))` forgets it (under AQE
-    * the checkpoint captures `UnknownPartitioning`) and re-shuffles per
-    * round: q75's 5 PageRank rounds each re-exchanged the full edge list
-    * (5 × 15.8 MB of its 103 MB sf0.1 shuffle) that way.
-    *
-    * The frame comes back hinted `shuffle_merge`: the cache reports its
-    * exact size, so a static side under the broadcast threshold would
-    * otherwise be broadcast again in every round (q138 at sf0.02: the
-    * edge list collected and shipped each round, its probe side
-    * coalesced to 2 tasks). The hint reaches the next join above the
-    * frame through projections, filters and aggregates.
-    *
-    * Unlike [[cut]] the lineage is kept: a lost cached block is
-    * recomputed from it, and no reliable checkpoint is written even with
-    * a checkpoint directory set. The frame stays cached until
-    * [[releaseAll]]. `n` defaults to the session's shuffle partitions
-    * (scale-adaptive via BenchEnv, never a local constant). */
+    * Why the re-declaration exists: under AQE `Dataset.checkpoint`
+    * captures `UnknownPartitioning` (the adaptive wrapper's report), so
+    * a plain `cut(df.repartition(...))` still re-shuffles per round —
+    * q75's 5 PageRank rounds each re-exchanged the full edge list
+    * (5 × 15.8 MB of its 103 MB sf0.1 shuffle) before this. The
+    * partition count is pinned (`repartition(n, keys)`, a shuffle
+    * origin AQE never coalesces) so the declared
+    * `HashPartitioning(keys, n)` is exactly the materialized placement
+    * — see [[org.apache.spark.sql.graft.GraftSql.declareHashPartitioning]]
+    * for the safety contract. `n` defaults to the session's shuffle
+    * partitions (scale-adaptive via BenchEnv, never a local constant). */
   def cutPartitionedBy(df: DataFrame, keys: Seq[String],
       numPartitions: Option[Int] = None): DataFrame = {
     val n = numPartitions.getOrElse(
       df.sparkSession.sessionState.conf.numShufflePartitions)
-    // a fresh Dataset per use: the recorded plan must not force the
-    // physical plan of the frame returned, or that frame would bypass
-    // its own cache
-    def part = df.repartition(n, keys.map(org.apache.spark.sql.functions.col): _*)
-    if (recordPlans) recorded.add(part.queryExecution.executedPlan.toString)
-    val cached = part.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    ledger.add(() => cached.unpersist(blocking = false))
-    cached.count()
-    cached.hint("shuffle_merge")
+    val cp = cut(df.repartition(n, keys.map(org.apache.spark.sql.functions.col): _*))
+    org.apache.spark.sql.graft.GraftSql.declareHashPartitioning(cp, keys, n)
   }
 
-  /** Deterministically release what iterative queries left cached — the
-    * release point a long single-session sweep (Verify's 310 queries,
-    * Bench's timed passes) calls BETWEEN queries so blocks from one
-    * query never pressure the block manager during the next. First the
-    * ledger: [[cutPartitionedBy]]'s frames go through `Dataset.unpersist`,
-    * which also drops their `CacheManager` entry (an RDD-only release
-    * leaves it behind, and a later persist of the same plan then stores
-    * nothing), and GlobalRank's pins are unpersisted. Then every
-    * persisted RDD in the session. Safe there because no query's frames
-    * survive its own run; do NOT call mid-query (a cut frame's blocks are
-    * its only data — lineage is truncated, so unpersisting it is
-    * unrecoverable). GC-driven ContextCleaner remains the fallback for
-    * interactive use. */
+  /** Deterministically drop GlobalRank's pins and every persisted RDD in
+    * the session — the release point a long single-session sweep
+    * (Verify's 310 queries, Bench's timed passes) calls BETWEEN queries
+    * so blocks from one query never pressure the block manager during
+    * the next. Safe there because no query's frames survive its own
+    * run; do NOT call mid-query (a cut frame's blocks are its only data —
+    * lineage is truncated, so unpersisting it is unrecoverable).
+    * GC-driven ContextCleaner remains the fallback for interactive use. */
   def releaseAll(spark: org.apache.spark.sql.SparkSession,
       alsoCheckpoints: Boolean = false): Unit = {
-    releaseLedger()
+    GlobalRank.releasePins()
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
     if (alsoCheckpoints) releaseCheckpoints(spark)
-  }
-
-  private[operators] def releaseLedger(): Unit = {
-    var release = ledger.poll()
-    while (release != null) { release(); release = ledger.poll() }
   }
 
   /** Delete every completed `rdd-N` directory under the session's

@@ -35,17 +35,16 @@ object PageRank {
     // cut: the caller's edge derivation and the node/degree tables are
     // referenced by every iteration — materialize each once; the per-round
     // cut on ranks stops the plan (and recomputation) growing with iters.
-    // The edge list is cached hash-partitioned on src
-    // ([[Lineage.cutPartitionedBy]], guide §2.4 shared exchange), and
-    // its scans report that layout: every round's contribution join
-    // reads the edge list — the iteration's largest input, which
-    // re-shuffled once per round (5 × 15.8 MB of q75's 103 MB total
-    // shuffle at sf0.1) — co-partitioned, and exchanges only the
-    // node-sized rank vector.
+    // The edge cut is hash-partitioned on src and DECLARED so
+    // ([[Lineage.cutPartitionedBy]], guide §2.4 shared exchange): every
+    // round's contribution join then reads the edge list — the
+    // iteration's largest input, which re-shuffled once per round
+    // (5 × 15.8 MB of q75's 103 MB total shuffle at sf0.1) —
+    // co-partitioned, and exchanges only the node-sized rank vector.
     val edges = Lineage.cutPartitionedBy(edges0, Seq("src"))
     // nodes and deg are static too and join every round on node — same
-    // partitioned cache (one fixed repartition each buys iters-1
-    // avoided per-round exchanges)
+    // declared-layout treatment (one fixed repartition each buys
+    // iters-1 avoided per-round exchanges)
     val nodes = Lineage.cutPartitionedBy(edges.select(col("src").as("node"))
       .union(edges.select(col("dst").as("node"))).distinct(), Seq("node"))
     val deg = Lineage.cutPartitionedBy(edges.groupBy(col("src").as("node"))
@@ -76,8 +75,8 @@ object PageRank {
   def personalizedPageRank(edges0: DataFrame, seeds: DataFrame, iters: Int = 5,
       base: Long = 1000000L): DataFrame = {
     // cut: same round-reuse structure as [[integerPageRank]], including
-    // the src-partitioned cached edge list (each round re-shuffles only
-    // the rank vector, never the edge list)
+    // the declared src-partitioned edge materialization (each round
+    // re-shuffles only the rank vector, never the edge list)
     val edges = Lineage.cutPartitionedBy(edges0, Seq("src"))
     val nodes = edges.select(col("src").as("node"))
       .union(edges.select(col("dst").as("node"))).distinct()

@@ -38,9 +38,8 @@ object ShortestPaths {
     // cut: every round's expansion joins the same edge list, and the
     // caller's edge derivation can be expensive (q127 builds it from a
     // 4-column lead window over orders) — uncut it replayed per round.
-    // cached hash(src) (cutPartitionedBy): each round's frontier join
-    // reads the edges co-partitioned (the PageRank treatment; rounds
-    // materialize here)
+    // DECLARED hash(src): each round's frontier join reads the edges
+    // co-partitioned (the PageRank treatment; rounds materialize here)
     val e = Lineage.cutPartitionedBy(edges.select(col("src"), col("dst")), Seq("src"))
     var settled = sources.select(col("node")).distinct()
       .withColumn("dist", lit(0L))
@@ -80,7 +79,7 @@ object ShortestPaths {
   def weightedDistances(edges: DataFrame, sources: DataFrame, rounds: Int,
       checkpointEvery: Int = 3): DataFrame = {
     require(rounds >= 0, s"rounds must be >= 0, got $rounds")
-    // cut: same per-round edge reuse as [[bfsDistances]], cached
+    // cut: same per-round edge reuse as [[bfsDistances]], DECLARED
     // hash(src) (cutPartitionedBy) — every relax round joins the edge
     // list on src and each round materializes through its own cut, so
     // the PageRank treatment applies (unlike KCore's lazy chain)

@@ -755,9 +755,9 @@ object MiningQueries {
     * edge columns (es, et). Returns (node, n_reg, n_est). */
   private[queries] def hyperballEstimates(sym0: DataFrame, rounds: Int,
       k: Int): DataFrame = {
-    // the edge list is static and every round joins it on et — cache it
-    // hash(et) once (Lineage.cutPartitionedBy) so each round exchanges
-    // only the register vector, never the edges
+    // the edge list is static and every round joins it on et — cut it
+    // DECLARED hash(et) once (Lineage.cutPartitionedBy) so each round
+    // exchanges only the register vector, never the edges
     val sym = graft.operators.Lineage.cutPartitionedBy(sym0, Seq("et"))
     val nodes = sym.select(col("es").as("node")).distinct()
     // register element = the md5's leading 60 bits AS A BIGINT (the
@@ -826,8 +826,8 @@ object MiningQueries {
     * bit tests use `& 1`, which is sign-extension-proof. */
   private[queries] def neighborhoodCounts(sym0: DataFrame, seeds: DataFrame,
       rounds: Int): DataFrame = {
-    // static edge list, joined on es every round — cached hash(es)
-    // (same rationale as hyperballEstimates/PageRank: only the
+    // static edge list, joined on es every round — declared hash(es)
+    // cut (same rationale as hyperballEstimates/PageRank: only the
     // node-keyed mask state re-shuffles per round)
     val sym = graft.operators.Lineage.cutPartitionedBy(sym0, Seq("es"))
     var state = seeds.select(col("seed").as("node"),

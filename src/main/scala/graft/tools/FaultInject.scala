@@ -14,9 +14,7 @@ import scala.jdk.CollectionConverters._
   * lost one. This tool closes that gap: it runs one contract query under
   * local-cluster with reliable checkpoints and, in `kill` mode, SIGKILLs
   * one executor JVM mid-query. The query must complete anyway, with a
-  * content hash identical to the `clean` run's. A partitioned cut
-  * (`Lineage.cutPartitionedBy`) is a persisted frame, not a reliable
-  * checkpoint: its lost cached blocks are recomputed from lineage.
+  * content hash identical to the `clean` run's.
   *
   * Usage:
   *   runMain graft.tools.FaultInject clean <sfDir> <queryName>

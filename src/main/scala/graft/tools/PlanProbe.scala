@@ -3,9 +3,12 @@ package graft.tools
 import graft.SparkEntry
 import graft.operators.Lineage
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.{FileSourceScanExec, LocalTableScanExec, RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.CartesianProductExec
+import org.apache.spark.sql.execution.window.WindowExec
 
 /** The plan tool: reads contract-query plans against a given SF dir,
   * under the session the bench runs ([[graft.BenchEnv.sessionBuilder]];
@@ -45,15 +48,12 @@ import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
   */
 object PlanProbe {
 
-  /** Node counts of one plan. String counts over the plan tree text:
-    * `AdaptiveSparkPlanExec` exposes no children to foreach/collect
-    * before execution, so node-type traversal under AQE silently sees
-    * nothing. Only what the plan runs is counted: the cached plan printed
-    * under an `InMemoryRelation` ran when the frame was cached, so its
-    * counts are taken off (its `InMemoryTableScan` counts as a scan,
-    * like a checkpoint's `Scan ExistingRDD`). `hostile` names
-    * scale-hostile operators: a CartesianProduct, an unpartitioned
-    * Window. */
+  /** Node counts of one plan, by node type through
+    * `AdaptiveSparkPlanHelper`: it walks an adaptive plan's current plan
+    * and query stages, but not the plan a cached frame was built by (that
+    * ran when the frame was cached; its `InMemoryTableScan` counts as a
+    * scan). A `ReusedExchange` counts as reused only. `hostile` names
+    * scale-hostile operators: a CartesianProduct, an unpartitioned Window. */
   final case class PlanCounts(shuffles: Int, broadcasts: Int, reused: Int, scans: Int,
       hostile: String) {
     override def toString: String =
@@ -61,33 +61,19 @@ object PlanProbe {
   }
 
   def count(plan: SparkPlan): PlanCounts = {
-    val text = plan.toString
-    val cached = cachedPlans(plan).map(_.toString)
-    // occurrences in the whole text minus those in the cached plans it prints
-    def n(needle: String): Int = {
-      def in(t: String) = java.util.regex.Pattern.quote(needle).r.findAllIn(t).size
-      in(text) - cached.map(in).sum
-    }
+    val nodes = new AdaptiveSparkPlanHelper {}.collectWithSubqueries(plan) { case p => p }
+    def n(pick: PartialFunction[SparkPlan, Unit]): Int = nodes.count(pick.isDefinedAt)
     PlanCounts(
-      shuffles = n("Exchange hashpartitioning") + n("Exchange rangepartitioning") +
-        n("Exchange SinglePartition"),
-      broadcasts = n("BroadcastExchange"),
-      reused = n("ReusedExchange"),
-      scans = n("Scan parquet") + n("LocalTableScan") + n("Scan ExistingRDD") +
-        n("InMemoryTableScan"),
-      hostile = Seq("cartesian" -> "CartesianProduct", "global-window" -> "windowspecdefinition()")
-        .collect { case (tag, node) if n(node) > 0 => tag }.mkString(","))
-  }
-
-  /** The cached plans `plan`'s text prints under its outermost
-    * `InMemoryRelation`s, walked the way the text is printed: an adaptive
-    * plan prints its current plan and, once they differ, its initial one. */
-  private def cachedPlans(plan: SparkPlan): Seq[SparkPlan] = plan match {
-    case s: InMemoryTableScanExec => Seq(s.relation.cachedPlan)
-    case a: AdaptiveSparkPlanExec => cachedPlans(a.executedPlan) ++
-      (if (a.executedPlan.fastEquals(a.initialPlan)) Nil else cachedPlans(a.initialPlan))
-    case q: QueryStageExec => cachedPlans(q.plan)
-    case p => (p.children ++ p.subqueries).flatMap(cachedPlans)
+      shuffles = n { case _: ShuffleExchangeExec => },
+      broadcasts = n { case _: BroadcastExchangeExec => },
+      reused = n { case _: ReusedExchangeExec => },
+      scans = n {
+        case _: FileSourceScanExec | _: LocalTableScanExec | _: RDDScanExec | _: InMemoryTableScanExec =>
+      },
+      hostile = Seq(
+        "cartesian" -> n { case _: CartesianProductExec => },
+        "global-window" -> n { case w: WindowExec if w.partitionSpec.isEmpty => })
+        .collect { case (tag, k) if k > 0 => tag }.mkString(","))
   }
 
   def main(args: Array[String]): Unit = {

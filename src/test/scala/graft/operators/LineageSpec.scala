@@ -1,11 +1,6 @@
 package graft.operators
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.catalyst.expressions.Attribute
-import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
 import graft.zeek.SharedSpark
 
@@ -28,13 +23,6 @@ class LineageSpec extends AnyFunSuite {
     assert(!p.contains("HashAggregate"), "producer survived the cut:\n" + p)
   }
 
-  /** Shuffle exchanges `df`'s executed plan runs, AQE stages included;
-    * the plan a cached frame was built by is not among them. */
-  private def shuffles(df: org.apache.spark.sql.DataFrame): Int =
-    new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
-      case e: ShuffleExchangeExec => e
-    }.size
-
   test("cutPartitionedBy: declared layout is used (no exchange) and values match cut") {
     val df = spark.range(10000).toDF("id").withColumn("k", col("id") % 97)
       .withColumn("v", col("id") * 3)
@@ -44,68 +32,22 @@ class LineageSpec extends AnyFunSuite {
     assert(declared.schema == plain.schema)
     assert(declared.orderBy("id").collect().toSeq ==
       plain.orderBy("id").collect().toSeq)
-    // a groupBy on the partitioning key must reuse the cached layout: no
-    // shuffle exchange in the aggregation plan (the whole point — a
-    // plain cut forgets its partitioning under AQE and re-shuffles)
-    val agg = declared.groupBy("k").agg(sum("v"))
-    assert(shuffles(agg) == 0,
-      "partitioned-cut aggregation re-shuffled:\n" + agg.queryExecution.executedPlan.toString.take(1500))
-    val plainAgg = plain.groupBy("k").agg(sum("v"))
-    assert(shuffles(plainAgg) >= 1,
-      "plain cut unexpectedly kept partitioning (cutPartitionedBy obsolete?):\n" +
-        plainAgg.queryExecution.executedPlan.toString.take(1500))
-    // and the aggregation RESULTS agree — the layout must describe the
-    // true physical placement, or same-key rows would split
+    // a groupBy on the declared key must reuse the materialized layout:
+    // no Exchange anywhere in the aggregation plan (the whole point —
+    // a plain cut forgets its partitioning under AQE and re-shuffles)
+    val aggPlan = declared.groupBy("k").agg(sum("v")).queryExecution
+      .executedPlan.toString
+    assert(!aggPlan.contains("Exchange"),
+      "declared-cut aggregation re-shuffled:\n" + aggPlan.take(1500))
+    val plainPlan = plain.groupBy("k").agg(sum("v")).queryExecution
+      .executedPlan.toString
+    assert(plainPlan.contains("Exchange"),
+      "plain cut unexpectedly kept partitioning (declareHashPartitioning obsolete?):\n" +
+        plainPlan.take(1500))
+    // and the aggregation RESULTS agree — the declaration must describe
+    // the true physical placement, or same-key rows would split
     assert(declared.groupBy("k").agg(sum("v").as("s")).orderBy("k").collect().toSeq ==
       plain.groupBy("k").agg(sum("v").as("s")).orderBy("k").collect().toSeq)
-  }
-
-  test("cutPartitionedBy canary: cached plans keep their partitioning in this Spark") {
-    // a Spark whose default lets AQE change a cached plan's partitioning
-    // would make every round re-shuffle the static side without a sign
-    assert(!spark.sessionState.conf.getConf(
-      org.apache.spark.sql.internal.SQLConf.CAN_CHANGE_CACHED_PLAN_OUTPUT_PARTITIONING))
-    val df = spark.range(1000).toDF("id").withColumn("k", col("id") % 13)
-    val cached = Lineage.cutPartitionedBy(df, Seq("k", "id"), Some(6))
-    val scan = cached.select("k", "id").queryExecution.sparkPlan.collectFirst {
-      case s: InMemoryTableScanExec => s
-    }.getOrElse(fail("no InMemoryTableScan:\n" + cached.queryExecution.sparkPlan))
-    scan.outputPartitioning match {
-      case HashPartitioning(exprs, 6) =>
-        assert(exprs.map { case a: Attribute => a.name; case e => e.sql } == Seq("k", "id"))
-      case other => fail(s"cached scan reports $other, not HashPartitioning([k, id], 6)")
-    }
-  }
-
-  test("cutPartitionedBy: a small cut is merge-joined where it lies, never broadcast") {
-    // the cache reports its exact (tiny) size, which alone would make the
-    // planner broadcast the static side again in every round; the state
-    // side is estimated far above the broadcast threshold
-    val static = Lineage.cutPartitionedBy(
-      spark.range(2000).toDF("id").withColumn("k", col("id") % 50), Seq("k"))
-    val state = spark.range(5000000).select((col("id") % 50).as("k"), col("id").as("s"))
-    val joined = state.join(static, "k")
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(!plan.contains("BroadcastExchange") && plan.contains("SortMergeJoin"), plan)
-    assert(shuffles(joined) == 1, "only the state side should shuffle:\n" + plan)
-  }
-
-  test("cutPartitionedBy after releaseAll caches again") {
-    // releaseAll must drop the CacheManager entry, not just its RDD: a
-    // left-behind entry makes the next persist of the same plan a no-op
-    // whose reads recompute the producer every time
-    def cutOnce() = Lineage.cutPartitionedBy(
-      spark.range(500).toDF("id").withColumn("k", col("id") % 7), Seq("k"))
-    cutOnce()
-    Lineage.releaseAll(spark)
-    val deadline = System.nanoTime() + 5000000000L
-    while (spark.sparkContext.getPersistentRDDs.nonEmpty && System.nanoTime() < deadline)
-      Thread.sleep(50)
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
-    assert(cutOnce().count() == 500)
-    assert(spark.sparkContext.getPersistentRDDs.nonEmpty,
-      "the second cutPartitionedBy stored no blocks")
-    Lineage.releaseAll(spark)
   }
 
   test("cutPartitionedBy: co-partitioned shuffle join agrees with the plain-cut join") {
@@ -117,6 +59,13 @@ class LineageSpec extends AnyFunSuite {
     def gist(d: org.apache.spark.sql.DataFrame) = d.join(right, Seq("k"))
       .agg(count(lit(1)).as("n"), sum(col("id") + col("w")).as("s")).collect()(0)
     assert(gist(declared) == gist(plain))
+  }
+
+  test("declareHashPartitioning refuses a frame that is not a checkpoint scan, naming its plan") {
+    val df = spark.range(100).toDF("id").withColumn("k", col("id") % 7)
+    val e = intercept[IllegalArgumentException](
+      org.apache.spark.sql.graft.GraftSql.declareHashPartitioning(df, Seq("k"), 4))
+    assert(e.getMessage.contains("LogicalRDD") && e.getMessage.contains("Project"), e.getMessage)
   }
 
   test("recordPlans captures the materialized producer plan for pinning") {
