@@ -83,7 +83,6 @@ object Zeek {
         ZeekParts.deleteJob(fs, dir, jobTag)
         throw e
     }
-    ZeekParts.committed()
     outDir
   }
 

@@ -9,7 +9,6 @@ import scala.jdk.CollectionConverters._
 final case class ZeekOptions(
     filename: Boolean = false,
     replacePeriods: Boolean = true,
-    inet: Boolean = true,
     unionByName: Boolean = false,
     ignoreFileErrors: Boolean = false,
     /** streaming only: mtime slack window (ms) behind the watermark in
@@ -58,10 +57,12 @@ object ZeekOptions {
         s"unknown zeek option '$k'; known options: ${known.mkString(", ")}")
     }
     def b(k: String): Option[Boolean] = opt(m, k)(_.toBooleanOption)
+    // the reference's `inet` switch is checked and has no effect here:
+    // addr and subnet are always strings (ZeekTypes)
+    b("inet")
     ZeekOptions(
       filename = b("filename").getOrElse(false),
       replacePeriods = b("replace_periods").getOrElse(true),
-      inet = b("inet").getOrElse(true),
       unionByName = b("union_by_name").getOrElse(false),
       ignoreFileErrors = b("ignore_file_errors").getOrElse(false),
       streamMtimeSlackMs = opt(m, "stream_mtime_slack_ms", " (must be >= 0)")(
@@ -100,9 +101,7 @@ final case class ZeekBind(
     schema: StructType,
     opts: ZeekOptions,
     /** original path patterns (streaming lists them once per trigger) */
-    patterns: Seq[String]) extends Serializable {
-  def filenameIndex: Int = if (opts.filename) schema.length - 1 else -1
-}
+    patterns: Seq[String]) extends Serializable
 
 /** Bind-time schema resolution (reference: ZeekScanBind,
   * src/zeek_scanner.cpp:439-609): glob expansion + lexicographic sort,
@@ -171,8 +170,7 @@ object ZeekSchema {
         case e: Exception if opts.ignoreFileErrors =>
           ZeekIO.warnIgnored(f, e, "skipped")
           if (err == null) err = e
-        case e: Exception =>
-          throw new ZeekFormatException(s"Failed to read Zeek log '$f': ${e.getMessage}")
+        case e: Exception => throw ZeekIO.readFailure(f, e)
       }
     }
     if (header == null)
@@ -195,7 +193,7 @@ object ZeekSchema {
       case (f, Left(e)) =>
         // first failing file in sort order — same file and message the
         // serial loop reported (it just stopped reading there)
-        throw new ZeekFormatException(s"Failed to read Zeek log '$f': ${e.getMessage}")
+        throw ZeekIO.readFailure(f, e)
     }
     val valid = files.zip(headers).collect { case (f, Some(h)) => (f, h) }
     if (valid.isEmpty)

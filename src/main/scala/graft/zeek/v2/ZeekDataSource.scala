@@ -23,7 +23,7 @@ import graft.zeek._
   * Reproduces the reference's `read_zeek` table function (SURVEY.md §2.A,
   * reference src/zeek_scanner.cpp:913-925): header-driven schema
   * inference, strict / union_by_name multi-file resolution, projection +
-  * filter pushdown, COUNT(*) fast path, `filename` virtual column,
+  * filter pushdown, COUNT(*) as an empty projection, `filename` virtual column,
   * gzip/zstd auto-detection, ignore_file_errors.
   *
   * Scale model: files are cut and packed into input partitions by Spark's
@@ -38,14 +38,24 @@ import graft.zeek._
 class ZeekDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "zeek"
 
+  /** The bind [[inferSchema]] made, with the options it was made from.
+    * Spark calls `inferSchema` and then `getTable` on one provider
+    * instance per load (`DataSourceV2Utils.getTableFromProvider`), so the
+    * table takes this bind instead of listing the patterns and reading
+    * the headers a second time. */
+  private var inferred: Option[(Map[String, String], ZeekBind)] = None
+
   /** Reads only: a pattern matching no files fails here, at load, naming
     * the pattern (reference: src/zeek_scanner.cpp:446-453), as do corrupt
     * headers. Writers never call it — both `DataFrameWriter` and
     * `DataStreamWriter` hand [[getTable]] the query's schema (see
     * [[supportsExternalMetadata]]), so a sink can target a directory that
     * holds no logs yet. */
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    ZeekDataSource.bind(options).schema
+  override def inferSchema(options: CaseInsensitiveStringMap): StructType = {
+    val b = ZeekDataSource.bind(options)
+    inferred = Some((options.asCaseSensitiveMap().asScala.toMap, b))
+    b.schema
+  }
 
   /** Lets writers pass the query's schema instead of inferring one, and the
     * session catalog a declared schema (`CREATE TABLE … USING zeek` +
@@ -53,41 +63,29 @@ class ZeekDataSource extends TableProvider with DataSourceRegister {
     * reject a mismatching declaration at scan planning. */
   override def supportsExternalMetadata(): Boolean = true
 
+  /** Hands the table [[inferSchema]]'s bind when `properties` are the
+    * options it bound; any other table binds for itself when first read. */
   override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table =
-    new ZeekTable(new CaseInsensitiveStringMap(properties), Option(schema))
+      properties: util.Map[String, String]): Table = {
+    val bound = inferred.collect { case (opts, b) if opts == properties.asScala.toMap => b }
+    inferred = None
+    new ZeekTable(new CaseInsensitiveStringMap(properties), Option(schema), bound)
+  }
 }
 
 object ZeekDataSource {
-  /** Bind results are cached briefly per options-map so inferSchema +
-    * getTable within one read don't re-open files (union_by_name reads
-    * every header at bind). The TTL keeps interactive re-reads fresh —
-    * without it, files added to a directory after the first read would be
-    * invisible to later reads with identical options. */
-  private val BindTtlMs = 10000L
-  private val cache = new java.util.LinkedHashMap[Map[String, String], (Long, ZeekBind)](8, 0.75f, true) {
-    override def removeEldestEntry(e: util.Map.Entry[Map[String, String], (Long, ZeekBind)]): Boolean = size > 8
-  }
+  /** Lists `options`' paths and reads their headers, every call: no bind
+    * outlives the table it was made for, so a read sees the directory as
+    * it is when the read is loaded. */
+  def bind(options: CaseInsensitiveStringMap): ZeekBind =
+    ZeekSchema.bind(extractPaths(options), ZeekOptions.fromMap(options),
+      SparkSession.active.sessionState.newHadoopConf())
 
-  /** Drop every cached bind — called after a sink commit so a read that
-    * follows a write in the same TTL window re-lists the directory
-    * instead of planning against deleted/stale part files. */
-  def clearBindCache(): Unit = cache.synchronized(cache.clear())
-
-  def bind(options: CaseInsensitiveStringMap): ZeekBind = {
-    val key = options.asCaseSensitiveMap().asScala.toMap
-    val now = System.currentTimeMillis()
-    cache.synchronized {
-      val hit = cache.get(key)
-      if (hit != null && now - hit._1 < BindTtlMs) return hit._2
-    }
-    val paths = extractPaths(options)
-    val opts = ZeekOptions.fromMap(options)
-    val conf = SparkSession.active.sessionState.newHadoopConf()
-    val b = ZeekSchema.bind(paths, opts, conf)
-    cache.synchronized(cache.put(key, (now, b)))
-    b
-  }
+  /** A no-op: there is no bind cache to clear. The benchmark harness
+    * still calls it (`graftbench/src/graftbench/Harness.scala` before each
+    * op, `Layers.scala` around its recompress probe and bind timing);
+    * it goes once those calls do. */
+  def clearBindCache(): Unit = ()
 
   private var confCache: (SparkContext, Map[String, String], Broadcast[SerializableConfiguration]) = _
 
@@ -127,17 +125,18 @@ object ZeekDataSource {
   }
 }
 
-/** Binds lazily: reads resolve files/schema at scan planning (cached —
-  * see [[ZeekDataSource.bind]]); writes never bind, they only need the
-  * write schema ([[ZeekWriteBuilder]]).
+/** Reads use `bound`, the bind a `load` already made
+  * ([[ZeekDataSource.getTable]]), or bind once, when first planned: a user
+  * schema, `read_zeek` and catalog tables. Writes never bind, they only
+  * need the write schema ([[ZeekWriteBuilder]]).
   *
   * Write schema resolution: a writer's table carries the query's own
   * schema, a catalog table its declared one — `INSERT INTO` renames
   * positionally to the declared names, DataFrame appends match by name. */
 class ZeekTable(props: CaseInsensitiveStringMap,
-    provided: Option[StructType] = None)
+    provided: Option[StructType] = None, bound: Option[ZeekBind] = None)
     extends Table with SupportsRead with org.apache.spark.sql.connector.catalog.SupportsWrite {
-  private lazy val bind = ZeekDataSource.bind(props)
+  private lazy val bind = bound.getOrElse(ZeekDataSource.bind(props))
   override def name(): String = s"zeek(${Option(props.get("path")).getOrElse("?")})"
   override def schema(): StructType = provided.filter(_.nonEmpty).getOrElse(bind.schema)
   override def capabilities(): util.Set[TableCapability] =
@@ -171,30 +170,13 @@ class ZeekTable(props: CaseInsensitiveStringMap,
   * optimization and can never change semantics. */
 class ZeekScanBuilder(bind: ZeekBind)
     extends ScanBuilder with SupportsPushDownRequiredColumns with SupportsPushDownFilters
-    with SupportsPushDownLimit
-    with org.apache.spark.sql.connector.read.SupportsPushDownAggregates {
+    with SupportsPushDownLimit {
 
   private var required: StructType = bind.schema
   private var pushed: Array[Filter] = Array.empty
   private var limit: Int = -1
-  private var countStars: Int = 0
 
   override def pruneColumns(requiredSchema: StructType): Unit = required = requiredSchema
-
-  /** COUNT(*) pushdown: each partition emits ONE row carrying its line
-    * count — no tokenization, no per-row iteration through the scan exec;
-    * Spark sums the partials. Anything beyond ungrouped COUNT(*) is
-    * declined (and Spark only attempts the pushdown when no post-scan
-    * filters remain, which — since every zeek filter is reported residual
-    * — means exactly the unfiltered case). */
-  override def pushAggregation(aggregation: org.apache.spark.sql.connector.expressions.aggregate.Aggregation): Boolean = {
-    import org.apache.spark.sql.connector.expressions.aggregate.CountStar
-    if (aggregation.groupByExpressions.nonEmpty) return false
-    if (aggregation.aggregateExpressions.isEmpty ||
-        !aggregation.aggregateExpressions.forall(_.isInstanceOf[CountStar])) return false
-    countStars = aggregation.aggregateExpressions.length
-    true
-  }
 
   /** Partial limit pushdown: each partition stops reading after `limit`
     * post-filter rows (LocalLimit semantics); Spark still applies the
@@ -221,46 +203,14 @@ class ZeekScanBuilder(bind: ZeekBind)
     * directory scan into a handful of file reads. The filter is still
     * residual, so Spark re-checks rows — pruning can never change
     * semantics. */
-  override def build(): Scan = {
-    val pruned = bind.copy(files = ZeekPlanning.pruneByFilename(bind, pushed))
-    if (countStars > 0) new ZeekCountScan(pruned, countStars)
-    else new ZeekScan(pruned, required, pushed, limit)
-  }
+  override def build(): Scan =
+    new ZeekScan(bind.copy(files = ZeekPlanning.pruneByFilename(bind, pushed)), required, pushed, limit)
 }
 
-/** Scan for a pushed ungrouped COUNT(*): partitions are the same packed
-  * files and range splits as [[ZeekScan]], but each emits a single row
-  * with its count. Per-file schema validation and ignore_file_errors
-  * semantics are identical to a data scan (the reference errors on a
-  * mismatched file even for counts). */
-class ZeekCountScan(bind: ZeekBind, nCounts: Int) extends Scan with Batch {
-  override def readSchema(): StructType =
-    StructType((0 until nCounts).map(i =>
-      org.apache.spark.sql.types.StructField(s"count_star_$i",
-        org.apache.spark.sql.types.LongType, nullable = false)))
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"ZeekCountScan files=${bind.files.size} pushed=[COUNT(*)]"
-  override def planInputPartitions(): Array[InputPartition] =
-    ZeekPlanning.partitions(bind.files)
-  override def createReaderFactory(): PartitionReaderFactory =
-    ZeekCountReaderFactory(bind.header, bind.dataSchema, bind.opts,
-      ZeekDataSource.broadcastConf(), nCounts)
-}
-
-final case class ZeekCountReaderFactory(
-    boundHeader: ZeekHeader,
-    dataSchema: StructType,
-    opts: ZeekOptions,
-    conf: Broadcast[SerializableConfiguration],
-    nCounts: Int) extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[org.apache.spark.sql.catalyst.InternalRow] = {
-    val p = partition.asInstanceOf[ZeekInputPartition]
-    new ZeekCountPartitionReader(p.specs, p.readAhead, boundHeader, dataSchema, opts,
-      conf.value.value, nCounts)
-  }
-}
-
+/** The one Zeek scan. An ungrouped COUNT(*) prunes every column: it reads
+  * `required=[]`, and the reader hands back zero-column batches that only
+  * carry a row count, tokenizing and parsing nothing (the reference's
+  * empty projection, src/zeek_scanner.cpp:620-622,707-711). */
 class ZeekScan(bind: ZeekBind, required: StructType, pushed: Array[Filter],
     limit: Int = -1)
     extends Scan with Batch with SupportsReportStatistics
@@ -428,9 +378,8 @@ object ZeekPlanning {
   }
 }
 
-/** Every data scan, batch or micro-batch, reads through the one
-  * [[ZeekColumnarPartitionReader]]; only a pushed COUNT(*) has its own
-  * reader ([[ZeekCountReaderFactory]]). The Hadoop configuration travels
+/** Every scan, batch or micro-batch, COUNT(*) included, reads through the
+  * one [[ZeekColumnarPartitionReader]]. The Hadoop configuration travels
   * as a broadcast, so the factory itself stays a few KB. */
 final case class ZeekPartitionReaderFactory(
     boundHeader: ZeekHeader,

@@ -23,74 +23,52 @@ import graft.zeek._
   *    the live, still-appended log) is NOT re-ingested while it stays
   *    in the window.
   * The offset carries only the window's files — bounded by rotation
-  * rate × slack, not stream age (the round-1 full-list format broke
-  * down past ~10^5 files).
+  * rate × slack, not stream age (a full list of seen files breaks down
+  * past ~10^5 files).
   *
   * Remaining documented invariant: a file that first appears with an
   * mtime below the WINDOW is assumed already processed and skipped —
   * the stream logs a warning when it sees that happen.
   *
-  * Legacy offsets still deserialize: round-1 bare path arrays use exact
-  * set-difference semantics, round-2 `{wm, boundary}` objects are the
-  * `slack = 0` case of the window semantics.
+  * A `{wm, boundary}` object without `slack` is the `slack = 0` case of
+  * the window semantics.
   */
-case class ZeekOffset(watermark: Long, boundary: Seq[String],
-    slack: Long = 0L, legacySeen: Option[Seq[String]] = None) extends Offset {
+case class ZeekOffset(watermark: Long, boundary: Seq[String], slack: Long = 0L) extends Offset {
 
   @transient private lazy val boundarySet: Set[String] = boundary.toSet
-  // Round-1 offsets stored scheme-stripped paths (the old expandGlob used
-  // .toUri.getPath) while current listings are fully-qualified URIs —
-  // match on both forms so a legacy checkpoint doesn't re-ingest the
-  // whole directory after upgrade. Sets, not Seq.contains: the legacy
-  // transition batch is O(listed × seen) otherwise.
-  @transient private lazy val legacySet: Option[Set[String]] =
-    legacySeen.map(seen => seen.toSet ++ seen.map(stripScheme))
-
-  // hadoop Path tolerates characters that java.net.URI rejects (space,
-  // '%'): a legacy checkpoint containing one must not crash planning
-  private def stripScheme(p: String): String =
-    try new org.apache.hadoop.fs.Path(p).toUri.getPath
-    catch { case _: Exception => p }
 
   /** Has `path` (with mtime `t`) already been processed under this offset? */
-  def processed(path: String, t: Long): Boolean = legacySet match {
-    case Some(seen) => seen.contains(path) || seen.contains(stripScheme(path))
-    case None =>
-      (watermark != Long.MinValue && t < watermark - slack) ||
-        boundarySet.contains(path)
-  }
+  def processed(path: String, t: Long): Boolean =
+    (watermark != Long.MinValue && t < watermark - slack) || boundarySet.contains(path)
 
   override def json(): String = {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    legacySeen match {
-      case Some(seen) => mapper.writeValueAsString(seen.toArray)
-      case None =>
-        val node = mapper.createObjectNode()
-        node.put("wm", watermark)
-        if (slack != 0L) node.put("slack", slack)
-        val arr = node.putArray("boundary")
-        boundary.foreach(arr.add)
-        mapper.writeValueAsString(node)
-    }
+    val node = mapper.createObjectNode()
+    node.put("wm", watermark)
+    if (slack != 0L) node.put("slack", slack)
+    val arr = node.putArray("boundary")
+    boundary.foreach(arr.add)
+    mapper.writeValueAsString(node)
   }
 }
 
 object ZeekOffset {
   val Empty: ZeekOffset = ZeekOffset(Long.MinValue, Seq.empty)
 
+  /** The offset a checkpoint holds. A bare array of paths (a full list of
+    * seen files, the format before the watermark offset) fails: its
+    * query must restart from a fresh checkpoint. */
   def fromJson(json: String): ZeekOffset = {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val node = mapper.readTree(json)
-    if (node.isArray) {
-      // legacy round-1 format: full seen-file list
-      val files = (0 until node.size).map(node.get(_).asText())
-      ZeekOffset(Long.MinValue, Seq.empty, legacySeen = Some(files))
-    } else {
-      val arr = node.get("boundary")
-      val boundary = (0 until arr.size).map(arr.get(_).asText())
-      val slack = Option(node.get("slack")).map(_.asLong()).getOrElse(0L)
-      ZeekOffset(node.get("wm").asLong(), boundary, slack)
-    }
+    if (node.isArray)
+      throw new ZeekFormatException(
+        "zeek stream: the checkpoint's offset is a bare path array, which predates the " +
+          "watermark offset format; restart the query with a fresh checkpoint location")
+    val arr = node.get("boundary")
+    val boundary = (0 until arr.size).map(arr.get(_).asText())
+    val slack = Option(node.get("slack")).map(_.asLong()).getOrElse(0L)
+    ZeekOffset(node.get("wm").asLong(), boundary, slack)
   }
 }
 
@@ -225,22 +203,13 @@ class ZeekMicroBatchStream(
     val end: Offset =
       if (admitted.isEmpty) start // no new data: engine sees offset unchanged
       else if (admitted.length == backlog.length) offsetFor(listed) // caught up: compact from THIS listing
-      else s.legacySeen match {
-        // Capped batch: the watermark must NOT advance — every un-admitted
-        // backlog file has to stay unprocessed — so the end offset keeps
-        // the start's below-window line and carries the admitted paths
-        // (plus the start's still-relevant window files) in the boundary.
-        // The boundary grows with the backlog while rate-limited and
-        // re-compacts on the first uncapped batch.
-        case None =>
-          ZeekOffset(s.watermark, (s.boundary ++ admitted.map(_.path)).distinct, s.slack)
-        // a legacy (round-1 full-list) start offset tracks processed files
-        // ONLY through its seen-set — append to it rather than building a
-        // watermark offset that would forget the legacy files
-        case Some(seen) =>
-          ZeekOffset(Long.MinValue, Seq.empty,
-            legacySeen = Some((seen ++ admitted.map(_.path)).distinct))
-      }
+      // Capped batch: the watermark must NOT advance — every un-admitted
+      // backlog file has to stay unprocessed — so the end offset keeps
+      // the start's below-window line and carries the admitted paths
+      // (plus the start's still-relevant window files) in the boundary.
+      // The boundary grows with the backlog while rate-limited and
+      // re-compacts on the first uncapped batch.
+      else ZeekOffset(s.watermark, (s.boundary ++ admitted.map(_.path)).distinct, s.slack)
     remember(listed, end)
   }
 

@@ -133,10 +133,6 @@ object ZeekParts {
     fs.mkdirs(dir)
   }
 
-  /** After a job's parts are published: a read within the bind cache's
-    * TTL must list the new parts, not plan against deleted ones. */
-  def committed(): Unit = ZeekDataSource.clearBindCache()
-
   /** Deletes the files of `dir` matching the glob `pattern` (best effort
     * cleanup of one job's or epoch's files, never another's). */
   def deleteGlob(fs: FileSystem, dir: Path, pattern: String): Unit =

@@ -75,8 +75,7 @@ final class ZeekLineScanner(spec: ZeekFileSpec, opts: ZeekOptions,
           case e: Exception if opts.ignoreFileErrors =>
             ZeekIO.warnIgnored(spec.path, e, "stopped reading")
             false
-          case e: Exception =>
-            throw new ZeekFormatException(s"Failed to read Zeek log '${spec.path}': ${e.getMessage}")
+          case e: Exception => throw ZeekIO.readFailure(spec.path, e)
         }
       }
       pending = false

@@ -115,7 +115,6 @@ class ZeekStreamingWrite(schema: StructType, dir: String, pathName: String,
     if (stale != null)
       stale.filter(s => !committed.contains(s.getPath.getName))
         .foreach(s => fs.delete(s.getPath, false))
-    ZeekParts.committed()
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
@@ -173,7 +172,7 @@ class ZeekBatchWrite(schema: StructType, dir: String, pathName: String,
     }
   }
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = ZeekParts.committed()
+  override def commit(messages: Array[WriterCommitMessage]): Unit = ()
 
   /** Best effort, no half write: the job's temps and the parts its tasks
     * already committed go; a concurrent or earlier job's stay. */

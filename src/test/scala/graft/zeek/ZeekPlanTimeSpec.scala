@@ -102,11 +102,45 @@ class ZeekPlanTimeSpec extends AnyFunSuite with NoReadAheadLeak {
     withConf("spark.sql.files.maxPartitionBytes" -> "1024") {
       val df = spark.read.format("zeek").load(s"$dir/a.log")
         .groupBy().count()
-      val p = df.queryExecution.executedPlan.toString
-      assert(p.contains("ZeekCountScan"), p.take(2000))
+      // the one scan, reading no column
+      val scans = df.queryExecution.sparkPlan.collect {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.scan.description
+      }
+      assert(scans == Seq("ZeekScan files=1 required=[] pushed=[]"), scans)
       // header lines live in split 0 only; each split counts its own range
       assert(df.collect().head.getLong(0) == 500L)
     }
+  }
+
+  test("one load binds once: its glob is listed once and each header read once") {
+    val dir = ZeekFixtures.tempDir()
+    for (n <- Seq("a", "b", "c"))
+      ZeekFixtures.write(dir, s"$n.log", ZeekFixtures.base("t", Seq(("1.0", n, "1"), ("2.0", n, "2"))))
+    val pattern = s"countfs:$dir/*.log"
+    def calls() = (CountingLocalFs.listCalls.get, CountingLocalFs.openCalls.get)
+    withConf("fs.countfs.impl" -> classOf[CountingLocalFs].getName) {
+      CountingLocalFs.reset()
+      ZeekIO.expandGlob(pattern, spark.sessionState.newHadoopConf())
+      val oneGlob = CountingLocalFs.listCalls.get
+      assert(oneGlob > 0, "a glob must list the directory")
+      CountingLocalFs.reset()
+      // union_by_name reads every header at bind; the bind inferSchema
+      // made is the one the table plans with
+      val df = spark.read.format("zeek").option("union_by_name", "true").load(pattern)
+      assert(calls() == ((oneGlob, 3)), s"load made ${calls()}")
+      assert(df.count() == 6L)
+      // the scan opens each file once and lists nothing
+      assert(calls() == ((oneGlob, 6)), s"load + count made ${calls()}")
+    }
+  }
+
+  test("a log written right after a read is counted by the next read") {
+    val dir = ZeekFixtures.tempDir()
+    def count() = spark.read.format("zeek").load(s"$dir/*.log").count()
+    ZeekFixtures.write(dir, "a.log", ZeekFixtures.base("t", Seq(("1.0", "A1", "1"))))
+    assert(count() == 1L)
+    ZeekFixtures.write(dir, "b.log", ZeekFixtures.base("t", Seq(("2.0", "B1", "2"), ("3.0", "B2", "3"))))
+    assert(count() == 3L)
   }
 
   test("filename predicates prune whole files at plan time") {

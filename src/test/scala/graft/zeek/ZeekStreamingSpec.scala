@@ -135,7 +135,7 @@ class ZeekStreamingSpec extends AnyFunSuite with NoReadAheadLeak {
     } finally q.stop()
   }
 
-  test("compact offsets: watermark semantics, json round-trip, legacy fallback") {
+  test("compact offsets: watermark semantics, json round-trip, bare arrays fail") {
     import graft.zeek.v2.ZeekOffset
     val o = ZeekOffset(1000L, Seq("f3", "f4"))
     // below watermark: processed regardless of boundary membership
@@ -149,23 +149,13 @@ class ZeekStreamingSpec extends AnyFunSuite with NoReadAheadLeak {
     assert(rt == o, rt.toString)
     // the offset size is bounded by the boundary, not stream age
     assert(!o.json().contains("f1"))
-    // legacy round-1 format (bare array) still deserializes with exact
-    // set-difference semantics
-    val legacy = ZeekOffset.fromJson("""["a.log","b.log"]""")
-    assert(legacy.processed("a.log", 5L) && !legacy.processed("c.log", 0L))
-    assert(ZeekOffset.fromJson(legacy.json()) == legacy)
-    // round-1 checkpoints stored scheme-stripped paths while listings now
-    // return fully-qualified URIs — both forms must match, else a legacy
-    // checkpoint re-ingests the whole directory after upgrade
-    val legacyStripped = ZeekOffset.fromJson("""["/logs/a.log"]""")
-    assert(legacyStripped.processed("file:/logs/a.log", 5L))
-    assert(legacyStripped.processed("/logs/a.log", 5L))
-    assert(!legacyStripped.processed("file:/logs/b.log", 5L))
-    // a legacy path containing a URI-illegal character must not crash
-    // offset evaluation (it used to throw URISyntaxException)
-    val legacyOdd = ZeekOffset.fromJson("""["/logs/with space/a%.log"]""")
-    assert(legacyOdd.processed("/logs/with space/a%.log", 5L))
-    assert(!legacyOdd.processed("/logs/other.log", 5L))
+    // an offset without slack is the slack = 0 case
+    assert(ZeekOffset.fromJson("""{"wm":1000,"boundary":["f3","f4"]}""") == o)
+    // a bare array of seen paths predates the watermark format: it fails,
+    // naming the way out, rather than re-ingesting or skipping files
+    val e = intercept[ZeekFormatException](ZeekOffset.fromJson("""["a.log","b.log"]"""))
+    assert(e.getMessage.contains("predates the watermark offset format") &&
+      e.getMessage.contains("fresh checkpoint"), e.getMessage)
   }
 
   test("slack window: path identity for files near the watermark") {
@@ -213,7 +203,7 @@ class ZeekStreamingSpec extends AnyFunSuite with NoReadAheadLeak {
       (1 to 5).map(i => s"f$i.log"), "oldest-first admission order")
     // the catching-up batch must compact back to watermark form
     val fin = s.asInstanceOf[ZeekOffset]
-    assert(fin.watermark != Long.MinValue && fin.legacySeen.isEmpty, fin.toString)
+    assert(fin.watermark != Long.MinValue, fin.toString)
     // idle stream: offset unchanged
     assert(stream.latestOffset(s, limit) == s)
   }
