@@ -135,7 +135,7 @@ class ZeekStreamingSpec extends AnyFunSuite with NoReadAheadLeak {
     } finally q.stop()
   }
 
-  test("compact offsets: watermark semantics, json round-trip, bare arrays fail") {
+  test("compact offsets: watermark, json round-trip, bare arrays fail") {
     import graft.zeek.v2.ZeekOffset
     val o = ZeekOffset(1000L, Seq("f3", "f4"))
     // below watermark: processed regardless of boundary membership
